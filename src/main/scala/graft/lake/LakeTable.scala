@@ -19,12 +19,13 @@ import scala.jdk.CollectionConverters._
   * }}}
   *
   * Write path (reference: engineering-notes/writes.md, writable_table.c):
-  * rows are clustered by the partition transforms (range repartition →
-  * tight per-file transform-value ranges), written as immutable parquet,
-  * footer-free stats collected in one distributed aggregation, then a
-  * new snapshot commits via the optimistic metadata CAS. Readers resolve
-  * `current` once per scan — snapshot isolation, writers never block
-  * readers.
+  * partitioned tables fan rows out by their transform values (one
+  * exact, capped count of the partition tuples packs them into
+  * contiguous buckets, one file each), written as immutable parquet;
+  * per-file stats are collected in one distributed aggregation over the
+  * written files, then a new snapshot commits via the optimistic
+  * metadata CAS. Readers resolve `current` once per scan — snapshot
+  * isolation, writers never block readers.
   */
 final class LakeTable(val spark: SparkSession, val location: String) {
 
@@ -270,10 +271,11 @@ final class LakeTable(val spark: SparkSession, val location: String) {
 
   // --------------------------------------------------------------- write
 
-  /** Append `df` as a new snapshot. Partitioned tables range-cluster on
-    * the transform values so each file covers a tight value range (what
-    * makes the pruning in [[scan]] effective); `targetFiles` overrides
-    * the cluster width when the caller knows the data volume.
+  /** Append `df` as a new snapshot. Partitioned tables pack their
+    * partition tuples, in sorted order, into contiguous buckets so each
+    * file covers a tight value range (what makes the pruning in [[scan]]
+    * effective); `targetFiles` sets the file count when the caller knows
+    * the data volume.
     */
   def append(df: DataFrame, targetFiles: Option[Int] = None,
       commitProps: Map[String, String] = Map.empty): LakeTable = {
@@ -340,13 +342,8 @@ final class LakeTable(val spark: SparkSession, val location: String) {
           if (!fs.exists(hPath)) p -> Left(s"no such file: $p")
           else {
             val bytes = fs.getFileStatus(hPath).getLen
-            val in = org.apache.parquet.hadoop.util.HadoopInputFile
-              .fromPath(hPath, conf)
-            val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-            val (rows, msgType) =
-              try (r.getRecordCount,
-                r.getFooter.getFileMetaData.getSchema)
-              finally r.close()
+            val (rows, msgType) = LakeTable.withFooter(p, conf)(r =>
+              (r.getRecordCount, r.getFooter.getFileMetaData.getSchema))
             val fileSchema = org.apache.spark.sql.GraftBridge
               .parquetSchemaToSpark(msgType, conf)
             val byName = fileSchema.fields
@@ -584,19 +581,10 @@ final class LakeTable(val spark: SparkSession, val location: String) {
 
     def norm(f: FileEntry) = RowIds.normalizePathStr(f.path)
 
-    // per-file EXISTING position-delete counts (driver-side; delete
-    // files are threshold-bounded small)
-    val existing: Map[String, Long] =
-      if (dels.isEmpty) Map.empty
-      else readDeletePositions(dels).groupBy("file_path").count()
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    def already(f: FileEntry): Long = existing.getOrElse(norm(f), 0L)
-
     // ONE scan of the partial candidates writes every matched (file,
     // pos) pair to a position-delete batch; the per-file counts that
     // drive MoR-vs-CoW classification come from the WRITTEN batch (a
-    // footer-cheap re-read of the small delete parquet, not a second
-    // candidate scan)
+    // re-read of the small delete parquet, not a second candidate scan)
     val posEntries: Seq[FileEntry] =
       if (partial.isEmpty) Nil
       else {
@@ -606,10 +594,22 @@ final class LakeTable(val spark: SparkSession, val location: String) {
             col("__rid_ri").as("pos"))
         writeDeleteEntries(m, posDf, partial.map(norm))
       }
-    val matched: Map[String, Long] =
-      if (posEntries.isEmpty) Map.empty
-      else readDeletePositions(posEntries).groupBy("file_path").count()
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    // per-file position counts of the EXISTING delete files and of this
+    // op's batch in ONE job, each row tagged by its set (delete files
+    // are threshold-bounded small, so the counts collect to the driver)
+    val (existing, matched): (Map[String, Long], Map[String, Long]) =
+      if (dels.isEmpty && posEntries.isEmpty) (Map.empty, Map.empty)
+      else {
+        val counts = readDeletePositions(dels).withColumn("batch", lit(false))
+          .unionAll(readDeletePositions(posEntries)
+            .withColumn("batch", lit(true)))
+          .groupBy("batch", "file_path").count().collect()
+        val (inBatch, prior) = counts.partition(_.getBoolean(0))
+        def byFile(rs: Array[Row]) =
+          rs.map(r => r.getString(1) -> r.getLong(2)).toMap
+        (byFile(prior), byFile(inBatch))
+      }
+    def already(f: FileEntry): Long = existing.getOrElse(norm(f), 0L)
 
     // object-store-catalog tables re-export Iceberg metadata on every
     // commit and we don't emit v2 delete manifests — force copy-on-write
@@ -700,14 +700,15 @@ final class LakeTable(val spark: SparkSession, val location: String) {
   }
 
   /** Write position-delete rows as parquet and return their content=1
-    * entries (rows counted from the footers — no second data pass).
+    * entries (rows read from the parquet footers — no Spark job).
     */
   private def writeDeleteEntries(m: TableMetadata, posDf: DataFrame,
       targets: Seq[String]): Seq[FileEntry] = {
     val dir = LakeFs.child(location, "data/del-" + UUID.randomUUID())
     posDf.write.mode("errorifexists").parquet(dir)
+    val conf = org.apache.spark.sql.GraftBridge.sessionHadoopConf(spark)
     LakeFs.listFilesRecursive(dir, ".parquet").map { case (p, bytes) =>
-      val n = spark.read.parquet(p).count()
+      val n = LakeTable.withFooter(p, conf)(_.getRecordCount)
       FileEntry(p, n, bytes, m.currentSchemaVersion,
         Map.empty, Map.empty, Nil, content = 1, deleteTargets = targets)
     }.filter(_.rows > 0)
@@ -1621,13 +1622,14 @@ final class LakeTable(val spark: SparkSession, val location: String) {
 
   /** Fan-out write for partitioned tables; false when `df` is empty.
     *
-    * The driver materializes the distinct partition-tuple list only
-    * below `write.max-partition-fanout` (default 65536): a cheap
-    * approx-distinct agg decides first, and a high-cardinality spec —
-    * e.g. PARTITIONED BY (identity(user_id)) — falls back to a purely
-    * distributed hash-bucket fanout instead of OOMing the driver.
-    * Hash-bucketed files span several partition values, so stats
-    * pruning degrades from exact Skip/Full to range-based — the
+    * One job counts the rows per distinct partition tuple, collecting
+    * at most `write.max-partition-fanout` (default 65536) + 1 tuples to
+    * the driver. Within the cap the sorted tuples pack into contiguous
+    * buckets of about equal rows, one file per bucket. Over it — e.g.
+    * PARTITIONED BY (identity(user_id)) — the write falls back to a
+    * purely distributed hash-bucket fanout instead of OOMing the
+    * driver. Hash-bucketed files span several partition values, so
+    * stats pruning degrades from exact Skip/Full to range-based — the
     * correct price of identity-partitioning unbounded-cardinality
     * columns.
     */
@@ -1639,12 +1641,13 @@ final class LakeTable(val spark: SparkSession, val location: String) {
     val withVals = transforms.foldLeft(aligned)((acc, t) =>
       acc.withColumn(t.valueName, t.expr(col(t.column), schema(t.column).dataType)))
 
-    val fanoutCap = m.properties.get("write.max-partition-fanout")
-      .map(_.toInt).getOrElse(65536)
-    val approxTuples = withVals.agg(approx_count_distinct(
-      struct(valueNames.map(col): _*), 0.02).as("n")).head.getLong(0)
-    if (approxTuples == 0) return false
-    if (approxTuples > fanoutCap.toLong) {
+    // a cap <= 0 sends every non-empty write down the hash path
+    val fanoutCap = math.max(0, m.properties.get("write.max-partition-fanout")
+      .map(_.toInt).getOrElse(65536))
+    val counts = withVals.groupBy(valueNames.map(col): _*).count()
+      .limit(math.min(fanoutCap, Int.MaxValue - 1) + 1).collect()
+    if (counts.isEmpty) return false
+    if (counts.length > fanoutCap) {
       val nBuckets = math.max(1, targetFiles.getOrElse(
         spark.sessionState.conf.numShufflePartitions))
       val out = withVals
@@ -1657,9 +1660,6 @@ final class LakeTable(val spark: SparkSession, val location: String) {
         .parquet(commitDir)
       return true
     }
-
-    val counts = withVals.groupBy(valueNames.map(col): _*).count().collect()
-    if (counts.isEmpty) return false
 
     // sort distinct tuples; nulls first, then natural per-column order
     val anyOrd: Ordering[Any] = (a: Any, b: Any) => (a, b) match {
@@ -1772,6 +1772,18 @@ final class LakeTable(val spark: SparkSession, val location: String) {
 }
 
 object LakeTable {
+
+  /** Open the parquet footer of `path`, apply `f` to the reader, close
+    * it: row count and schema without a Spark job.
+    */
+  private[lake] def withFooter[T](path: String,
+      conf: org.apache.hadoop.conf.Configuration)(
+      f: org.apache.parquet.hadoop.ParquetFileReader => T): T = {
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(path), conf))
+    try f(r) finally r.close()
+  }
 
   /** Reference DEFAULT_MAX_SNAPSHOT_AGE
     * (pg_lake_iceberg/include/pg_lake/iceberg/api/table_metadata.h:26).

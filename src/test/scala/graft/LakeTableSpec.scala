@@ -305,18 +305,21 @@ class LakeTableSpec extends AnyFunSuite {
     assert(t2.meta.currentSnapshot.get.files.size == 3)
   }
 
-  test("update scans candidate files once (observed metric, no count pass)") {
-    val src = Tables.df(spark, sf, "nation")
-    val t = LakeTable.createAsSelect(spark, freshLoc(), "upd1", src)
+  /** Runs `body` and returns how many of the queries it ran scanned at
+    * least one of `t`'s current data files.
+    */
+  private def candidateScans(t: LakeTable)(body: => Unit): Int = {
     val candidatePaths =
-      t.meta.currentSnapshot.get.files.map(_.path).toSet
-
+      t.meta.currentSnapshot.get.dataFiles.map(_.path).toSet
     val scans = new java.util.concurrent.atomic.AtomicInteger(0)
     def scansOf(p: org.apache.spark.sql.execution.SparkPlan)
         : Seq[org.apache.spark.sql.execution.FileSourceScanExec] = p match {
       // AQE hides the real plan outside the children traversal
       case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
         scansOf(a.executedPlan)
+      // and keeps each materialized stage's plan outside it too
+      case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
+        scansOf(q.plan)
       case s: org.apache.spark.sql.execution.FileSourceScanExec => Seq(s)
       case other => other.children.flatMap(scansOf)
     }
@@ -335,23 +338,129 @@ class LakeTableSpec extends AnyFunSuite {
     }
     spark.listenerManager.register(listener)
     try {
-      val n = t.update(col("n_nationkey") === 3,
-        Map("n_name" -> lit("PATCHED")))
-      assert(n == 1)
-      // listener bus is async; bounded wait for the callbacks
-      val deadline = System.currentTimeMillis() + 10000
-      while (scans.get() == 0 && System.currentTimeMillis() < deadline)
-        Thread.sleep(100)
-      Thread.sleep(500) // absorb any straggler callback
-      // merge-on-read update = exactly two candidate passes: one
-      // writes the matched (file, pos) batch, one writes the assigned
-      // new-row versions — never a count()+full-rewrite double pass,
-      // and never a rewrite of unmatched survivor bytes
-      assert(scans.get() == 2,
-        s"update ran ${scans.get()} scans over candidate files, want 2 " +
-          "(position batch + new row versions)")
+      body
+      org.apache.spark.TestListenerBridge.drain(spark.sparkContext)
     } finally spark.listenerManager.unregister(listener)
+    scans.get()
+  }
+
+  test("update scans candidate files once (observed metric, no count pass)") {
+    val src = Tables.df(spark, sf, "nation")
+    val t = LakeTable.createAsSelect(spark, freshLoc(), "upd1", src)
+    val scans = candidateScans(t) {
+      assert(t.update(col("n_nationkey") === 3,
+        Map("n_name" -> lit("PATCHED"))) == 1)
+    }
+    // merge-on-read update = exactly two candidate passes: one
+    // writes the matched (file, pos) batch, one writes the assigned
+    // new-row versions — never a count()+full-rewrite double pass,
+    // and never a rewrite of unmatched survivor bytes
+    assert(scans == 2,
+      s"update ran $scans scans over candidate files, want 2 " +
+        "(position batch + new row versions)")
     assert(t.read().filter(col("n_name") === "PATCHED").count() == 1)
+  }
+
+  test("partitioned update scans candidate files three times") {
+    val src = Tables.df(spark, sf, "events")
+    val t = LakeTable.createAsSelect(spark, freshLoc(), "upd_part", src,
+      partitionSpec = Seq("day(ts)"), targetFiles = Some(4))
+    val id = src.agg(min("event_id")).head.getLong(0)
+    val scans = candidateScans(t) {
+      assert(t.update(col("event_id") === id,
+        Map("value" -> lit(-1.0))) == 1)
+    }
+    // one exact, capped count of the new rows' partition tuples, the
+    // write of the new row versions and the position batch; an
+    // approx-distinct pre-pass before the count would make it 4
+    assert(scans == 3,
+      s"partitioned update ran $scans scans over candidate files, want 3 " +
+        "(tuple counts + new row versions + position batch)")
+    assert(t.read().filter(col("value") === -1.0).count() == 1)
+    assert(t.read().count() == src.count())
+  }
+
+  test("fan-out cap is exact: N tuples fan out, N + 1 hash-bucket") {
+    import spark.implicits._
+    val cap = 6
+    def table(tuples: Int, targetFiles: Option[Int],
+        capProp: Int = cap): LakeTable = {
+      val src = (0 until 60).map(i => (i.toLong, (i % tuples).toLong))
+        .toDF("id", "k")
+      val t = LakeTable.create(spark, freshLoc(), "fan", src.schema,
+        partitionSpec = Seq("identity(k)"),
+        properties = Map("write.max-partition-fanout" -> capProp.toString))
+      t.append(src, targetFiles)
+      assert(t.read().count() == 60)
+      assert(t.read().exceptAll(src).isEmpty)
+      // pruning stays sound on either path
+      assert(t.scan(Some(col("k") === 2L)).count() ==
+        src.filter(col("k") === 2L).count())
+      t
+    }
+    // exactly at the cap: the per-partition path, one file per tuple,
+    // so equality on the partition column keeps exactly one file
+    val atCap = table(cap, None)
+    val files = atCap.meta.currentSnapshot.get.dataFiles
+    assert(files.size == cap)
+    assert(files.forall { f =>
+      val st = f.partStats("k__identity"); st.min == st.max })
+    assert(atCap.pruneStats(col("k") === 2L) == (1, cap))
+    // one over the cap: the hash path, files grouped by the hash of
+    // the tuple (the per-partition path would pack contiguous tuples)
+    val targetFiles = 2
+    def assertHashBucketed(t: LakeTable, tuples: Int): Unit = {
+      assert(t.meta.currentSnapshot.get.dataFiles.size <= targetFiles)
+      val byFile = t.read().select(input_file_name().as("f"), col("k"))
+        .distinct().collect().groupBy(_.getString(0))
+        .values.map(_.map(_.getLong(1)).toSet).toSet
+      val byHash = (0L until tuples.toLong).toDF("k")
+        .select(col("k"), pmod(xxhash64(col("k")), lit(targetFiles.toLong)))
+        .collect().groupBy(_.getLong(1))
+        .values.map(_.map(_.getLong(0)).toSet).toSet
+      assert(byFile == byHash, s"files hold $byFile, hash buckets $byHash")
+    }
+    assertHashBucketed(table(cap + 1, Some(targetFiles)), cap + 1)
+    // a cap <= 0 sends every non-empty write down the hash path and
+    // loses no rows (table() checks every row reads back)
+    for (capProp <- Seq(0, -1, -2))
+      assertHashBucketed(table(3, Some(targetFiles), capProp), 3)
+  }
+
+  /** Spark jobs `body` runs. */
+  private def jobsOf(body: => Unit): Int = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      org.apache.spark.TestListenerBridge.drain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    jobs.get()
+  }
+
+  test("one-row update and delete on a partitioned table: job budget") {
+    val src = Tables.df(spark, sf, "events")
+    val t = LakeTable.createAsSelect(spark, freshLoc(), "ev_jobs", src,
+      partitionSpec = Seq("day(ts)"), targetFiles = Some(4))
+    val ids = src.orderBy("event_id").select("event_id").limit(3)
+      .collect().map(_.getLong(0))
+    assert(t.delete(col("event_id") === ids(0)) == 1)
+    assert(t.meta.currentSnapshot.get.deleteFiles.nonEmpty)
+    val updateJobs = jobsOf(assert(
+      t.update(col("event_id") === ids(1), Map("value" -> lit(0.0))) == 1))
+    val deleteJobs = jobsOf(assert(t.delete(col("event_id") === ids(2)) == 1))
+    // 21 and 9 while partitioned writes ran an approx-distinct job
+    // before their tuple count, delete files were counted by a Spark
+    // job each and a row removal counted old and new positions apart
+    assert(updateJobs <= 13 && deleteJobs <= 4,
+      s"update ran $updateJobs jobs, delete $deleteJobs")
+    assert(t.read().count() == src.count() - 2)
   }
 
   test("concurrent appends both land (optimistic retry)") {

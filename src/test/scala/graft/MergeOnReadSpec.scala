@@ -34,6 +34,18 @@ class MergeOnReadSpec extends AnyFunSuite {
   private def deleteFiles(t: LakeTable) =
     t.meta.currentSnapshot.get.deleteFiles
 
+  /** Every delete entry's row count equals the positions Spark reads
+    * from its file, and data rows minus delete rows equals the rows a
+    * scan returns (the live-row accounting the entries drive).
+    */
+  private def assertDeleteAccounting(t: LakeTable): Unit = {
+    val dels = deleteFiles(t)
+    dels.foreach(d => assert(d.rows == spark.read.parquet(d.path).count(),
+      s"${d.path}: entry says ${d.rows} rows"))
+    assert(dataFiles(t).map(_.rows).sum - dels.map(_.rows).sum ==
+      t.read().count())
+  }
+
   test("small delete is merge-on-read: data files untouched") {
     val t = threeFileTable()
     val dataBefore = dataFiles(t).map(_.path).toSet
@@ -102,6 +114,39 @@ class MergeOnReadSpec extends AnyFunSuite {
     assert(n == 99) // 100 minus the already-deleted row
     assert(t.read().count() == 200)
     assert(deleteFiles(t).isEmpty) // consumed with the dropped file
+  }
+
+  test("delete-file row counts: merge-on-read delete over several files") {
+    val t = threeFileTable()
+    assert(t.delete(col("id").isin(1, 2, 101, 201, 202)) == 5)
+    assert(deleteFiles(t).map(_.rows).sum == 5)
+    assertDeleteAccounting(t)
+  }
+
+  test("delete-file row counts: mixed op re-filters its batch") {
+    // limit 2: file a takes both of its positions as deletes, b and c
+    // (with the op already at the limit) are rewritten, so the batch
+    // is re-filtered down to file a's positions
+    val t = threeFileTable(Map("copy_on_write_max_delete_rows" -> "2"))
+    val a = dataFiles(t).head.path
+    assert(t.delete(col("id").isin(1, 2, 101, 201)) == 4)
+    assert(deleteFiles(t).flatMap(_.targets).toSet ==
+      Set(graft.lake.RowIds.normalizePathStr(a)))
+    assert(deleteFiles(t).map(_.rows).sum == 2)
+    assertDeleteAccounting(t)
+  }
+
+  test("delete-file row counts: retained batch shrinks to live targets") {
+    val t = threeFileTable()
+    val a = dataFiles(t).head.path
+    assert(t.delete(col("id").isin(1, 101)) == 2)
+    assertDeleteAccounting(t)
+    // file b goes whole: the batch survives for file a only
+    assert(t.delete(col("id") >= 101 && col("id") <= 200) == 99)
+    assert(deleteFiles(t).flatMap(_.targets).toSet ==
+      Set(graft.lake.RowIds.normalizePathStr(a)))
+    assert(deleteFiles(t).map(_.rows).sum == 1)
+    assertDeleteAccounting(t)
   }
 
   test("compact folds merge-on-read state back into clean files") {
