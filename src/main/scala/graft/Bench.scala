@@ -11,6 +11,33 @@ import org.apache.spark.sql.SparkSession
   * projections and time an emptier plan than the oracle ran.
   */
 object Bench {
+  // Headline set: one representative per operator family. The driver
+  // captures only the last 2000 chars of output and parses the JSON
+  // line out of that tail; timing all ~90 queries makes the line
+  // overflow the window and the round records "parsed": null, so the
+  // reported set must keep the line well under ~1900 chars.
+  // SPARK_GRAFT_ALL=1 restores the full sweep for local iteration.
+  val headline: Seq[String] = Seq(
+    "q1_agg", "q_scan_filter", "q_join_star", "q_join_lateral",
+    "q_grouping_sets", "q_window_rank", "q_window_exclude",
+    "q_tpch3", "q_tpch4", "q_tpch5", "q_tpch6", "q_tpch10",
+    "q_tpch13", "q_tpch17", "q_tpch18",
+    "q_tpcds_channels", "q_tpcds_rollup_rank",
+    "q_dedup_exact", "q_dedup_minhash", "q_dedup_simhash",
+    // scale-safe twins of the exact-contract dedup queries: the
+    // headline bench exercises the plans a 100 TB run would use
+    // (df-capped posting lists; auto-sized LSH bands), while the
+    // exact quadratic-candidate twins stay judged in Verify
+    "q_dedup_ngram_capped", "q_dedup_embedding_lsh_wide",
+    "q_sim_topk", "q_sim_lsh", "q_sim_ivf",
+    "q_corpus_overlap",
+    "q_text_stats", "q_text_tfidf", "q_sessionize",
+    "q_pipeline_curate", "q_pipeline_train", "q_dedup_incremental",
+    "q_cb_funnel",
+    // function-layer representative so BENCH keeps the PG function
+    // surface visible round over round
+    "q_fn_math")
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -41,32 +68,6 @@ object Bench {
         .filter(col("rn") === 1)
         .write.format("noop").mode("overwrite").save()
     }
-    // Headline set: one representative per operator family. The driver
-    // captures only the last 2000 chars of output and parses the JSON
-    // line out of that tail; timing all ~90 queries makes the line
-    // overflow the window and the round records "parsed": null, so the
-    // reported set must keep the line well under ~1900 chars.
-    // SPARK_GRAFT_ALL=1 restores the full sweep for local iteration.
-    val headline = Seq(
-      "q1_agg", "q_scan_filter", "q_join_star", "q_join_lateral",
-      "q_grouping_sets", "q_window_rank", "q_window_exclude",
-      "q_tpch3", "q_tpch4", "q_tpch5", "q_tpch6", "q_tpch10",
-      "q_tpch13", "q_tpch17", "q_tpch18",
-      "q_tpcds_channels", "q_tpcds_rollup_rank",
-      "q_dedup_exact", "q_dedup_minhash", "q_dedup_simhash",
-      // scale-safe twins of the exact-contract dedup queries: the
-      // headline bench exercises the plans a 100 TB run would use
-      // (df-capped posting lists; auto-sized LSH bands), while the
-      // exact quadratic-candidate twins stay judged in Verify
-      "q_dedup_ngram_capped", "q_dedup_embedding_lsh_wide",
-      "q_sim_topk", "q_sim_lsh", "q_sim_ivf",
-      "q_corpus_overlap",
-      "q_text_stats", "q_text_tfidf", "q_sessionize",
-      "q_pipeline_curate", "q_pipeline_train", "q_dedup_incremental",
-      "q_cb_funnel",
-      // function-layer representative so BENCH keeps the PG function
-      // surface visible round over round
-      "q_fn_math")
     // optional comma-separated name filter for targeted iteration
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)

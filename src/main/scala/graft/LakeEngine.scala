@@ -1024,7 +1024,7 @@ final class LakeEngine(val spark: SparkSession) {
 
   private def reapplyViews(): Unit = viewDefs.synchronized {
     viewDefs.forEach((n, sel) =>
-      QueryDef.pgSql(spark, sel).createOrReplaceTempView(n))
+      QueryDef.pgPlan(spark, sel).createOrReplaceTempView(n))
   }
 
   // The on-disk metadata version each table's registered views were
@@ -2600,79 +2600,50 @@ final class LakeEngine(val spark: SparkSession) {
     else None
   }
 
-  /** SQL entry point. SELECTs go straight to Spark SQL (registered
-    * lake tables resolve through their pruning FileIndex); DML
-    * statements against managed tables are routed to the
-    * transactional write path — the same split the reference makes
+  /** SQL entry point. SELECTs are planned by [[QueryDef.pgPlan]]
+    * (registered lake tables resolve through their pruning
+    * FileIndex); DML statements against managed tables are routed to
+    * the transactional write path — the same split the reference makes
     * between pushdown SELECTs and its FDW modify path. Returns the
     * DML row count as a 1-row frame for writes.
     */
-  def sql(q: String): DataFrame = {
-    // the PG dialect rewrites (ARRAY[…], quantified comparisons,
-    // SIMILAR TO, POSIX regex ops) apply to the WHOLE statement before
-    // DML routing, so they work inside INSERT sources, SET/WHERE
-    // expressions, and RETURNING lists too — all four are idempotent,
-    // so the SELECT fallthrough's pgSql pass is a no-op re-visit
-    val trimmed = plans.PosixRegexRewrite.rewrite(
-      plans.SimilarToRewrite.rewrite(
-        plans.QuantifiedSubqueries.rewrite(
-          plans.ArrayLiteralRewrite.rewrite(
-            plans.JsonArrowRewrite.rewrite(
-              plans.CollateRewrite.rewrite(
-                plans.PgCastRewrite.rewrite(
-                  plans.RowCompareRewrite.rewrite(
-                    plans.MapTypeRewrite.rewrite(
-                      plans.DoubleQuoteRewrite.rewrite(q)))))))))).trim
+  def sql(q: String): DataFrame = route(QueryDef.pgRewrite(q).trim)
+
+  /** Routes one statement that has been through [[QueryDef.pgRewrite]].
+    * The dialect chain runs on the WHOLE statement before routing because
+    * the DML regexes and the `expr()` predicates built from SET/WHERE/
+    * RETURNING text need Spark-parsable text; every SELECT piece is
+    * then planned with [[QueryDef.pgPlan]], never rewritten again.
+    * EXECUTE and EXPLAIN ANALYZE re-enter here with text assembled
+    * from rewritten parts.
+    */
+  private def route(trimmed: String): DataFrame = {
+    import spark.implicits._
     // DML carries an optional PG RETURNING list (the reference's
     // write tests use it throughout, e.g.
     // pg_lake_table/tests/pytests/test_writable_table_update.py).
     // The clause is split off TOKEN-WISE before the regexes run, so a
     // string literal containing the word "returning" (DELETE ... WHERE
-    // msg LIKE '%not returning%') never splits the statement.
-    val insertRe = "(?is)^INSERT\\s+INTO\\s+(\\w+)\\s+(.+)$".r
-    val deleteRe = "(?is)^DELETE\\s+FROM\\s+(\\w+)(?:\\s+WHERE\\s+(.+))?$".r
-    val updateRe =
-      "(?is)^UPDATE\\s+(\\w+)\\s+SET\\s+(.+?)(?:\\s+WHERE\\s+(.+))?$".r
-    val ctasRe = ("(?is)^CREATE\\s+TABLE\\s+(\\w+)" +
-      "(?:\\s+PARTITIONED\\s+BY\\s*\\(((?:[^()]|\\([^()]*\\))*)\\))?" +
-      "(?:\\s+LOCATION\\s+'([^']*)')?" +
-      "\\s+AS\\s+(SELECT.+)$").r
-    // reference DDL: create table t () using iceberg with (load_from=…)
-    // WITH accepts an optional format='…' on either side of the
-    // load/definition option (reference test_delta_copy.py:
-    // `with (definition_from = '…', format = 'delta')`)
-    val createFromRe = ("(?is)^CREATE\\s+TABLE\\s+(\\w+)\\s*(?:\\(\\s*\\))?" +
-      "(?:\\s+USING\\s+\\w+)?" +
-      "(?:\\s+PARTITIONED\\s+BY\\s*\\(((?:[^()]|\\([^()]*\\))*)\\))?" +
-      "(?:\\s+LOCATION\\s+'([^']*)')?" +
-      "\\s+WITH\\s*\\(\\s*(?:format\\s*=\\s*'(\\w+)'\\s*,\\s*)?" +
-      "(load_from|definition_from)\\s*=\\s*'([^']+)'" +
-      "(?:\\s*,\\s*format\\s*=\\s*'(\\w+)')?\\s*\\)\\s*;?\\s*$").r
-    import spark.implicits._
-    // token-wise RETURNING split for DML statements: the clause is the
-    // trailing depth-0 RETURNING keyword (never one inside a string
-    // literal or parenthesized subquery)
-    val isDml = "(?is)^(INSERT|UPDATE|DELETE)\\b.*".r
-      .pattern.matcher(trimmed).matches()
+    // msg LIKE '%not returning%') never splits the statement: it is
+    // the trailing depth-0 RETURNING keyword (never one inside a
+    // string literal or parenthesized subquery)
+    val isDml = dmlRe.pattern.matcher(trimmed).matches()
     val (dmlText0, retClause): (String, Option[String]) =
       if (!isDml) (trimmed, None) else splitReturning(trimmed)
     // PG `ONLY` on DML targets: act on the named table alone, without
     // family propagation (SELECT-side ONLY maps to __only_ views in
     // plans/OnlyRewrite)
-    val onlyDmlRe = "(?is)^(DELETE\\s+FROM|UPDATE)\\s+ONLY\\s+(.+)$".r
     val (dmlText, onlyDml) = dmlText0 match {
       case onlyDmlRe(head, rest) =>
-        (head.replaceAll("\\s+", " ") + " " +
+        (wsRe.replaceAllIn(head, " ") + " " +
           plans.OnlyRewrite.rewrite(rest), true)
       case _ => (plans.OnlyRewrite.rewrite(dmlText0), false)
     }
     // BEGIN READ ONLY: PG refuses write statements with this message
     // (transaction-control statements themselves stay allowed)
     if (activeTx.exists(_.readOnly)) {
-      val writeRe = ("(?is)^(INSERT|UPDATE|DELETE|TRUNCATE|CREATE|DROP|" +
-        "ALTER|REFRESH|VACUUM)\\b.*|(?is)^COPY\\s+\\w+\\s+FROM\\b.*").r
       if (writeRe.pattern.matcher(dmlText).matches()) {
-        val verb = dmlText.split("\\s+", 2)(0).toUpperCase
+        val verb = wsRe.pattern.split(dmlText, 2)(0).toUpperCase
         throw new IllegalStateException(
           s"cannot execute $verb in a read-only transaction")
       }
@@ -2683,8 +2654,7 @@ final class LakeEngine(val spark: SparkSession) {
     // BEFORE execution: PG's guard trips even when the first query
     // errors.
     activeTx.foreach { tx =>
-      if (("(?is)^(SELECT|WITH|TABLE|VALUES|INSERT|UPDATE|DELETE|" +
-          "COPY|EXECUTE)\\b.*").r.pattern.matcher(dmlText).matches()) {
+      if (queryStmtRe.pattern.matcher(dmlText).matches()) {
         // the RR/SERIALIZABLE snapshot moment is the transaction's
         // FIRST query statement (PG semantics) — taken HERE, because
         // a read served by a registered view never touches the
@@ -2713,13 +2683,13 @@ final class LakeEngine(val spark: SparkSession) {
         // moment; SERIALIZABLE = that + the commit-time CAS on written
         // tables + the read-pin re-check at COMMIT (write skew)
         val iso = Option(isoOrNull)
-          .map(_.replaceAll("\\s+", " ").toUpperCase)
+          .map(wsRe.replaceAllIn(_, " ").toUpperCase)
         begin(readOnly = Option(rwOrNull).exists(_.equalsIgnoreCase("ONLY")),
           repeatableRead = iso.contains("REPEATABLE READ"),
           serializable = iso.contains("SERIALIZABLE"))
         Seq("BEGIN").toDF("status")
       case setTxIsoRe(iso) =>
-        val level = iso.replaceAll("\\s+", " ").toUpperCase
+        val level = wsRe.replaceAllIn(iso, " ").toUpperCase
         setTxIsolation(level == "REPEATABLE READ",
           level == "SERIALIZABLE")
         Seq(level).toDF("isolation_level")
@@ -2771,7 +2741,7 @@ final class LakeEngine(val spark: SparkSession) {
         // PG's pre-9.0 spelling: bare ANALYZE / VERBOSE keywords
         var stripping = true
         while (stripping) {
-          val h = body.split("\\s+", 2)
+          val h = wsRe.pattern.split(body, 2)
           if (h.length == 2 && h(0).equalsIgnoreCase("ANALYZE")) {
             analyze = true; body = h(1)
           } else if (h.length == 2 && h(0).equalsIgnoreCase("VERBOSE")) {
@@ -2815,11 +2785,11 @@ final class LakeEngine(val spark: SparkSession) {
         require(orReplaceOrNull != null ||
           !viewDefs.synchronized(viewDefs.containsKey(name)),
           s"""view "$name" already exists""")
-        QueryDef.pgSql(spark, sel).createOrReplaceTempView(name)
+        QueryDef.pgPlan(spark, sel).createOrReplaceTempView(name)
         viewDefs.synchronized { viewDefs.put(name, sel); () }
         Seq(name).toDF("view_created")
       case createMatViewRe(name, locOrNull, sel) =>
-        val df = QueryDef.pgSql(spark, sel)
+        val df = QueryDef.pgPlan(spark, sel)
         val loc = Option(locOrNull)
           .getOrElse(LakeEngine.defaultTableLocation(spark, name))
         createTableAsSelect(name, loc, df)
@@ -2830,7 +2800,7 @@ final class LakeEngine(val spark: SparkSession) {
           s"""materialized view "$name" does not exist"""))
         val t = table(name)
         t.truncate()
-        t.append(QueryDef.pgSql(spark, sel))
+        t.append(QueryDef.pgPlan(spark, sel))
         refresh(name)
         Seq(name).toDF("refreshed")
       case dropViewRe(matOrNull, ifExistsOrNull, name) =>
@@ -2855,7 +2825,7 @@ final class LakeEngine(val spark: SparkSession) {
         prepared.put(key, (stmt.trim, types))
         Seq(name).toDF("prepared")
       case executeRe(name, argsOrNull) =>
-        sql(bindPrepared(name, argsOrNull))
+        route(bindPrepared(name, argsOrNull).trim)
       case deallocRe(name) =>
         if (name.equalsIgnoreCase("ALL")) prepared.clear()
         else {
@@ -2880,7 +2850,8 @@ final class LakeEngine(val spark: SparkSession) {
           .flatMap(splitTopLevel).map(_.trim).filter(_.nonEmpty)
         val loc = Option(locOrNull)
           .getOrElse(LakeEngine.defaultTableLocation(spark, name))
-        val t = createTableAsSelect(name, loc, spark.sql(select), spec)
+        val t = createTableAsSelect(name, loc, QueryDef.pgPlan(spark, select),
+          spec)
         Seq(t.read().count()).toDF("rows_inserted")
       case insertRe(name, rest) if partParents.contains(name) =>
         // range-partitioned parent: route each row to its child. The
@@ -2891,7 +2862,7 @@ final class LakeEngine(val spark: SparkSession) {
         // source again (the reference delegates routing to PG's own
         // partitioning, which is likewise single-pass)
         val (schema, keyCol) = partParents(name)
-        val df0 = spark.sql(rest)
+        val df0 = QueryDef.pgPlan(spark, rest)
         val target = schema.fieldNames.toSeq
         val aligned =
           if (df0.columns.length == target.length &&
@@ -2963,7 +2934,7 @@ final class LakeEngine(val spark: SparkSession) {
           Seq(total).toDF("rows_inserted")
         } finally graft.lake.LakeFs.deleteRecursive(stageDir)
       case insertRe(name, rest) if tables.contains(name) =>
-        val df = spark.sql(rest)
+        val df = QueryDef.pgPlan(spark, rest)
         val targetFields = table(name).meta.sparkSchema.fields.toSeq
         val target = targetFields.map(_.name)
         // VALUES lists arrive as col1..colN: align by position; a
@@ -3116,7 +3087,8 @@ final class LakeEngine(val spark: SparkSession) {
       case copyToRe(nameOrNull, colsOrNull, subqOrNull, url, optsOrNull) =>
         val base =
           if (subqOrNull != null)
-            spark.sql(subqOrNull.stripPrefix("(").stripSuffix(")"))
+            QueryDef.pgPlan(spark,
+              subqOrNull.stripPrefix("(").stripSuffix(")"))
           else spark.table(nameOrNull)
         // optional PG column-subset list: COPY t (a, b) TO …
         val df = Option(colsOrNull).map(cl =>
@@ -3165,7 +3137,7 @@ final class LakeEngine(val spark: SparkSession) {
         require(enabled, "delete_file: file deletion has been disabled " +
           "by the administrator")
         val url = resolveStage(urlRaw)
-        if (url.matches("^(s3a?|gs|r2|az|azure|abfss?)://.*"))
+        if (objectStoreUrlRe.matches(url))
           sources.HttpSource.deleteObject(url)
         else lake.LakeFs.deleteIfExists(url)
         Seq(url).toDF("deleted")
@@ -3294,7 +3266,6 @@ final class LakeEngine(val spark: SparkSession) {
         val colsSpec = colsOrEmpty.trim
         // () or (LIKE parent) take the parent's columns; explicit
         // columns append as extras (PG merges parent columns in front)
-        val likeRe = "(?is)^LIKE\\s+(\\w+)$".r
         val extras = colsSpec match {
           case "" => Nil
           case likeRe(src) =>
@@ -3450,7 +3421,7 @@ final class LakeEngine(val spark: SparkSession) {
       case _ =>
         require(retClause.isEmpty,
           "RETURNING is only supported on managed-table DML")
-        QueryDef.pgSql(spark, dmlText)
+        QueryDef.pgPlan(spark, dmlText)
     }
   }
 
@@ -3737,37 +3708,34 @@ final class LakeEngine(val spark: SparkSession) {
     // only fires when the whole statement starts with INSERT/UPDATE/
     // DELETE) — PG's EXPLAIN ANALYZE discards RETURNING output too
     val body = splitReturning(body0.trim.stripSuffix(";").trim)._1
-    val execRe = "(?is)^EXECUTE\\s+(\\w+)(?:\\s*\\((.*)\\))?$".r
-    val insertSelRe = "(?is)^INSERT\\s+INTO\\s+\\w+\\s+(SELECT.+)$".r
-    val deleteRe2 = "(?is)^DELETE\\s+FROM\\s+(\\w+)(?:\\s+WHERE\\s+(.+))?$".r
-    val updateRe2 =
-      "(?is)^UPDATE\\s+(\\w+)\\s+SET\\s+.+?(?:\\s+WHERE\\s+(.+?))?$".r
     body match {
-      case execRe(name, argsOrNull) =>
+      case executeRe(name, argsOrNull) =>
         explainStatement(bindPrepared(name, argsOrNull), analyze, verbose)
       case _ =>
-        val isDml2 = "(?is)^(INSERT|UPDATE|DELETE)\\b.*".r
-          .pattern.matcher(body).matches()
+        val isDml = dmlRe.pattern.matcher(body).matches()
         val readSide = body match {
-          case insertSelRe(sel) => sel
-          case deleteRe2(t, whereOrNull) =>
+          case insertRe(_, sel) if sel.toUpperCase.startsWith("SELECT") => sel
+          case deleteRe(t, whereOrNull) =>
             s"SELECT * FROM $t" +
               Option(whereOrNull).map(w => s" WHERE $w").getOrElse("")
-          case updateRe2(t, whereOrNull) =>
+          case updateRe(t, _, whereOrNull) =>
             s"SELECT * FROM $t" +
               Option(whereOrNull).map(w => s" WHERE $w").getOrElse("")
-          case _ if isDml2 => s"SELECT 1" // INSERT ... VALUES: constant source
+          case _ if isDml => s"SELECT 1" // INSERT ... VALUES: constant source
           case q => q
         }
-        val df = QueryDef.pgSql(spark, readSide)
+        val df = QueryDef.pgPlan(spark, readSide)
         val mode = if (verbose) "formatted" else "simple"
         val planText = df.queryExecution.explainString(
           org.apache.spark.sql.execution.ExplainMode.fromString(mode))
-        val header = if (isDml2) Seq(s"Statement: ${body.split("\\s+")(0).toUpperCase} (plan shows the scanned read side)") else Nil
+        val header =
+          if (!isDml) Nil
+          else Seq(s"Statement: ${wsRe.pattern.split(body, 2)(0).toUpperCase}" +
+            " (plan shows the scanned read side)")
         val tail =
           if (!analyze) Nil
-          else if (isDml2) {
-            val n = sql(body).head().getLong(0)
+          else if (isDml) {
+            val n = route(body).head().getLong(0)
             Seq(s"Rows affected: $n")
           } else Seq(s"Rows returned: ${df.count()}")
         (header ++ planText.linesIterator.toSeq ++ tail).toDF("query_plan")
@@ -3920,6 +3888,42 @@ final class LakeEngine(val spark: SparkSession) {
   private val dataFileStatsRe =
     ("(?is)^SELECT\\s+\\*\\s+FROM\\s+lake_iceberg\\.data_file_stats" +
       "\\s*\\(\\s*'([^']+)'\\s*\\)\\s*;?\\s*$").r
+
+  // statement kinds: DML (RETURNING split), DML on ONLY a family
+  // member, writes a READ ONLY transaction refuses, and the query
+  // statements PG's "before any query" guard counts
+  private val dmlRe = "(?is)^(INSERT|UPDATE|DELETE)\\b.*".r
+  private val onlyDmlRe = "(?is)^(DELETE\\s+FROM|UPDATE)\\s+ONLY\\s+(.+)$".r
+  private val writeRe = ("(?is)^(INSERT|UPDATE|DELETE|TRUNCATE|CREATE|DROP|" +
+    "ALTER|REFRESH|VACUUM)\\b.*|(?is)^COPY\\s+\\w+\\s+FROM\\b.*").r
+  private val queryStmtRe = ("(?is)^(SELECT|WITH|TABLE|VALUES|INSERT|UPDATE|" +
+    "DELETE|COPY|EXECUTE)\\b.*").r
+  // DML against managed tables, after the RETURNING split
+  private val insertRe = "(?is)^INSERT\\s+INTO\\s+(\\w+)\\s+(.+)$".r
+  private val deleteRe =
+    "(?is)^DELETE\\s+FROM\\s+(\\w+)(?:\\s+WHERE\\s+(.+))?$".r
+  private val updateRe =
+    "(?is)^UPDATE\\s+(\\w+)\\s+SET\\s+(.+?)(?:\\s+WHERE\\s+(.+))?$".r
+  private val ctasRe = ("(?is)^CREATE\\s+TABLE\\s+(\\w+)" +
+    "(?:\\s+PARTITIONED\\s+BY\\s*\\(((?:[^()]|\\([^()]*\\))*)\\))?" +
+    "(?:\\s+LOCATION\\s+'([^']*)')?" +
+    "\\s+AS\\s+(SELECT.+)$").r
+  // reference DDL: create table t () using iceberg with (load_from=…)
+  // WITH accepts an optional format='…' on either side of the
+  // load/definition option (reference test_delta_copy.py:
+  // `with (definition_from = '…', format = 'delta')`)
+  private val createFromRe =
+    ("(?is)^CREATE\\s+TABLE\\s+(\\w+)\\s*(?:\\(\\s*\\))?" +
+      "(?:\\s+USING\\s+\\w+)?" +
+      "(?:\\s+PARTITIONED\\s+BY\\s*\\(((?:[^()]|\\([^()]*\\))*)\\))?" +
+      "(?:\\s+LOCATION\\s+'([^']*)')?" +
+      "\\s+WITH\\s*\\(\\s*(?:format\\s*=\\s*'(\\w+)'\\s*,\\s*)?" +
+      "(load_from|definition_from)\\s*=\\s*'([^']+)'" +
+      "(?:\\s*,\\s*format\\s*=\\s*'(\\w+)')?\\s*\\)\\s*;?\\s*$").r
+  // the `(LIKE src)` column list of CREATE TABLE … INHERITS
+  private val likeRe = "(?is)^LIKE\\s+(\\w+)$".r
+  private val wsRe = "\\s+".r
+  private val objectStoreUrlRe = "^(s3a?|gs|r2|az|azure|abfss?)://.*".r
 
   // EXPLAIN [(opts)] stmt / SET / SHOW / RESET / CREATE VIEW surfaces
   private val explainRe =

@@ -28,7 +28,7 @@ object QueryDef {
       run: (SparkSession, String) => DataFrame): QueryDef =
     QueryDef(name, run, None)
 
-  /** Query expressed as SQL text run through `spark.sql` over the fixture
+  /** Query expressed as SQL text run through `pgSql` over the fixture
     * views. When the Spark and DuckDB dialects agree the same text is the
     * oracle; pass `oracle` where they diverge.
     */
@@ -36,32 +36,47 @@ object QueryDef {
     QueryDef(
       name,
       (s: SparkSession, dir: String) => {
-        graft.functions.PgFunctions.register(s)
         Tables.registerAll(s, dir)
         pgSql(s, sparkSql)
       },
       Some(Option(oracle).getOrElse(sparkSql)))
 
   /** `spark.sql` with reference (PG/DuckDB) semantics restored where
-    * stock Spark diverges: quantified comparisons (`op ANY/ALL/SOME
-    * (subquery)`, unparseable by Spark) expand via
-    * [[graft.plans.QuantifiedSubqueries]] before parsing, and
-    * value-position `[NOT] IN (subquery)` gets the standard's
-    * three-valued result via [[graft.plans.NullAwareIn]] on the
-    * analyzed plan. Plans without either pass through untouched.
+    * stock Spark diverges: the PG dialect text rewrites, then the
+    * analyzed-plan fix-ups. Plans needing neither pass through
+    * untouched.
     */
-  def pgSql(s: SparkSession, text: String): org.apache.spark.sql.DataFrame = {
-    graft.functions.PgFunctions.register(s) // idempotent; rewrites emit them
-    val df = s.sql(graft.plans.PosixRegexRewrite.rewrite(
-      graft.plans.SimilarToRewrite.rewrite(
-        graft.plans.QuantifiedSubqueries.rewrite(
-          graft.plans.ArrayLiteralRewrite.rewrite(
-            graft.plans.JsonArrowRewrite.rewrite(
-              graft.plans.CollateRewrite.rewrite(
-                graft.plans.PgCastRewrite.rewrite(
-                  graft.plans.RowCompareRewrite.rewrite(
-                    graft.plans.MapTypeRewrite.rewrite(
-                      graft.plans.DoubleQuoteRewrite.rewrite(text)))))))))))
+  def pgSql(s: SparkSession, text: String): DataFrame =
+    pgPlan(s, pgRewrite(text))
+
+  /** The PG dialect text rewrites, in order: the only copy of the chain.
+    * Every statement the engine runs, read or write, passes through it
+    * exactly once (`LakeEngine.sql` rewrites the whole statement before
+    * routing, so DML regexes and `expr()` see Spark-parsable text).
+    */
+  def pgRewrite(text: String): String = {
+    import graft.plans._
+    PosixRegexRewrite.rewrite(
+      SimilarToRewrite.rewrite(
+        QuantifiedSubqueries.rewrite(
+          ArrayLiteralRewrite.rewrite(
+            JsonArrowRewrite.rewrite(
+              CollateRewrite.rewrite(
+                PgCastRewrite.rewrite(
+                  RowCompareRewrite.rewrite(
+                    MapTypeRewrite.rewrite(
+                      DoubleQuoteRewrite.rewrite(text))))))))))
+  }
+
+  /** Plans already-rewritten SELECT text: registers the PG functions
+    * the rewrites emit, parses with `spark.sql`, then gives value-
+    * position `[NOT] IN (subquery)` the standard's three-valued result
+    * via [[graft.plans.NullAwareIn]] on the analyzed plan (before the
+    * optimizer turns the IN into an ExistenceJoin).
+    */
+  def pgPlan(s: SparkSession, rewritten: String): DataFrame = {
+    graft.functions.PgFunctions.register(s) // idempotent
+    val df = s.sql(rewritten)
     val analyzed = df.queryExecution.analyzed
     val fixed = graft.plans.NullAwareIn(analyzed)
     if (fixed.fastEquals(analyzed)) df

@@ -49,9 +49,11 @@ import org.apache.spark.sql.types.BooleanType
   * common analytics case: key IN (SELECT key …)) keep Spark's native
   * single-join plan untouched.
   *
-  * Applied to ANALYZED plans (before optimization) via
-  * [[graft.QueryDef.pgSql]] / `LakeEngine.sql`; re-analysis after the
-  * rewrite deduplicates the shared subplan instances.
+  * Applied to ANALYZED plans (before optimization) by
+  * [[graft.QueryDef.pgPlan]], which plans every SELECT the engine
+  * runs — queries, views, CTAS and INSERT sources, `COPY (…) TO` — so
+  * reads and writes share one 3VL; re-analysis after the rewrite
+  * deduplicates the shared subplan instances.
   */
 object NullAwareIn {
 

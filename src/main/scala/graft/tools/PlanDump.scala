@@ -15,26 +15,12 @@ import org.apache.spark.sql.SparkSession
   * Bench.
   */
 object PlanDump {
-  val headline: Seq[String] = Seq(
-    "q1_agg", "q_scan_filter", "q_join_star", "q_join_lateral",
-    "q_grouping_sets", "q_window_rank", "q_window_exclude",
-    "q_tpch3", "q_tpch4", "q_tpch5", "q_tpch6", "q_tpch10",
-    "q_tpch13", "q_tpch17", "q_tpch18",
-    "q_tpcds_channels", "q_tpcds_rollup_rank",
-    "q_dedup_exact", "q_dedup_minhash", "q_dedup_simhash",
-    "q_dedup_ngram_capped", "q_dedup_embedding_lsh_wide",
-    "q_sim_topk", "q_sim_lsh", "q_sim_ivf",
-    "q_corpus_overlap",
-    "q_text_stats", "q_text_tfidf", "q_sessionize",
-    "q_pipeline_curate", "q_pipeline_train", "q_dedup_incremental",
-    "q_cb_funnel", "q_fn_math")
-
   def main(args: Array[String]): Unit = {
     val outDir = args.headOption.getOrElse("plans/r15")
     val tag = if (args.length > 1) args(1) else "before"
     val names =
       if (args.length > 2) args(2).split(",").map(_.trim).filter(_.nonEmpty).toSeq
-      else headline
+      else graft.Bench.headline
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder()

@@ -666,29 +666,6 @@ class PipelineSpec extends AnyFunSuite {
     clusterMin.foreach(m => assert(!dup.contains(m)))
   }
 
-  test("salted join equals plain join on skewed keys") {
-    import spark.implicits._
-    // skew: one key carries 5000 rows, the rest 1 each
-    val large = ((1 to 5000).map(i => (7L, i.toLong)) ++
-      (1 to 50).map(i => (i.toLong + 100, i.toLong)))
-      .toDF("k", "row_id")
-    val small = Seq((7L, "hot"), (101L, "a"), (102L, "b"), (999L, "miss"))
-      .toDF("k", "label")
-    val plain = large.join(small, "k")
-      .select("k", "row_id", "label").collect()
-      .map(_.toSeq).toSet
-    val salted = SkewJoin.saltedJoin(large, small, "k", "row_id", salts = 8)
-      .select("k", "row_id", "label").collect()
-      .map(_.toSeq).toSet
-    assert(salted == plain, "salting must not change the match set")
-    // the hot key really is spread across salt values
-    val spread = large.withColumn("__salt",
-        pmod(xxhash64(col("row_id")), lit(8L)))
-      .filter(col("k") === 7L)
-      .select("__salt").distinct().count()
-    assert(spread > 4, s"hot key only hit $spread salt buckets")
-  }
-
   test("exact distributed quantiles equal percentile_cont") {
     val li = Tables.df(spark, sf, "lineitem")
     val qs = Seq(0.0, 0.25, 0.5, 0.9, 0.99, 1.0)
