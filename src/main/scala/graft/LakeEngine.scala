@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{StructField, StructType}
 import scala.collection.concurrent.TrieMap
 
 /** The public facade (SURVEY.md §7): one SparkSession-hosted library
@@ -1156,10 +1156,8 @@ final class LakeEngine(val spark: SparkSession) {
     val client = new lake.RestCatalogClient(catalogUri, clientId,
       clientSecret, oauthUri)
     val metaLoc = client.loadTableMetadataLocation(namespace, table)
-    val df = sources.IcebergSnapshot.read(spark,
-      metaLoc.stripPrefix("file://"))
-    df.createOrReplaceTempView(name)
-    df
+    createLakeTable(name, metaLoc.stripPrefix("file://"),
+      format = Some("iceberg"))
   }
 
   /** The WRITABLE rest-catalog direction (reference `WITH
@@ -1735,6 +1733,11 @@ final class LakeEngine(val spark: SparkSession) {
     * `columns = "name type, ..."` option (PG type names accepted)
     * fixes the schema without inference, and a headerless file without
     * declared columns surfaces as column0..columnN.
+    *
+    * `format` also names the table formats (`iceberg` over a
+    * metadata.json, `delta` over a table directory), the native geo and
+    * spreadsheet readers (`gdal`, picked by extension) and S3 access
+    * logs (`log`); [[foreignFrameStaged]] holds the whole decision.
     */
   def createLakeTable(name: String, path: String,
       format: Option[String] = None,
@@ -1742,6 +1745,8 @@ final class LakeEngine(val spark: SparkSession) {
       schema: Option[StructType] = None,
       filenameColumn: Boolean = false): DataFrame = {
     validateForeignOptions(format, options)
+    format.map(_.toLowerCase).filter(fixedColumnFormats)
+      .foreach(f => require(!filenameColumn, fixedColumnsMessage(f)))
     // a declared schema lists `_filename text` explicitly (reference
     // create_table.c ErrorIfInvalidFilenameColumn), but the column is
     // computed, never read from the file
@@ -1812,9 +1817,11 @@ final class LakeEngine(val spark: SparkSession) {
     }
     if (options.contains("delimiter") || options.contains("quote"))
       require(delim != quote, "CSV delimiter and quote must be different")
-    // csv dialect options demand csv format (option.c:422)
+    // csv dialect options demand csv format (option.c:422); `gdal`
+    // spreadsheets take `header` too, checked by the gdal dispatch
     val csvOnly = Seq("header", "delimiter", "quote", "escape",
       "new_line", "null", "null_padding")
+      .filterNot(_ == "header" && format.exists(_.equalsIgnoreCase("gdal")))
     if (format.exists(f => f.toLowerCase != "csv") &&
         csvOnly.exists(options.contains))
       throw new IllegalArgumentException(
@@ -1857,13 +1864,9 @@ final class LakeEngine(val spark: SparkSession) {
     StructType(s.fields.filterNot(_.name == "_filename"))
   }
 
-  private def foreignFrame(pathIn: String, format: Option[String],
-      options: Map[String, String],
-      schema: Option[StructType]): DataFrame =
-    foreignFrameStaged(pathIn, format, options, schema)._1
-
-  /** [[foreignFrame]] plus, for remote sources, the staged-basename →
+  /** A source's frame plus, for remote sources, the staged-basename →
     * original-URL pairs [[createLakeTable]]'s `_filename` column needs.
+    * The one place that picks a source's reader.
     */
   private def foreignFrameStaged(pathIn: String, format: Option[String],
       options: Map[String, String],
@@ -1871,6 +1874,13 @@ final class LakeEngine(val spark: SparkSession) {
     // @STAGE/ resolves before anything else — scheme detection,
     // staging, format inference (reference resolution-order test)
     val path0 = resolveStage(pathIn)
+    val fmtOpt = format.map(_.toLowerCase)
+    // gdal and log readers fix their own columns and read the path
+    // through Hadoop as given
+    fmtOpt.filter(fixedColumnFormats).foreach(f => require(
+      schema.isEmpty && !options.contains("columns"), fixedColumnsMessage(f)))
+    if (fmtOpt.contains("gdal")) return (gdalFrame(path0, options), Nil)
+    if (fmtOpt.contains("log")) return (s3LogFrame(path0, options), Nil)
     // remote URLs (http/hf/s3/gcs/r2/azure, incl. wildcards) stage
     // through the content-addressed cache first — s3://gs://r2:// add
     // bucket-region routing + SigV4, az://abfss:// add SAS-token auth
@@ -1884,13 +1894,6 @@ final class LakeEngine(val spark: SparkSession) {
     // `format` wins; otherwise detect by the metadata.json suffix /
     // a _delta_log dir. Multi-file table metadata cannot stage
     // through the single-file cache, so remote URLs refuse loudly.
-    val fmtOpt = format.map(_.toLowerCase)
-    // the `.metadata.json` / bare `metadata.json` CONVENTION only — a
-    // data file named e.g. sales_metadata.json must stay a JSON source
-    def icebergName(p: String): Boolean = {
-      val f = p.substring(p.lastIndexOf('/') + 1)
-      f == "metadata.json" || f.endsWith(".metadata.json")
-    }
     val icebergSrc = fmtOpt.contains("iceberg") ||
       (fmtOpt.isEmpty && icebergName(sources.HttpSource.pathPart(path0)))
     val deltaSrc = fmtOpt.contains("delta") ||
@@ -1960,6 +1963,145 @@ final class LakeEngine(val spark: SparkSession) {
     (frame, staged)
   }
 
+  /** The `.metadata.json` / bare `metadata.json` CONVENTION only — a
+    * data file named e.g. sales_metadata.json stays a JSON source.
+    */
+  private def icebergName(p: String): Boolean = {
+    val f = p.substring(p.lastIndexOf('/') + 1)
+    f == "metadata.json" || f.endsWith(".metadata.json")
+  }
+
+  private val fixedColumnFormats = Set("gdal", "log")
+
+  private def fixedColumnsMessage(fmt: String): String =
+    s"format '$fmt' tables have fixed columns: a declared schema, the " +
+      "columns option and filename 'true' are not supported"
+
+  /** A `format 'gdal'` reader, the extensions it claims and the
+    * options beyond the path that it takes.
+    */
+  private case class Gdal(name: String, exts: Seq[String],
+      read: (String, Map[String, String]) => DataFrame,
+      takes: Set[String] = Set.empty)
+
+  /** `format 'gdal'` readers by file extension. The reference reads
+    * these formats through GDAL (docs/file-formats-reference.md:96-140);
+    * each one here is a native reader.
+    */
+  private lazy val gdalReaders: Seq[Gdal] = {
+    def plain(read: (SparkSession, String) => DataFrame) =
+      (p: String, _: Map[String, String]) => read(spark, p)
+    def header(o: Map[String, String]): Boolean =
+      o.get("header").forall(lake.LakeTable.pgBool(_, "header"))
+    val sheet = Set("layer", "header")
+    Seq(
+      // RFC 7946 features with a properties map (sources.GeoJson)
+      Gdal("GeoJSON", Seq(".geojson", ".json"), plain(sources.GeoJson.read)),
+      // newline-delimited, line-splittable features (GeoJson.readSeq)
+      Gdal("GeoJSONSeq", Seq(".geojsons", ".geojsonl"),
+        plain(sources.GeoJson.readSeq)),
+      // bare or zipped, dBase attributes (sources.Shapefile)
+      Gdal("Shapefile", Seq(".shp", ".zip"), plain(sources.Shapefile.read)),
+      // SQLite b-tree walk, `layer` names a table (sources.GeoPackage)
+      Gdal("GeoPackage", Seq(".gpkg"),
+        (p, o) => sources.GeoPackage.read(spark, p, o.get("layer")),
+        Set("layer")),
+      // OGC KML 2.2 Placemarks (sources.GeoXml)
+      Gdal("KML", Seq(".kml", ".kmz"), plain(sources.GeoXml.readKml)),
+      // OGC GML 2/3 simple features (sources.GeoXml)
+      Gdal("GML", Seq(".gml"), plain(sources.GeoXml.readGml)),
+      // spatial index skipped (sources.FlatGeobuf)
+      Gdal("FlatGeobuf", Seq(".fgb"), plain(sources.FlatGeobuf.read)),
+      // SpreadsheetML, `layer 'Sheet 1'` names a tab (sources.Xlsx)
+      Gdal("XLSX", Seq(".xlsx"),
+        (p, o) => sources.Xlsx.read(spark, p, header(o), o.get("layer")),
+        sheet),
+      // CFB + BIFF8, BIFF5 and earlier refused (sources.Xls)
+      Gdal("XLS", Seq(".xls"),
+        (p, o) => sources.Xls.read(spark, p, header(o), o.get("layer")),
+        sheet),
+      // AutoCAD ASCII group codes, binary DXF refused (sources.Dxf)
+      Gdal("DXF", Seq(".dxf"), plain(sources.Dxf.read)),
+      // MapInfo MIF with sibling .mid attributes (sources.Mif)
+      Gdal("MIF", Seq(".mif", ".mit"), plain(sources.Mif.read)),
+      // elevation/roughness contour lines (sources.WaspMap)
+      Gdal("WAsP", Seq(".map"), plain(sources.WaspMap.read)),
+      // road reference lines sampled every 1 m (sources.OpenDrive)
+      Gdal("OpenDRIVE", Seq(".xodr"),
+        (p, _) => sources.OpenDrive.read(spark, p)))
+  }
+
+  /** `format 'gdal'`: the reader comes from the path's extension (`.gz`
+    * stripped), or for a directory from its files' extensions, which
+    * must all belong to one reader. Proprietary-undocumented formats
+    * (.gdb, .tab, .dwg) refuse with the conversion hint; unknown
+    * extensions refuse rather than guess.
+    */
+  private def gdalFrame(path: String,
+      options: Map[String, String]): DataFrame = {
+    def readerOf(p: String): Option[Gdal] = {
+      val f = p.toLowerCase.stripSuffix(".gz")
+      if (Seq(".gdb", ".tab", ".dwg").exists(f.endsWith))
+        throw new IllegalArgumentException(
+          s"'$p': .gdb/.tab/.dwg are proprietary binary formats " +
+            "with no public spec - convert to GeoPackage/MIF/DXF first")
+      gdalReaders.find(_.exts.exists(f.endsWith))
+    }
+    val reader = readerOf(path).getOrElse {
+      val hPath = new org.apache.hadoop.fs.Path(path)
+      val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val inDir =
+        if (!fs.isDirectory(hPath)) Nil
+        else fs.listStatus(hPath).toSeq.filter(_.isFile)
+          .flatMap(st => readerOf(st.getPath.getName)).distinct
+      inDir match {
+        case Seq(one) => one
+        case Seq() => throw new IllegalArgumentException(
+          s"cannot infer a GDAL-table format from '$path'")
+        case many => throw new IllegalArgumentException(
+          s"'$path' holds files of several GDAL formats " +
+            s"(${many.map(_.name).mkString(", ")}) - point at one of them")
+      }
+    }
+    Seq("layer", "header").filterNot(reader.takes).foreach(o => require(
+      !options.contains(o), s"${reader.name} does not take a '$o' option"))
+    reader.read(path, options)
+  }
+
+  /** `format 'log', log_format 's3'` (docs/file-formats-reference.md:
+    * 141-150): templated regex parse of S3 access logs over a
+    * distributed text scan. Unparseable lines surface with NULL fields
+    * rather than failing the scan.
+    */
+  private def s3LogFrame(path: String,
+      options: Map[String, String]): DataFrame = {
+    val logFormat = options.getOrElse("log_format", "s3")
+    require(logFormat == "s3", s"unsupported log_format $logFormat")
+    require(!options.contains("layer"), "log does not take a 'layer' option")
+    // bucket_owner bucket [time] remote_ip requester request_id operation
+    // key "request_uri" http_status error_code bytes_sent object_size
+    // total_time turn_around_time "referrer" "user_agent"
+    val pat =
+      """^(\S+) (\S+) \[([^\]]+)\] (\S+) (\S+) (\S+) (\S+) (\S+) "([^"]*)" (\S+) (\S+) (\S+) (\S+) (\S+) (\S+) "([^"]*)" "([^"]*)"""
+    val fields = Seq("bucket_owner", "bucket", "time", "remote_ip",
+      "requester", "request_id", "operation", "key", "request_uri",
+      "http_status", "error_code", "bytes_sent", "object_size",
+      "total_time", "turn_around_time", "referrer", "user_agent")
+    val raw = spark.read.text(path)
+    fields.zipWithIndex.foldLeft(raw) { case (df, (f, i)) =>
+      df.withColumn(f,
+        when(regexp_extract(col("value"), pat, i + 1) === "", lit(null))
+          .otherwise(regexp_extract(col("value"), pat, i + 1)))
+    }.drop("value")
+      .withColumn("http_status", col("http_status").cast("int"))
+      .withColumn("bytes_sent",
+        when(col("bytes_sent") === "-", lit(null))
+          .otherwise(col("bytes_sent")).cast("long"))
+      .withColumn("object_size",
+        when(col("object_size") === "-", lit(null))
+          .otherwise(col("object_size")).cast("long"))
+  }
+
   /** `columns = "a int4, b text, ..."` → StructType (PG names map to
     * the SURVEY §1.2 storage conventions).
     */
@@ -2015,33 +2157,14 @@ final class LakeEngine(val spark: SparkSession) {
       load: Boolean = true, format: Option[String] = None,
       options: Map[String, String] = Map.empty,
       partitionBy: Seq[String] = Nil): LakeTable = {
-    val src = foreignFrame(url, format, options, None)
+    val src = foreignFrameStaged(url, format, options, None)._1
     if (load) createTableAsSelect(name, location, src, partitionBy)
     else createTable(name, location, src.schema, partitionBy)
   }
 
-  /** Delta table as a foreign table (reference `delta_scan`, opt-in —
-    * docs/file-formats-reference.md / read_data.c:297-317).
-    */
-  def createDeltaTable(name: String, tableDir: String): DataFrame = {
-    val df = sources.DeltaSnapshot.read(spark, tableDir)
-    df.createOrReplaceTempView(name)
-    df
-  }
-
-  /** External Iceberg snapshot as a foreign table (reference: FT over a
-    * `*.metadata.json`, docs/file-formats-reference.md:151-168).
-    */
-  def createExternalIceberg(name: String, metadataPath: String,
-      snapshotId: Option[Long] = None): DataFrame = {
-    val df = sources.IcebergSnapshot.read(spark, metadataPath, snapshotId)
-    df.createOrReplaceTempView(name)
-    df
-  }
-
   /** Export a managed table's current snapshot as Iceberg v2 metadata;
     * returns the metadata.json path (readable by external tooling and
-    * [[createExternalIceberg]]).
+    * by [[createLakeTable]] with `format 'iceberg'`).
     */
   def exportIceberg(tableName: String): String =
     graft.lake.IcebergExport.export(table(tableName))
@@ -2062,256 +2185,6 @@ final class LakeEngine(val spark: SparkSession) {
         else graft.lake.IcebergExport.currentMetadata(t.location)
       (n, t.location, metaLoc.orNull)
     }.toDF("table_name", "location", "metadata_location")
-  }
-
-  /** GeoJSON scan (reference reads geo formats via GDAL,
-    * docs/file-formats-reference.md:96-140; here the GeoJSON layer is
-    * native — [[graft.sources.GeoJson]]). Rows carry WKB geometry for
-    * the st_* function layer plus a properties map.
-    */
-  def createGeoTable(name: String, path: String): DataFrame = {
-    val df = sources.GeoJson.read(spark, path)
-    df.createOrReplaceTempView(name)
-    df
-  }
-
-  /** GeoJSONSeq scan (`.geojsons`/`.geojsonl` — newline-delimited
-    * Features, line-splittable so one big file parallelizes).
-    */
-  def createGeoSeqTable(name: String, path: String): DataFrame = {
-    val df = sources.GeoJson.readSeq(spark, path)
-    df.createOrReplaceTempView(name)
-    df
-  }
-
-  /** AutoCAD ASCII DXF scan (native group-code reader —
-    * [[graft.sources.Dxf]]): POINT/LINE/LWPOLYLINE/legacy POLYLINE
-    * entities as WKB rows with layer/handle properties; binary
-    * .dxf/.dwg refuse loudly.
-    */
-  def createDxfTable(name: String, path: String): DataFrame = {
-    val df = sources.Dxf.read(spark, path)
-    df.createOrReplaceTempView(name)
-    df
-  }
-
-  /** The reference's `format 'gdal'` entry point: infer the reader
-    * from the file extension (docs/file-formats-reference.md:96-140)
-    * and dispatch to the matching native scan. Formats whose layout is
-    * proprietary-undocumented (.gdb, .tab, .dwg) refuse loudly with
-    * the conversion hint; unknown extensions refuse rather than guess.
-    */
-  def createGdalTable(name: String, path: String,
-      layer: Option[String] = None): DataFrame = {
-    val lower = path.toLowerCase
-    def noLayer(fmt: String): Unit = require(layer.isEmpty,
-      s"$fmt does not take a 'layer' option")
-    val stripped =
-      if (lower.endsWith(".gz")) lower.dropRight(3) else lower
-    stripped match {
-      case p if p.endsWith(".geojson") || p.endsWith(".json") =>
-        noLayer("GeoJSON"); createGeoTable(name, path)
-      case p if p.endsWith(".geojsons") || p.endsWith(".geojsonl") =>
-        noLayer("GeoJSONSeq"); createGeoSeqTable(name, path)
-      case p if p.endsWith(".shp") || p.endsWith(".zip") =>
-        noLayer("Shapefile"); createShapeTable(name, path)
-      case p if p.endsWith(".gpkg") => createGpkgTable(name, path, layer)
-      case p if p.endsWith(".kml") || p.endsWith(".kmz") =>
-        noLayer("KML"); createKmlTable(name, path)
-      case p if p.endsWith(".gml") =>
-        noLayer("GML"); createGmlTable(name, path)
-      case p if p.endsWith(".fgb") =>
-        noLayer("FlatGeobuf"); createFgbTable(name, path)
-      case p if p.endsWith(".xlsx") =>
-        createXlsxTable(name, path, layer = layer)
-      case p if p.endsWith(".xls") =>
-        createXlsTable(name, path, layer = layer)
-      case p if p.endsWith(".dxf") =>
-        noLayer("DXF"); createDxfTable(name, path)
-      case p if p.endsWith(".mif") || p.endsWith(".mit") =>
-        noLayer("MIF"); createMifTable(name, path)
-      case p if p.endsWith(".map") =>
-        noLayer("WAsP"); createWaspMapTable(name, path)
-      case p if p.endsWith(".xodr") =>
-        noLayer("OpenDRIVE"); createXodrTable(name, path)
-      case p if p.endsWith(".gdb") || p.endsWith(".tab") ||
-          p.endsWith(".dwg") =>
-        throw new IllegalArgumentException(
-          s"'$path': .gdb/.tab/.dwg are proprietary binary formats " +
-            "with no public spec - convert to GeoPackage/MIF/DXF first")
-      case _ => throw new IllegalArgumentException(
-        s"cannot infer a GDAL-table format from '$path' - use the " +
-          "format-specific create*Table entry point")
-    }
-  }
-
-  /** WebDataset tar-shard scan ([[graft.sources.WebDataset]]): one row
-    * per sample with its `components` map; the write side is
-    * `WebDataset.write` (deterministic uniform shards, exactly-once
-    * rename commit).
-    */
-  def createWebDatasetTable(name: String, dir: String): DataFrame = {
-    val df = sources.WebDataset.read(spark, dir)
-    df.createOrReplaceTempView(name)
-    df
-  }
-
-  /** OpenDRIVE .xodr scan (native XML reader with sampled reference
-    * lines — [[graft.sources.OpenDrive]]).
-    */
-  def createXodrTable(name: String, path: String,
-      step: Double = 1.0): DataFrame = {
-    val df = sources.OpenDrive.read(spark, path, step)
-    df.createOrReplaceTempView(name)
-    df
-  }
-
-  /** WAsP .map scan (native text reader — [[graft.sources.WaspMap]]):
-    * elevation/roughness contour LINESTRINGs with their attributes.
-    */
-  def createWaspMapTable(name: String, path: String): DataFrame = {
-    val df = sources.WaspMap.read(spark, path)
-    df.createOrReplaceTempView(name)
-    df
-  }
-
-  /** MapInfo MIF/MID scan (native text reader — [[graft.sources.Mif]]):
-    * NONE/POINT/LINE/PLINE/REGION records with sibling-.mid
-    * attributes; region holes are NOT reconstructed (stated).
-    */
-  def createMifTable(name: String, path: String): DataFrame = {
-    val df = sources.Mif.read(spark, path)
-    df.createOrReplaceTempView(name)
-    df
-  }
-
-  /** KML/KMZ scan (OGC KML 2.2, native XML reader —
-    * [[graft.sources.GeoXml]]); Placemarks become rows with name/
-    * description/ExtendedData attributes.
-    */
-  def createKmlTable(name: String, path: String): DataFrame = {
-    val df = sources.GeoXml.readKml(spark, path)
-    df.createOrReplaceTempView(name)
-    df
-  }
-
-  /** GML scan (OGC GML 2/3 simple features, native XML reader —
-    * [[graft.sources.GeoXml]]); featureMember children become rows.
-    */
-  def createGmlTable(name: String, path: String): DataFrame = {
-    val df = sources.GeoXml.readGml(spark, path)
-    df.createOrReplaceTempView(name)
-    df
-  }
-
-  /** FlatGeobuf scan (`.fgb`, native flatbuffer reader —
-    * [[graft.sources.FlatGeobuf]]); spatial index skipped, features
-    * decode to the standard WKB row contract.
-    */
-  def createFgbTable(name: String, path: String): DataFrame = {
-    val df = sources.FlatGeobuf.read(spark, path)
-    df.createOrReplaceTempView(name)
-    df
-  }
-
-  /** ESRI Shapefile scan (`.shp`/`.zip`, native byte-layout reader —
-    * [[graft.sources.Shapefile]]); same row contract as
-    * [[createGeoTable]] with dBase attributes in place of GeoJSON
-    * properties.
-    */
-  def createShapeTable(name: String, path: String): DataFrame = {
-    val df = sources.Shapefile.read(spark, path)
-    df.createOrReplaceTempView(name)
-    df
-  }
-
-  /** GeoPackage scan (`.gpkg`, native read-only SQLite b-tree walker —
-    * [[graft.sources.GeoPackage]]); feature tables discovered via
-    * `gpkg_geometry_columns`, rows carry unwrapped standard WKB.
-    */
-  def createGpkgTable(name: String, path: String,
-      layer: Option[String] = None): DataFrame = {
-    val df = sources.GeoPackage.read(spark, path, layer)
-    df.createOrReplaceTempView(name)
-    df
-  }
-
-  /** XLSX scan (native SpreadsheetML reader — [[graft.sources.Xlsx]]);
-    * string-typed columns from one worksheet (first tab by default,
-    * `layer` selects by tab name — the reference's `layer 'Sheet 1'`),
-    * header row by default, same textual contract as the CSV layer
-    * before casts.
-    */
-  def createXlsxTable(name: String, path: String,
-      header: Boolean = true, layer: Option[String] = None): DataFrame = {
-    val df = sources.Xlsx.read(spark, path, header, layer)
-    df.createOrReplaceTempView(name)
-    df
-  }
-
-  /** Legacy-Excel .xls scan (native CFB+BIFF8 reader —
-    * [[graft.sources.Xls]]), same contract as [[createXlsxTable]]:
-    * string-typed columns from one worksheet, `layer` selects a tab by
-    * name, header row by default. BIFF5 and earlier refuse loudly.
-    */
-  def createXlsTable(name: String, path: String,
-      header: Boolean = true, layer: Option[String] = None): DataFrame = {
-    val df = sources.Xls.read(spark, path, header, layer)
-    df.createOrReplaceTempView(name)
-    df
-  }
-
-  /** http(s):// / hf:// table (reference
-    * docs/file-formats-reference.md:169-193): the URL is staged once
-    * into a local content-addressed cache, then scanned like any lake
-    * foreign table (format inferred from the URL unless given).
-    * `hf://…@~parquet/∗∗/∗.parquet` wildcard URLs expand to the full
-    * shard list via the public tree API and scan as one multi-file
-    * table.
-    */
-  def createHttpTable(name: String, url: String,
-      format: Option[String] = None,
-      options: Map[String, String] = Map.empty,
-      schema: Option[StructType] = None): DataFrame = {
-    val local = sources.HttpSource.stageAll(url)
-    createLakeTable(name, local,
-      format = format.orElse(
-        Some(inferFormat(sources.HttpSource.pathPart(url)))),
-      options = options, schema = schema)
-  }
-
-  /** Log-format scan (`format 'log', log_format 's3'` in the reference,
-    * docs/file-formats-reference.md:141-150): templated regex parse of
-    * S3 access logs over a distributed text scan. Unparseable lines
-    * surface with NULL fields rather than failing the scan.
-    */
-  def createLogTable(name: String, path: String,
-      logFormat: String = "s3"): DataFrame = {
-    require(logFormat == "s3", s"unsupported log_format $logFormat")
-    // bucket_owner bucket [time] remote_ip requester request_id operation
-    // key "request_uri" http_status error_code bytes_sent object_size
-    // total_time turn_around_time "referrer" "user_agent"
-    val pat =
-      """^(\S+) (\S+) \[([^\]]+)\] (\S+) (\S+) (\S+) (\S+) (\S+) "([^"]*)" (\S+) (\S+) (\S+) (\S+) (\S+) (\S+) "([^"]*)" "([^"]*)"""
-    val fields = Seq("bucket_owner", "bucket", "time", "remote_ip",
-      "requester", "request_id", "operation", "key", "request_uri",
-      "http_status", "error_code", "bytes_sent", "object_size",
-      "total_time", "turn_around_time", "referrer", "user_agent")
-    val raw = spark.read.text(path)
-    val parsed = fields.zipWithIndex.foldLeft(raw) { case (df, (f, i)) =>
-      df.withColumn(f,
-        when(regexp_extract(col("value"), pat, i + 1) === "", lit(null))
-          .otherwise(regexp_extract(col("value"), pat, i + 1)))
-    }.drop("value")
-      .withColumn("http_status", col("http_status").cast("int"))
-      .withColumn("bytes_sent",
-        when(col("bytes_sent") === "-", lit(null))
-          .otherwise(col("bytes_sent")).cast("long"))
-      .withColumn("object_size",
-        when(col("object_size") === "-", lit(null))
-          .otherwise(col("object_size")).cast("long"))
-    parsed.createOrReplaceTempView(name)
-    parsed
   }
 
   /** `lake_file.list('glob')` equivalent. Local/Hadoop-reachable
@@ -2416,7 +2289,7 @@ final class LakeEngine(val spark: SparkSession) {
       if (!Set("parquet", "csv", "json").contains(f.toLowerCase))
         throw new IllegalArgumentException(s"format '$f' is not recognized")
     }
-    val df = foreignFrame(url, format, options, None)
+    val df = foreignFrameStaged(url, format, options, None)._1
     df.schema.fields.map(f => (f.name, LakeEngine.pgTypeOf(f.dataType)))
       .toSeq.toDF("column_name", "column_type")
   }
@@ -2447,12 +2320,9 @@ final class LakeEngine(val spark: SparkSession) {
         "COPY TO in Iceberg format is not supported")
       case Some("delta") => throw new IllegalArgumentException(
         "COPY TO in Delta format is not supported")
-      case None if {
-        val p = sources.HttpSource.pathPart(url)
-        val f = p.substring(p.lastIndexOf('/') + 1)
-        f == "metadata.json" || f.endsWith(".metadata.json")
-      } => throw new IllegalArgumentException(
-        "COPY TO in Iceberg format is not supported")
+      case None if icebergName(sources.HttpSource.pathPart(url)) =>
+        throw new IllegalArgumentException(
+          "COPY TO in Iceberg format is not supported")
       case _ => ()
     }
     // WITH (format …, compression …) override the URL's extension
@@ -2545,17 +2415,11 @@ final class LakeEngine(val spark: SparkSession) {
       columns: Option[Seq[String]] = None): Long = {
     val url = resolveStage(url0)
     val t = table(tableName)
-    val full = t.meta.sparkSchema
+    val full = t.meta.sparkSchema.fields.toSeq
     // PG column-subset COPY: the file carries ONLY those columns (in
     // list order); the rest fill from declared/domain DEFAULTs
-    val readSchema = columns match {
-      case Some(cs) =>
-        StructType(cs.map(c => full(full.fieldNames
-          .find(_.equalsIgnoreCase(c)).getOrElse(throw
-            new IllegalArgumentException(
-              s"""column "$c" of $tableName does not exist""")))))
-      case None => full
-    }
+    val readSchema =
+      StructType(columns.fold(full)(listedFields(tableName, full, _)))
     // an explicit compression that the file extension doesn't reveal:
     // stage a correctly-suffixed symlink so the reader's codec
     // detection sees it (Spark infers CSV codecs from the extension)
@@ -2572,18 +2436,12 @@ final class LakeEngine(val spark: SparkSession) {
         link.toString
       case _ => url
     }
-    val src0 = createLakeTable(s"__copy_src_$tableName", readUrl,
-      format = options.get("format"),
-      schema = Some(readSchema), options = options - "compression")
-    val src = columns match {
-      case Some(_) =>
-        full.fields.foldLeft(src0) { (acc, f) =>
-          if (acc.columns.exists(_.equalsIgnoreCase(f.name))) acc
-          else acc.withColumn(f.name,
-            defaultExprFor(tableName, f.name, f.dataType))
-        }.select(full.fieldNames.map(col).toSeq: _*)
-      case None => src0
-    }
+    val readOptions = options - "compression"
+    validateForeignOptions(options.get("format"), readOptions)
+    val src0 = foreignFrameStaged(readUrl, options.get("format"),
+      readOptions, Some(readSchema))._1
+    val src = columns.fold(src0)(cs =>
+      alignToTable(tableName, full, src0, Some(cs)))
     val checked = applyDomainChecks(tableName, src)
     val obs = new org.apache.spark.sql.Observation()
     t.append(checked.observe(obs, count(lit(1)).as("n")))
@@ -2853,7 +2711,7 @@ final class LakeEngine(val spark: SparkSession) {
         val t = createTableAsSelect(name, loc, QueryDef.pgPlan(spark, select),
           spec)
         Seq(t.read().count()).toDF("rows_inserted")
-      case insertRe(name, rest) if partParents.contains(name) =>
+      case insertRe(name, colsOrNull, rest) if partParents.contains(name) =>
         // range-partitioned parent: route each row to its child. The
         // source executes ONCE — a single scan materializes the typed
         // rows into a staging dir partitioned BY CHILD INDEX, and the
@@ -2862,12 +2720,8 @@ final class LakeEngine(val spark: SparkSession) {
         // source again (the reference delegates routing to PG's own
         // partitioning, which is likewise single-pass)
         val (schema, keyCol) = partParents(name)
-        val df0 = QueryDef.pgPlan(spark, rest)
-        val target = schema.fieldNames.toSeq
-        val aligned =
-          if (df0.columns.length == target.length &&
-            df0.columns.toSeq != target) df0.toDF(target: _*)
-          else df0
+        val aligned = alignToTable(name, schema.fields.toSeq,
+          QueryDef.pgPlan(spark, rest), insertColumns(colsOrNull))
         require(retClause.isEmpty,
           "INSERT ... RETURNING into a partitioned parent is not " +
             "supported; insert into the member tables")
@@ -2933,24 +2787,10 @@ final class LakeEngine(val spark: SparkSession) {
           refresh(name)
           Seq(total).toDF("rows_inserted")
         } finally graft.lake.LakeFs.deleteRecursive(stageDir)
-      case insertRe(name, rest) if tables.contains(name) =>
-        val df = QueryDef.pgPlan(spark, rest)
-        val targetFields = table(name).meta.sparkSchema.fields.toSeq
-        val target = targetFields.map(_.name)
-        // VALUES lists arrive as col1..colN: align by position; a
-        // SHORTER list fills the remaining columns with their declared
-        // (or domain) DEFAULTs, PG-style
-        val aligned0 =
-          if (df.columns.length == target.length && df.columns.toSeq != target)
-            df.toDF(target: _*)
-          else if (df.columns.length < target.length) {
-            val renamed = df.toDF(target.take(df.columns.length): _*)
-            targetFields.drop(df.columns.length).foldLeft(renamed) {
-              (acc, f) => acc.withColumn(f.name,
-                defaultExprFor(name, f.name, f.dataType))
-            }
-          } else df
-        val aligned = applyDomainChecks(name, aligned0)
+      case insertRe(name, colsOrNull, rest) if tables.contains(name) =>
+        val aligned = applyDomainChecks(name,
+          alignToTable(name, table(name).meta.sparkSchema.fields.toSeq,
+            QueryDef.pgPlan(spark, rest), insertColumns(colsOrNull)))
         // the inserted-row count rides the append's write job as an
         // observed metric (the copyFrom pattern) — the SELECT feeding
         // the INSERT executes once, not count()+append
@@ -3526,6 +3366,54 @@ final class LakeEngine(val spark: SparkSession) {
     }
   }
 
+  /** A PG column list (`INSERT INTO t (a, b)`, `COPY t (a, b)`)
+    * resolved against the table's fields, case-insensitively.
+    */
+  private def listedFields(name: String, fields: Seq[StructField],
+      listed: Seq[String]): Seq[StructField] = {
+    val fs = listed.map(c => fields.find(_.name.equalsIgnoreCase(c))
+      .getOrElse(throw new IllegalArgumentException(
+        s"""column "$c" of relation "$name" does not exist""")))
+    fs.diff(fs.distinct).headOption.foreach(f => throw
+      new IllegalArgumentException(
+        s"""column "${f.name}" specified more than once"""))
+    fs
+  }
+
+  private def insertColumns(colsOrNull: String): Option[Seq[String]] =
+    Option(colsOrNull).map(_.split(",").toSeq
+      .map(_.trim.stripPrefix("\"").stripSuffix("\"")))
+
+  /** Align an INSERT or COPY source to table `name`: source column i
+    * lands in `listed(i)`, or without a list in the table's i-th column
+    * (VALUES lists arrive as col1..colN). Every column the source does
+    * not reach fills from its declared or domain DEFAULT, else NULL. A
+    * source wider than the table without a list is left to the
+    * append's by-name select.
+    */
+  private def alignToTable(name: String, fields: Seq[StructField],
+      df: DataFrame, listed: Option[Seq[String]]): DataFrame = {
+    val n = df.columns.length
+    val into = listed match {
+      case Some(cs) =>
+        val fs = listedFields(name, fields, cs)
+        require(fs.length <= n,
+          "INSERT has more target columns than expressions")
+        require(fs.length >= n,
+          "INSERT has more expressions than target columns")
+        fs
+      case None if n > fields.length => return df
+      case None => fields.take(n)
+    }
+    val named =
+      if (df.columns.toSeq == into.map(_.name)) df
+      else df.toDF(into.map(_.name): _*)
+    if (into == fields) named
+    else fields.filterNot(into.contains).foldLeft(named) { (acc, f) =>
+      acc.withColumn(f.name, defaultExprFor(name, f.name, f.dataType))
+    }.select(fields.map(f => col(f.name)): _*)
+  }
+
   /** Default expression for an omitted INSERT column: declared column
     * (or domain) DEFAULT, else typed NULL.
     */
@@ -3714,7 +3602,8 @@ final class LakeEngine(val spark: SparkSession) {
       case _ =>
         val isDml = dmlRe.pattern.matcher(body).matches()
         val readSide = body match {
-          case insertRe(_, sel) if sel.toUpperCase.startsWith("SELECT") => sel
+          case insertRe(_, _, sel) if sel.toUpperCase.startsWith("SELECT") =>
+            sel
           case deleteRe(t, whereOrNull) =>
             s"SELECT * FROM $t" +
               Option(whereOrNull).map(w => s" WHERE $w").getOrElse("")
@@ -3899,7 +3788,11 @@ final class LakeEngine(val spark: SparkSession) {
   private val queryStmtRe = ("(?is)^(SELECT|WITH|TABLE|VALUES|INSERT|UPDATE|" +
     "DELETE|COPY|EXECUTE)\\b.*").r
   // DML against managed tables, after the RETURNING split
-  private val insertRe = "(?is)^INSERT\\s+INTO\\s+(\\w+)\\s+(.+)$".r
+  // an `(a, b)` column list counts only when a query follows it, so
+  // `INSERT INTO t (SELECT …)` stays a parenthesized source
+  private val insertRe = ("(?is)^INSERT\\s+INTO\\s+(\\w+)" +
+    "(?:\\s*\\(\\s*(\"?\\w+\"?(?:\\s*,\\s*\"?\\w+\"?)*)\\s*\\)" +
+    "(?=\\s*(?:SELECT|VALUES|WITH|TABLE)\\b)\\s*|\\s+)(.+)$").r
   private val deleteRe =
     "(?is)^DELETE\\s+FROM\\s+(\\w+)(?:\\s+WHERE\\s+(.+))?$".r
   private val updateRe =

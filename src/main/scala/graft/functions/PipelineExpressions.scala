@@ -1,7 +1,8 @@
 package graft.functions
 
 import graft.operators.PipelineParams
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -942,13 +943,20 @@ case class WinnowSig(child: Expression) extends UnaryExpression {
   * `size(array_intersect(a, b))` exactly: the count of DISTINCT
   * elements of `a` that also occur in `b`, a null element counted once
   * when present on both sides, null when either array is null.
-  * Scratch tables are thread-local and reused across rows; steady-state
-  * per-row allocation is zero.
+  * Scratch tables up to 65,536 slots are thread-local and reused across
+  * rows, so steady-state per-row allocation is zero.
   */
 case class IntersectCount(left: Expression, right: Expression)
     extends BinaryExpression {
 
   override def dataType: DataType = IntegerType
+
+  // the kernel reads elements with getLong: any other element type
+  // would read the wrong bytes, so it fails analysis instead
+  override def checkInputDataTypes(): TypeCheckResult =
+    ExpectsInputTypes.checkInputDataTypes(children,
+      Seq(ArrayType(LongType), ArrayType(LongType)))
+
   override protected def withNewChildrenInternal(l: Expression,
       r: Expression): IntersectCount = copy(left = l, right = r)
 
@@ -964,6 +972,9 @@ case class IntersectCount(left: Expression, right: Expression)
 object IntersectCount {
   // open-addressing scratch: values + state (0 empty, 1 present,
   // 2 already counted); grown on demand, reused across rows per thread
+  // up to MaxPooled slots, so one huge array does not pin its scratch
+  // for the life of the executor thread
+  private val MaxPooled = 1 << 16
   private val tableTL = new ThreadLocal[Array[Long]] {
     override def initialValue(): Array[Long] = new Array[Long](64)
   }
@@ -985,9 +996,10 @@ object IntersectCount {
     if (na == 0 || nb == 0) return 0
     var cap = 16
     while (cap < nb * 2) cap <<= 1
-    var table = tableTL.get()
-    var state = stateTL.get()
-    if (table.length < cap) {
+    val pooled = cap <= MaxPooled
+    var table = if (pooled) tableTL.get() else new Array[Long](cap)
+    var state = if (pooled) stateTL.get() else new Array[Byte](cap)
+    if (table.length < cap) { // a pooled table outgrown
       table = new Array[Long](cap)
       state = new Array[Byte](cap)
       tableTL.set(table)

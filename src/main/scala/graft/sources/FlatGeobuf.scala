@@ -42,26 +42,11 @@ object FlatGeobuf {
 
   def read(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
-    val hPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val status =
-      if (fs.isDirectory(hPath)) fs.listStatus(hPath).toSeq
-      else Option(fs.globStatus(hPath)).map(_.toSeq).getOrElse(Seq.empty)
-    val files = status.map(_.getPath.toString)
-      .filter(_.toLowerCase.endsWith(".fgb")).sorted
-    require(files.nonEmpty, s"no .fgb files under $path")
-    val confB = spark.sparkContext.broadcast(
-      new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration))
-    spark.sparkContext.parallelize(files, files.length)
-      .flatMap { file =>
-        val p = new org.apache.hadoop.fs.Path(file)
-        val in = p.getFileSystem(confB.value.value).open(p)
-        val bytes = try in.readAllBytes() finally in.close()
-        features(bytes).map { case (wkb, gt, attrs) =>
-          (wkb, gt, attrs, file)
-        }
+    SerializableHadoopConf.perFile(spark, path, Seq(".fgb")) { (fs, p) =>
+      features(SerializableHadoopConf.readAll(fs, p)).map {
+        case (wkb, gt, attrs) => (wkb, gt, attrs, p.toString)
       }
-      .toDF("geometry", "geom_type", "attributes", "filename")
+    }.toDF("geometry", "geom_type", "attributes", "filename")
   }
 
   // ------------------------------------------- flatbuffers primitives

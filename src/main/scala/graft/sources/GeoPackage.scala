@@ -37,29 +37,11 @@ object GeoPackage {
   def read(spark: SparkSession, path: String,
       layer: Option[String] = None): DataFrame = {
     import spark.implicits._
-    val hPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val status =
-      if (fs.isDirectory(hPath)) fs.listStatus(hPath).toSeq
-      else Option(fs.globStatus(hPath)).map(_.toSeq).getOrElse(Seq.empty)
-    val files = status.map(_.getPath.toString)
-      .filter(_.toLowerCase.endsWith(".gpkg")).sorted
-    require(files.nonEmpty, s"no .gpkg files under $path")
-    // ship the session's Hadoop conf to executors (same as Spark's own
-    // file sources): a fresh Configuration() would drop credentials /
-    // scheme settings needed for e.g. s3a paths
-    val confB = spark.sparkContext.broadcast(
-      new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration))
-    spark.sparkContext.parallelize(files, files.length)
-      .flatMap { file =>
-        val p = new org.apache.hadoop.fs.Path(file)
-        val in = p.getFileSystem(confB.value.value).open(p)
-        val bytes = try in.readAllBytes() finally in.close()
-        features(bytes, layer).map { case (l, wkb, gt, attrs) =>
-          (l, wkb, gt, attrs, file)
-        }
+    SerializableHadoopConf.perFile(spark, path, Seq(".gpkg")) { (fs, p) =>
+      features(SerializableHadoopConf.readAll(fs, p), layer).map {
+        case (l, wkb, gt, attrs) => (l, wkb, gt, attrs, p.toString)
       }
-      .toDF("layer", "geometry", "geom_type", "attributes", "filename")
+    }.toDF("layer", "geometry", "geom_type", "attributes", "filename")
   }
 
   /** All feature rows of a GeoPackage (optionally one layer). */

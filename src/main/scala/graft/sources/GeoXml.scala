@@ -36,34 +36,21 @@ object GeoXml {
   // ---------------------------------------------------------- scan
 
   def readKml(spark: SparkSession, path: String): DataFrame =
-    readFiles(spark, path, Set(".kml", ".kmz"), bytes => kmlFeatures(bytes))
+    readFiles(spark, path, Seq(".kml", ".kmz"), bytes => kmlFeatures(bytes))
 
   def readGml(spark: SparkSession, path: String): DataFrame =
-    readFiles(spark, path, Set(".gml"), bytes => gmlFeatures(bytes))
+    readFiles(spark, path, Seq(".gml"), bytes => gmlFeatures(bytes))
 
   private def readFiles(spark: SparkSession, path: String,
-      exts: Set[String],
+      exts: Seq[String],
       parse: Array[Byte] => Seq[(Array[Byte], String, Map[String, String])])
       : DataFrame = {
     import spark.implicits._
-    val hPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val status =
-      if (fs.isDirectory(hPath)) fs.listStatus(hPath).toSeq
-      else Option(fs.globStatus(hPath)).map(_.toSeq).getOrElse(Seq.empty)
-    val files = status.map(_.getPath.toString)
-      .filter(p => exts.exists(ext => p.toLowerCase.endsWith(ext))).sorted
-    require(files.nonEmpty, s"no ${exts.mkString("/")} files under $path")
-    val confB = spark.sparkContext.broadcast(
-      new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration))
-    spark.sparkContext.parallelize(files, files.length)
-      .flatMap { file =>
-        val p = new org.apache.hadoop.fs.Path(file)
-        val in = p.getFileSystem(confB.value.value).open(p)
-        val bytes = try in.readAllBytes() finally in.close()
-        parse(bytes).map { case (wkb, gt, attrs) => (wkb, gt, attrs, file) }
+    SerializableHadoopConf.perFile(spark, path, exts) { (fs, p) =>
+      parse(SerializableHadoopConf.readAll(fs, p)).map {
+        case (wkb, gt, attrs) => (wkb, gt, attrs, p.toString)
       }
-      .toDF("geometry", "geom_type", "attributes", "filename")
+    }.toDF("geometry", "geom_type", "attributes", "filename")
   }
 
   // ------------------------------------------------------------ xml

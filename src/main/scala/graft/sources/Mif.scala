@@ -32,33 +32,18 @@ object Mif {
 
   def read(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
-    val hPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val status =
-      if (fs.isDirectory(hPath)) fs.listStatus(hPath).toSeq
-      else Option(fs.globStatus(hPath)).map(_.toSeq).getOrElse(Seq.empty)
-    val files = status.map(_.getPath.toString)
-      .filter(_.toLowerCase.endsWith(".mif")).sorted
-    require(files.nonEmpty, s"no .mif files under $path")
-    val confB = spark.sparkContext.broadcast(
-      new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration))
-    spark.sparkContext.parallelize(files, files.length)
-      .flatMap { file =>
-        val p = new org.apache.hadoop.fs.Path(file)
-        val f = p.getFileSystem(confB.value.value)
-        def readAll(pp: org.apache.hadoop.fs.Path): String = {
-          val in = f.open(pp)
-          try new String(in.readAllBytes(),
-            java.nio.charset.StandardCharsets.UTF_8)
-          finally in.close()
-        }
-        val base = file.substring(0, file.length - 4)
-        val midP = Seq(".mid", ".MID").map(e =>
-          new org.apache.hadoop.fs.Path(base + e)).find(f.exists)
-        parse(readAll(p), midP.map(readAll)).map {
-          case (wkb, gtype, props) => (wkb, gtype, props, file)
-        }
-      }.toDF("geometry", "geom_type", "properties", "filename")
+    SerializableHadoopConf.perFile(spark, path, Seq(".mif")) { (f, p) =>
+      def readAll(pp: org.apache.hadoop.fs.Path): String =
+        new String(SerializableHadoopConf.readAll(f, pp),
+          java.nio.charset.StandardCharsets.UTF_8)
+      val file = p.toString
+      val base = file.substring(0, file.length - 4)
+      val midP = Seq(".mid", ".MID").map(e =>
+        new org.apache.hadoop.fs.Path(base + e)).find(f.exists)
+      parse(readAll(p), midP.map(readAll)).map {
+        case (wkb, gtype, props) => (wkb, gtype, props, file)
+      }
+    }.toDF("geometry", "geom_type", "properties", "filename")
   }
 
   /** Parse one MIF document (+ optional MID attribute text). */

@@ -31,25 +31,11 @@ object OpenDrive {
   def read(spark: SparkSession, path: String,
       step: Double = 1.0): DataFrame = {
     import spark.implicits._
-    val hPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val status =
-      if (fs.isDirectory(hPath)) fs.listStatus(hPath).toSeq
-      else Option(fs.globStatus(hPath)).map(_.toSeq).getOrElse(Seq.empty)
-    val files = status.map(_.getPath.toString)
-      .filter(_.toLowerCase.endsWith(".xodr")).sorted
-    require(files.nonEmpty, s"no .xodr files under $path")
-    val confB = spark.sparkContext.broadcast(
-      new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration))
-    spark.sparkContext.parallelize(files, files.length)
-      .flatMap { file =>
-        val p = new org.apache.hadoop.fs.Path(file)
-        val in = p.getFileSystem(confB.value.value).open(p)
-        val bytes = try in.readAllBytes() finally in.close()
-        parse(bytes, step).map { case (wkb, gt, attrs) =>
-          (wkb, gt, attrs, file)
-        }
-      }.toDF("geometry", "geom_type", "properties", "filename")
+    SerializableHadoopConf.perFile(spark, path, Seq(".xodr")) { (fs, p) =>
+      parse(SerializableHadoopConf.readAll(fs, p), step).map {
+        case (wkb, gt, attrs) => (wkb, gt, attrs, p.toString)
+      }
+    }.toDF("geometry", "geom_type", "properties", "filename")
   }
 
   /** Parse one .xodr document into per-road sampled rows. */

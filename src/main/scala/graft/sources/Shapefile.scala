@@ -39,35 +39,11 @@ object Shapefile {
     */
   def read(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
-    val hPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val status =
-      if (fs.isDirectory(hPath)) fs.listStatus(hPath).toSeq
-      else Option(fs.globStatus(hPath)).map(_.toSeq).getOrElse(Seq.empty)
-    val files = status.map(_.getPath.toString).filter { p =>
-      val l = p.toLowerCase
-      l.endsWith(".shp") || l.endsWith(".zip")
-    }.sorted
-    require(files.nonEmpty, s"no .shp/.zip files under $path")
-    // ship the session's Hadoop conf to executors (same as Spark's own
-    // file sources): a fresh Configuration() would drop credentials /
-    // scheme settings needed for e.g. s3a paths
-    val confB = spark.sparkContext.broadcast(
-      new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration))
-    spark.sparkContext.parallelize(files, files.length)
-      .flatMap { file =>
-        val p = new org.apache.hadoop.fs.Path(file)
-        val f = p.getFileSystem(confB.value.value)
-        def readAll(pp: org.apache.hadoop.fs.Path): Array[Byte] = {
-          val in = f.open(pp)
-          try {
-            val out = new java.io.ByteArrayOutputStream()
-            val buf = new Array[Byte](64 * 1024)
-            var n = in.read(buf)
-            while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
-            out.toByteArray
-          } finally in.close()
-        }
+    SerializableHadoopConf.perFile(spark, path, Seq(".shp", ".zip")) {
+      (f, p) =>
+        def readAll(pp: org.apache.hadoop.fs.Path) =
+          SerializableHadoopConf.readAll(f, pp)
+        val file = p.toString
         val (shp, dbf, cpg) =
           if (file.toLowerCase.endsWith(".zip")) unzip(readAll(p))
           else {
@@ -84,8 +60,7 @@ object Shapefile {
         records(shp, dbf, cpg).map { case (wkb, gtype, attrs) =>
           (wkb, gtype, attrs, file)
         }
-      }
-      .toDF("geometry", "geom_type", "attributes", "filename")
+    }.toDF("geometry", "geom_type", "attributes", "filename")
   }
 
   /** Decode one shapefile (+ optional dbf, optional .cpg charset hint)

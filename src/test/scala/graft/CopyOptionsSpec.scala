@@ -73,6 +73,15 @@ class CopyOptionsSpec extends AnyFunSuite {
     e.dropTable("sub_t")
   }
 
+  test("COPY FROM reads its source without leaving a session view") {
+    val e = engine("noview")
+    val f = tmp("rows.parquet")
+    e.sql(s"COPY ct_noview TO '$f'")
+    assert(e.sql(s"COPY ct_noview FROM '$f'").head.getLong(0) == 1)
+    assert(e.table("ct_noview").read().count() == 2)
+    assert(!spark.catalog.tableExists("__copy_src_ct_noview"))
+  }
+
   test("compression override: gzip despite a bare .csv name, both ways") {
     val e = engine("gz")
     val dir = tmp("gzdir")

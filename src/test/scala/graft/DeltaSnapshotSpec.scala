@@ -56,7 +56,7 @@ class DeltaSnapshotSpec extends AnyFunSuite {
 
     // facade registration
     val e = LakeEngine(spark)
-    e.createDeltaTable("delta_region", dir)
+    e.createLakeTable("delta_region", dir, format = Some("delta"))
     assert(spark.sql("SELECT count(*) FROM delta_region").head.getLong(0) ==
       back.count())
   }

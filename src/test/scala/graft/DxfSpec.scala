@@ -69,7 +69,7 @@ class DxfSpec extends AnyFunSuite {
       0 -> "POINT", 8 -> "l1", 10 -> "7", 20 -> "8") ++ footer)
       .map(x => (x._1, x._2)): _*))
     val e = new LakeEngine(spark)
-    val df = e.createDxfTable("dxf_t", p)
+    val df = e.createLakeTable("dxf_t", p, format = Some("gdal"))
     val r = df.collect()
     assert(r.length == 1)
     assert(r(0).getAs[String]("geom_type") == "ST_Point")

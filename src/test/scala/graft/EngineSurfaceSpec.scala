@@ -24,7 +24,8 @@ class EngineSurfaceSpec extends AnyFunSuite {
       "\"-\" \"S3Console/0.4\""
     Files.write(dir.resolve("access.log"),
       (line + "\nnot a log line\n").getBytes)
-    val df = e.createLogTable("s3log", dir.toString + "/*.log")
+    val df = e.createLakeTable("s3log", dir.toString + "/*.log",
+      format = Some("log"), options = Map("log_format" -> "s3"))
     val ok = df.filter(col("bucket") === "mybucket").collect()
     assert(ok.length == 1)
     val r = ok.head

@@ -299,7 +299,8 @@ class FlatGeobufSpec extends AnyFunSuite {
     val spark = SparkTestSession.spark
     val dir = Files.createTempDirectory("fgb")
     Files.write(dir.resolve("a.fgb"), withIdx)
-    val df = LakeEngine(spark).createFgbTable("fgb_t", dir.toString)
+    val df = LakeEngine(spark).createLakeTable("fgb_t", dir.toString,
+      format = Some("gdal"))
     assert(df.count() == 2)
     graft.functions.SpatialFunctions.register(spark)
     assert(spark.sql(

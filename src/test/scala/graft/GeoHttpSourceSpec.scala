@@ -30,7 +30,7 @@ class GeoHttpSourceSpec extends AnyFunSuite {
     Files.writeString(Paths.get(dir, "bare.geojson"),
       """{"type":"LineString","coordinates":[[0,0],[3,4]]}""")
 
-    val df = engine.createGeoTable("geo", dir)
+    val df = engine.createLakeTable("geo", dir, format = Some("gdal"))
     assert(df.count() == 3)
 
     functions.PgFunctions.register(spark)
@@ -93,12 +93,12 @@ class GeoHttpSourceSpec extends AnyFunSuite {
       // unique query param defeats any cache left by earlier runs
       val url = s"http://127.0.0.1:${server.getAddress.getPort}/people.csv" +
         s"?v=${System.nanoTime()}"
-      val df = engine.createHttpTable("people_http", url)
+      val df = engine.createLakeTable("people_http", url)
       assert(df.count() == 2)
       assert(df.columns.toSeq == Seq("id", "name"))
       assert(hits.get() == 1)
       // second table over the same URL: served from the local cache
-      engine.createHttpTable("people_http2", url)
+      engine.createLakeTable("people_http2", url)
       assert(spark.table("people_http2").count() == 2)
       assert(hits.get() == 1)
     } finally server.stop(0)
@@ -177,7 +177,7 @@ class GeoHttpSourceSpec extends AnyFunSuite {
     System.setProperty("graft.hf.endpoint",
       s"http://127.0.0.1:${server.getAddress.getPort}")
     try {
-      val df = engine.createHttpTable("hf_multi",
+      val df = engine.createLakeTable("hf_multi",
         "hf://datasets/org/multi@~parquet/**/*.parquet")
       assert(df.count() == 3) // both shards, json ignored
       assert(df.select("id").collect().map(_.getLong(0)).sorted.toSeq ==

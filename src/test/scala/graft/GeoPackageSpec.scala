@@ -56,11 +56,11 @@ class GeoPackageSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("gpkg")
     Files.copy(fixture, dir.resolve("sample.gpkg"))
     val e = LakeEngine(spark)
-    val all = e.createGpkgTable("gpkg_t", dir.toString)
+    val all = e.createLakeTable("gpkg_t", dir.toString, format = Some("gdal"))
     assert(all.count() == 2005)
     assert(all.select("layer").distinct().count() == 3)
-    val places = e.createGpkgTable("gpkg_places", dir.toString,
-      layer = Some("places"))
+    val places = e.createLakeTable("gpkg_places", dir.toString,
+      format = Some("gdal"), options = Map("layer" -> "places"))
     assert(places.count() == 3)
     graft.functions.SpatialFunctions.register(spark)
     val area = spark.sql(

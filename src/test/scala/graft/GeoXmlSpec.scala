@@ -79,7 +79,8 @@ class GeoXmlSpec extends AnyFunSuite {
     z.write(kmlDoc.getBytes("UTF-8"))
     z.close()
     Files.write(dir.resolve("b.kmz"), bos.toByteArray)
-    val df = LakeEngine(spark).createKmlTable("kml_t", dir.toString)
+    val df = LakeEngine(spark).createLakeTable("kml_t", dir.toString,
+      format = Some("gdal"))
     assert(df.count() == 8) // both files, four placemarks each
     assert(df.filter(org.apache.spark.sql.functions
       .col("attributes")("name") === "hq").count() == 2)
@@ -154,7 +155,8 @@ class GeoXmlSpec extends AnyFunSuite {
     }
     Files.write(Paths.get(dir.toString, "pts.geojsonl"),
       (lines.mkString("\n") + "\n\n").getBytes("UTF-8"))
-    val df = LakeEngine(spark).createGeoSeqTable("gjs_t", dir.toString)
+    val df = LakeEngine(spark).createLakeTable("gjs_t", dir.toString,
+      format = Some("gdal"))
     assert(df.count() == 100)
     graft.functions.SpatialFunctions.register(spark)
     val s = spark.sql(

@@ -327,7 +327,7 @@ class IcebergInteropSpec extends AnyFunSuite {
       LakeEngine.tempLocation("extpin"), "ext_pin_src",
       Seq(1L, 2L).toDF("a"))
     val meta1 = graft.lake.IcebergExport.export(t)
-    e.createExternalIceberg("ext_pin", meta1)
+    e.createLakeTable("ext_pin", meta1, format = Some("iceberg"))
     assert(spark.sql("SELECT count(*) FROM ext_pin").head.getLong(0) == 2)
 
     t.append(Seq(3L, 4L, 5L).toDF("a"))
@@ -336,7 +336,7 @@ class IcebergInteropSpec extends AnyFunSuite {
     // still pinned to the old snapshot until the path is updated
     assert(spark.sql("SELECT count(*) FROM ext_pin").head.getLong(0) == 2)
     // repoint: the ALTER FOREIGN TABLE ... OPTIONS (SET path) analogue
-    e.createExternalIceberg("ext_pin", meta2)
+    e.createLakeTable("ext_pin", meta2, format = Some("iceberg"))
     assert(spark.sql("SELECT count(*) FROM ext_pin").head.getLong(0) == 5)
   }
 }

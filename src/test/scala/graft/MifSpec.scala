@@ -94,7 +94,7 @@ class MifSpec extends AnyFunSuite {
     Files.write(dir.resolve("t.mif"), mifDoc.getBytes(UTF_8))
     Files.write(dir.resolve("t.mid"), midDoc.getBytes(UTF_8))
     val e = LakeEngine(spark)
-    val df = e.createMifTable("mif_t", dir.toString)
+    val df = e.createLakeTable("mif_t", dir.toString, format = Some("gdal"))
     assert(df.count() == 7)
     val pt = spark.sql(
       "SELECT st_x(st_geomfromwkb(geometry)) FROM mif_t " +

@@ -1535,4 +1535,21 @@ class PipelineSpec extends AnyFunSuite {
     assert(sel.count(_ >= 100) >= 30,
       s"heavy-weight rows under-sampled: ${sel.count(_ >= 100)}/40")
   }
+
+  test("IntersectCount: array<bigint> only, huge arrays keep their answer") {
+    import org.apache.spark.sql.GraftBridge.{column, expression}
+    def inter(a: String, b: String) = column(graft.functions.IntersectCount(
+      expression(col(a)), expression(col(b))))
+    val ints = spark.sql("SELECT array(1, 2, 3) AS a, array(2, 3) AS b")
+    val bad = intercept[org.apache.spark.sql.AnalysisException](
+      ints.select(inter("a", "b")).collect())
+    assert(bad.getMessage.contains("ARRAY<BIGINT>"))
+    val longs = ints.select(col("a").cast("array<bigint>").as("a"),
+      col("b").cast("array<bigint>").as("b"))
+    assert(longs.select(inter("a", "b")).head.getInt(0) == 2)
+    // above the pooled scratch size: per-call tables, same answer
+    val big = spark.range(1).selectExpr(
+      "sequence(0L, 100000L) AS a", "sequence(50000L, 150000L) AS b")
+    assert(big.select(inter("a", "b")).head.getInt(0) == 50001)
+  }
 }

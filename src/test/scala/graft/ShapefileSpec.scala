@@ -176,8 +176,8 @@ class ShapefileSpec extends AnyFunSuite {
     z.close()
     Files.write(dir.resolve("b.zip"), bos.toByteArray)
 
-    val df = new LakeEngine(spark).createShapeTable(
-      "shape_t", dir.toString)
+    val df = new LakeEngine(spark).createLakeTable(
+      "shape_t", dir.toString, format = Some("gdal"))
     assert(df.count() == 4) // both files, two records each
     val ids = df.selectExpr("attributes['ID']").collect()
       .map(_.getString(0)).sorted.toSeq

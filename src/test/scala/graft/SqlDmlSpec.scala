@@ -324,4 +324,33 @@ class SqlDmlSpec extends AnyFunSuite {
     val row = e.sql("SELECT a, b FROM r_swap").head
     assert(row.getLong(0) == 2 && row.getLong(1) == 1)
   }
+
+  test("column-list INSERT: in order, reordered and subset, SELECT and VALUES") {
+    val e = LakeEngine(spark)
+    e.sql("CREATE TABLE ins_cols (id bigint, v int DEFAULT 7, r boolean)")
+    def rows = e.sql("SELECT id, v, r FROM ins_cols ORDER BY id").collect()
+      .map(r => (r.getLong(0), Option(r.get(1)), Option(r.get(2)))).toSeq
+    assert(e.sql("INSERT INTO ins_cols (id, v, r) SELECT 1, 3, false")
+      .head.getLong(0) == 1)
+    assert(e.sql("INSERT INTO ins_cols (r, id, v) VALUES (true, 2, 4)")
+      .head.getLong(0) == 1)
+    assert(e.sql("INSERT INTO ins_cols (id, r) SELECT 3, true").head
+      .getLong(0) == 1)
+    assert(e.sql("INSERT INTO ins_cols(v, id) VALUES (5, 4), (6, 5)").head
+      .getLong(0) == 2)
+    assert(rows == Seq(
+      (1L, Some(3), Some(false)), (2L, Some(4), Some(true)),
+      (3L, Some(7), Some(true)), (4L, Some(5), None), (5L, Some(6), None)))
+    // a parenthesized source is still a query, not a column list
+    assert(e.sql("INSERT INTO ins_cols (SELECT 6, 1, true)").head
+      .getLong(0) == 1)
+    val unknown = intercept[IllegalArgumentException](
+      e.sql("INSERT INTO ins_cols (id, x) SELECT 7, 1"))
+    assert(unknown.getMessage ==
+      "column \"x\" of relation \"ins_cols\" does not exist")
+    val short = intercept[IllegalArgumentException](
+      e.sql("INSERT INTO ins_cols (id, v) SELECT 7"))
+    assert(short.getMessage.contains("more target columns than expressions"))
+    e.dropTable("ins_cols")
+  }
 }

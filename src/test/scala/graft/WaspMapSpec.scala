@@ -40,8 +40,8 @@ class WaspMapSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft_wasp")
     java.nio.file.Files.write(dir.resolve("t.map"),
       doc.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    val df = LakeEngine(spark).createWaspMapTable("wasp_t",
-      dir.resolve("t.map").toString)
+    val df = LakeEngine(spark).createLakeTable("wasp_t",
+      dir.resolve("t.map").toString, format = Some("gdal"))
     assert(df.count() == 3)
     // declared 3 points, only 2 present
     val short = doc.split("\n").take(4).mkString("\n") +

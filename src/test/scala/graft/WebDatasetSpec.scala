@@ -83,7 +83,7 @@ class WebDatasetSpec extends AnyFunSuite {
   test("engine view over shards") {
     val dir = java.nio.file.Files.createTempDirectory("graft_wds4").toString
     WebDataset.write(fixture(8), "doc_id", "parts", dir, 3)
-    LakeEngine(spark).createWebDatasetTable("wds_t", dir)
+    WebDataset.read(spark, dir).createOrReplaceTempView("wds_t")
     val got = spark.sql(
       """SELECT sample_id, decode(components['txt'], 'UTF-8') AS t
         |FROM wds_t ORDER BY sample_id""".stripMargin).collect()

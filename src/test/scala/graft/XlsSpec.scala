@@ -299,7 +299,8 @@ class XlsSpec extends AnyFunSuite {
     Files.write(dir.resolve("t.xls"), bigXls)
     val e = LakeEngine(spark)
 
-    val df = e.createXlsTable("xls_t", dir.resolve("t.xls").toString)
+    val df = e.createLakeTable("xls_t", dir.resolve("t.xls").toString,
+      format = Some("gdal"))
     assert(df.columns.toSeq == Seq("id", "name", "val"))
     assert(df.count() == 4)
     assert(spark.sql(
@@ -309,12 +310,14 @@ class XlsSpec extends AnyFunSuite {
       .head().getString(0) == "split_ΩΩΩ")
 
     // layer selects the second tab; header=false names columns c1..
-    val extra = e.createXlsTable("xls_extra",
-      dir.resolve("t.xls").toString, layer = Some("extra"))
+    val extra = e.createLakeTable("xls_extra",
+      dir.resolve("t.xls").toString, format = Some("gdal"),
+      options = Map("layer" -> "extra"))
     assert(extra.columns.toSeq == Seq("k"))
     assert(extra.head().getString(0) == "7")
-    val raw = e.createXlsTable("xls_raw",
-      dir.resolve("t.xls").toString, header = false, layer = Some("extra"))
+    val raw = e.createLakeTable("xls_raw",
+      dir.resolve("t.xls").toString, format = Some("gdal"),
+      options = Map("header" -> "false", "layer" -> "extra"))
     assert(raw.columns.toSeq == Seq("c1"))
     assert(raw.count() == 2)
   }

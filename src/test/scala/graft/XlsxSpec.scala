@@ -66,7 +66,7 @@ class XlsxSpec extends AnyFunSuite {
       "xl/sharedStrings.xml" -> sharedXml,
       "xl/worksheets/sheet1.xml" -> sheetXml))
     val e = LakeEngine(spark)
-    val df = e.createXlsxTable("sheet_t", f.toString)
+    val df = e.createLakeTable("sheet_t", f.toString, format = Some("gdal"))
     assert(df.columns.toSeq == Seq("name", "score", "ok_"))
     assert(df.count() == 2)
     val r = spark.sql(
