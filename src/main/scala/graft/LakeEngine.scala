@@ -988,13 +988,15 @@ final class LakeEngine(val spark: SparkSession) {
     }
 
   /** Family view: own rows + descendants, projected onto this table's
-    * columns (PG parent scans see the parent's column set).
+    * columns (PG parent scans see the parent's column set). `own`
+    * supplies each member's own frame.
     */
-  private def familyFrame(name: String): DataFrame = {
-    val self = ownRows(name)
+  private def familyFrame(name: String, own: String => DataFrame)
+      : DataFrame = {
+    val self = own(name)
     val cols = self.columns.toSeq
     childrenOf(name).foldLeft(self) { (acc, c) =>
-      acc.unionAll(familyFrame(c).select(cols.map(col): _*))
+      acc.unionAll(familyFrame(c, own).select(cols.map(col): _*))
     }
   }
 
@@ -1005,15 +1007,18 @@ final class LakeEngine(val spark: SparkSession) {
   private def refreshFamilyViews(name: String): Unit = {
     val ancestors = Iterator.iterate(inheritsOf.get(name))(
       _.flatMap(inheritsOf.get)).takeWhile(_.isDefined).flatten.toSeq
+    // each member's own frame is built once and shared by its ONLY view
+    // and every family union holding it, so both views plan the one
+    // pruning index that scanReport reads
+    val own = scala.collection.mutable.Map.empty[String, DataFrame]
+    def ownOf(n: String): DataFrame = own.getOrElseUpdate(n, ownRows(n))
     (familyOf(name) ++ ancestors).foreach { n =>
       if (tables.contains(n) || partParents.contains(n)) {
         // PG `FROM ONLY parent`: the parent's OWN rows, no descendants
         // (plans/OnlyRewrite maps the syntax onto this view; registered
-        // for childless tables too — PG's ONLY is a no-op there).
-        // Registered FIRST so the family view's pruning index is the
-        // table's LAST-built one (scanReport reads the latest index)
-        ownRows(n).createOrReplaceTempView(s"__only_$n")
-        familyFrame(n).createOrReplaceTempView(n)
+        // for childless tables too — PG's ONLY is a no-op there)
+        ownOf(n).createOrReplaceTempView(s"__only_$n")
+        familyFrame(n, ownOf).createOrReplaceTempView(n)
         tables.get(n).foreach(t =>
           try lake.TableMetadata.currentVersion(t.location)
             .foreach(v => viewVersions.put(n, v))
@@ -3388,8 +3393,7 @@ final class LakeEngine(val spark: SparkSession) {
     * lands in `listed(i)`, or without a list in the table's i-th column
     * (VALUES lists arrive as col1..colN). Every column the source does
     * not reach fills from its declared or domain DEFAULT, else NULL. A
-    * source wider than the table without a list is left to the
-    * append's by-name select.
+    * source wider than the table without a list is refused, like PG.
     */
   private def alignToTable(name: String, fields: Seq[StructField],
       df: DataFrame, listed: Option[Seq[String]]): DataFrame = {
@@ -3402,8 +3406,10 @@ final class LakeEngine(val spark: SparkSession) {
         require(fs.length >= n,
           "INSERT has more expressions than target columns")
         fs
-      case None if n > fields.length => return df
-      case None => fields.take(n)
+      case None =>
+        require(n <= fields.length,
+          "INSERT has more expressions than target columns")
+        fields.take(n)
     }
     val named =
       if (df.columns.toSeq == into.map(_.name)) df

@@ -12,7 +12,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * pg_lake_iceberg/src/iceberg/write_manifest.c): the encoding of
   * per-file lower/upper bounds inside manifest `data_file` entries.
   * Bridges our stat strings (Spark `cast(col AS string)` output, see
-  * [[graft.lake.LakeTable]] collectStats) to and from the spec bytes —
+  * [[graft.lake.LakeWriteStats]]) to and from the spec bytes —
   * both directions go through Spark's own Cast so the round trip is
   * exactly the one pruning already trusts.
   */
@@ -53,7 +53,7 @@ object IcebergValues {
   }
 
   /** Iceberg single-value bytes → stat string (Cast-parseable, matching
-    * what collectStats would have produced for the same value).
+    * what a lake write reports for the same value).
     */
   def fromBytes(bytes: Array[Byte], dt: DataType): Option[String] = dt match {
     case BooleanType => Some((bytes(0) != 0).toString)

@@ -1,7 +1,8 @@
 package graft.lake
 
 import java.util.UUID
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.BoundReference
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import scala.jdk.CollectionConverters._
@@ -22,8 +23,8 @@ import scala.jdk.CollectionConverters._
   * partitioned tables fan rows out by their transform values (one
   * exact, capped count of the partition tuples packs them into
   * contiguous buckets, one file each), written as immutable parquet;
-  * per-file stats are collected in one distributed aggregation over the
-  * written files, then a new snapshot commits via the optimistic
+  * every file reports its own stats while it is written
+  * ([[LakeWriteStats]]), then a new snapshot commits via the optimistic
   * metadata CAS. Readers resolve `current` once per scan — snapshot
   * isolation, writers never block readers.
   */
@@ -583,8 +584,8 @@ final class LakeTable(val spark: SparkSession, val location: String) {
 
     // ONE scan of the partial candidates writes every matched (file,
     // pos) pair to a position-delete batch; the per-file counts that
-    // drive MoR-vs-CoW classification come from the WRITTEN batch (a
-    // re-read of the small delete parquet, not a second candidate scan)
+    // drive MoR-vs-CoW classification are reported by the batch's own
+    // write
     val posEntries: Seq[FileEntry] =
       if (partial.isEmpty) Nil
       else {
@@ -594,21 +595,21 @@ final class LakeTable(val spark: SparkSession, val location: String) {
             col("__rid_ri").as("pos"))
         writeDeleteEntries(m, posDf, partial.map(norm))
       }
-    // per-file position counts of the EXISTING delete files and of this
-    // op's batch in ONE job, each row tagged by its set (delete files
-    // are threshold-bounded small, so the counts collect to the driver)
-    val (existing, matched): (Map[String, Long], Map[String, Long]) =
-      if (dels.isEmpty && posEntries.isEmpty) (Map.empty, Map.empty)
-      else {
-        val counts = readDeletePositions(dels).withColumn("batch", lit(false))
-          .unionAll(readDeletePositions(posEntries)
-            .withColumn("batch", lit(true)))
-          .groupBy("batch", "file_path").count().collect()
-        val (inBatch, prior) = counts.partition(_.getBoolean(0))
-        def byFile(rs: Array[Row]) =
-          rs.map(r => r.getString(1) -> r.getLong(2)).toMap
-        (byFile(prior), byFile(inBatch))
-      }
+    // per-file position counts: this op's batch from its write, the
+    // EXISTING delete files from their metadata — a file with one
+    // target holds only that target's rows; only a legacy entry with
+    // several targets and no per-target counts is counted by a job
+    // (delete files are threshold-bounded small)
+    def sumByFile(counts: Seq[(String, Long)]): Map[String, Long] =
+      counts.groupMapReduce(_._1)(_._2)(_ + _)
+    val matched = sumByFile(posEntries.flatMap(_.targetRows.toSeq.flatten))
+    val (known, uncounted) = dels.partition(d =>
+      d.targetRows.isDefined || d.targets.size == 1)
+    val existing = sumByFile(known.flatMap(d =>
+      d.targetRows.getOrElse(Map(d.targets.head -> d.rows))) ++
+      (if (uncounted.isEmpty) Nil
+      else readDeletePositions(uncounted).groupBy("file_path").count()
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toSeq))
     def already(f: FileEntry): Long = existing.getOrElse(norm(f), 0L)
 
     // object-store-catalog tables re-export Iceberg metadata on every
@@ -700,18 +701,19 @@ final class LakeTable(val spark: SparkSession, val location: String) {
   }
 
   /** Write position-delete rows as parquet and return their content=1
-    * entries (rows read from the parquet footers — no Spark job).
+    * entries; each file reports its rows per target data file while it
+    * is written.
     */
   private def writeDeleteEntries(m: TableMetadata, posDf: DataFrame,
       targets: Seq[String]): Seq[FileEntry] = {
     val dir = LakeFs.child(location, "data/del-" + UUID.randomUUID())
-    posDf.write.mode("errorifexists").parquet(dir)
-    val conf = org.apache.spark.sql.GraftBridge.sessionHadoopConf(spark)
-    LakeFs.listFilesRecursive(dir, ".parquet").map { case (p, bytes) =>
-      val n = LakeTable.withFooter(p, conf)(_.getRecordCount)
-      FileEntry(p, n, bytes, m.currentSchemaVersion,
-        Map.empty, Map.empty, Nil, content = 1, deleteTargets = targets)
-    }.filter(_.rows > 0)
+    val reports = LakeWriteStats.save(spark, posDf.write.mode("errorifexists"),
+      dir, WriteStatsSpec(0, Nil, countBy = Some(0)))
+    LakeWriteStats.written(dir, reports).map { case (p, bytes, r) =>
+      FileEntry(p, r.rows, bytes, m.currentSchemaVersion,
+        Map.empty, Map.empty, Nil, content = 1, deleteTargets = targets,
+        deleteTargetRows = r.perValue)
+    }
   }
 
   /** UPDATE = the delete half (merge-on-read position deletes or
@@ -1474,10 +1476,12 @@ final class LakeTable(val spark: SparkSession, val location: String) {
     }
   }
 
-  /** Write `df` (current-schema rows) as parquet + collect per-file
-    * stats in ONE distributed aggregation over the fresh files (the
-    * reference gathers the same stats during its convert step,
-    * data_file_stats.c). Returns the new [[FileEntry]]s.
+  /** Write `df` (current-schema rows) as parquet and return the new
+    * [[FileEntry]]s. Every file reports its own stats while it is
+    * written ([[LakeWriteStats]]: rows, per-field null count and min/max,
+    * the min/max of each partition transform), so no job re-reads the
+    * fresh files (the reference gathers the same stats during its
+    * write, data_file_stats.c).
     *
     * Partitioned tables: the distinct partition-value tuples are
     * computed first (map-side-combined agg — tiny vs the write itself),
@@ -1547,35 +1551,64 @@ final class LakeTable(val spark: SparkSession, val location: String) {
     val transforms = m.transforms
     val commitDir = LakeFs.child(location, s"data/${UUID.randomUUID()}")
 
-    if (transforms.nonEmpty) {
-      if (!writePartitioned(m, aligned, targetFiles, commitDir)) return Nil
-    } else {
-      // coalesce (not round-robin repartition) preserves any clustering
-      // the caller established — e.g. an orderBy upstream yields files
-      // with tight, disjoint key ranges that stats pruning can use.
-      // LAZY on purpose: materializing .rdd completes a QueryExecution,
-      // which delivers a null metrics row to any Observation riding
-      // this plan (update/copyFrom count their rows that way) — only
-      // touch it when a targetFiles policy actually needs it.
-      lazy val parts = aligned.rdd.getNumPartitions
-      val clustered = targetFiles match {
-        case Some(n) if parts >= n => aligned.coalesce(n)
-        case _ => aligned
+    val writer =
+      if (transforms.nonEmpty) partitionedWriter(m, aligned, targetFiles)
+      else {
+        // coalesce (not round-robin repartition) preserves any clustering
+        // the caller established — e.g. an orderBy upstream yields files
+        // with tight, disjoint key ranges that stats pruning can use.
+        // LAZY on purpose: materializing .rdd completes a QueryExecution,
+        // which delivers a null metrics row to any Observation riding
+        // this plan (update/copyFrom count their rows that way) — only
+        // touch it when a targetFiles policy actually needs it.
+        lazy val parts = aligned.rdd.getNumPartitions
+        val clustered = targetFiles match {
+          case Some(n) if parts >= n => aligned.coalesce(n)
+          case _ => aligned
+        }
+        var w = clustered.write.mode("errorifexists")
+        targetFiles.filter(_ > parts).foreach { n =>
+          // fewer partitions than requested files: split each task's
+          // (order-preserving) output stream by row count instead
+          val rows = aligned.count()
+          w = w.option("maxRecordsPerFile", math.max(1L, (rows + n - 1) / n))
+        }
+        Some(w)
       }
-      var w = clustered.write.mode("errorifexists")
-      targetFiles.filter(_ > parts).foreach { n =>
-        // fewer partitions than requested files: split each task's
-        // (order-preserving) output stream by row count instead
-        val rows = aligned.count()
-        w = w.option("maxRecordsPerFile", math.max(1L, (rows + n - 1) / n))
-      }
-      w.parquet(commitDir)
+
+    // the table's fields lead every written row (a partitioned write
+    // moves only its bucket column into the directory name)
+    val types = aligned.schema.fields.map(_.dataType)
+    val ranged = cur.fields.indices.filter(i =>
+      LakeWriteStats.ranged(DataType.fromDDL(cur.fields(i).dataType)))
+    val spec = WriteStatsSpec(cur.fields.size,
+      ranged.map(i => BoundReference(i, types(i), nullable = true)) ++
+        transforms.map { t =>
+          val i = cur.fields.indexWhere(_.name == t.column)
+          t.catalyst(BoundReference(i, types(i), nullable = true), types(i))
+        })
+    val reports = writer match {
+      case Some(w) => LakeWriteStats.save(spark, w, commitDir, spec)
+      case None => return Nil
     }
-
-    val written = LakeFs.listFilesRecursive(commitDir, ".parquet")
-    if (written.isEmpty) return Nil
-
-    collectStats(m, written)
+    val tz = spark.sessionState.conf.sessionLocalTimeZone
+    def render(r: FileReport, k: Int): (Option[String], Option[String]) = {
+      val dt = spec.ranges(k).dataType
+      (LakeWriteStats.render(r.low(k), dt, tz),
+        LakeWriteStats.render(r.high(k), dt, tz))
+    }
+    LakeWriteStats.written(commitDir, reports).map { case (p, bytes, r) =>
+      val fieldStats = cur.fields.indices.map { i =>
+        val k = ranged.indexOf(i)
+        val (lo, hi) = if (k < 0) (None, None) else render(r, k)
+        cur.fields(i).id.toString -> ColStats(lo, hi, r.nulls(i))
+      }.toMap
+      val partStats = transforms.indices.map { j =>
+        val (lo, hi) = render(r, ranged.size + j)
+        transforms(j).valueName -> ColStats(lo, hi, 0L)
+      }.toMap
+      FileEntry(p, r.rows, bytes, cur.version, fieldStats, partStats)
+    }
   }
 
   /** Storage-format bounds enforcement (docs/iceberg-tables.md:124-170;
@@ -1620,7 +1653,7 @@ final class LakeTable(val spark: SparkSession, val location: String) {
     }
   }
 
-  /** Fan-out write for partitioned tables; false when `df` is empty.
+  /** Fan-out writer for partitioned tables; None when `df` is empty.
     *
     * One job counts the rows per distinct partition tuple, collecting
     * at most `write.max-partition-fanout` (default 65536) + 1 tuples to
@@ -1633,8 +1666,8 @@ final class LakeTable(val spark: SparkSession, val location: String) {
     * correct price of identity-partitioning unbounded-cardinality
     * columns.
     */
-  private def writePartitioned(m: TableMetadata, aligned: DataFrame,
-      targetFiles: Option[Int], commitDir: String): Boolean = {
+  private def partitionedWriter(m: TableMetadata, aligned: DataFrame,
+      targetFiles: Option[Int]): Option[DataFrameWriter[Row]] = {
     val schema = m.sparkSchema
     val transforms = m.transforms
     val valueNames = transforms.map(_.valueName)
@@ -1646,7 +1679,7 @@ final class LakeTable(val spark: SparkSession, val location: String) {
       .map(_.toInt).getOrElse(65536))
     val counts = withVals.groupBy(valueNames.map(col): _*).count()
       .limit(math.min(fanoutCap, Int.MaxValue - 1) + 1).collect()
-    if (counts.isEmpty) return false
+    if (counts.isEmpty) return None
     if (counts.length > fanoutCap) {
       val nBuckets = math.max(1, targetFiles.getOrElse(
         spark.sessionState.conf.numShufflePartitions))
@@ -1655,10 +1688,8 @@ final class LakeTable(val spark: SparkSession, val location: String) {
           pmod(xxhash64(valueNames.map(col): _*), lit(nBuckets.toLong))
             .cast(org.apache.spark.sql.types.IntegerType))
         .select((schema.fieldNames.map(col) :+ col("__bucket")).toIndexedSeq: _*)
-      out.repartition(nBuckets, col("__bucket"))
-        .write.mode("errorifexists").partitionBy("__bucket")
-        .parquet(commitDir)
-      return true
+      return Some(out.repartition(nBuckets, col("__bucket"))
+        .write.mode("errorifexists").partitionBy("__bucket"))
     }
 
     // sort distinct tuples; nulls first, then natural per-column order
@@ -1696,78 +1727,8 @@ final class LakeTable(val spark: SparkSession, val location: String) {
 
     // cluster each bucket into one task; partitionBy then guarantees
     // exactly one file per bucket (collisions just co-locate buckets)
-    out.repartition(nBuckets, col("__bucket"))
-      .write.mode("errorifexists").partitionBy("__bucket")
-      .parquet(commitDir)
-    true
-  }
-
-  /** One groupBy(file) pass over freshly written files computing rows,
-    * per-field min/max/nullCount, and partition-transform value ranges.
-    * Stats serialize as Spark-cast strings; pruning re-types them
-    * through the same Cast, so the round trip is exact.
-    */
-  private def collectStats(m: TableMetadata,
-      files: Seq[(String, Long)]): Seq[FileEntry] = {
-    val paths = files.map(_._1)
-    val sizeOf = files.toMap
-    val cur = m.currentSchema
-    val schema = TableMetadata.physicalStruct(cur)
-    val transforms = m.transforms
-
-    def statable(dt: DataType): Boolean = dt match {
-      case _: ArrayType | _: MapType | _: StructType | _: BinaryType => false
-      case CalendarIntervalType => false
-      case _ => true
-    }
-
-    val fieldAggs = cur.fields.flatMap { f =>
-      val dt = DataType.fromDDL(f.dataType)
-      val base = Seq(
-        sum(when(col(f.name).isNull, 1L).otherwise(0L)).as(s"nulls_${f.id}"))
-      if (statable(dt)) base ++ Seq(
-        min(col(f.name)).cast("string").as(s"min_${f.id}"),
-        max(col(f.name)).cast("string").as(s"max_${f.id}"))
-      else base
-    }
-    val partAggs = transforms.flatMap { t =>
-      val e = t.expr(col(t.column), schema(t.column).dataType)
-      Seq(min(e).cast("string").as(s"pmin_${t.valueName}"),
-        max(e).cast("string").as(s"pmax_${t.valueName}"))
-    }
-    val aggs = (Seq(count(lit(1L)).as("__rows")) ++ fieldAggs ++ partAggs)
-
-    val statRows = spark.read.schema(schema).parquet(paths: _*)
-      .groupBy(input_file_name().as("__file"))
-      .agg(aggs.head, aggs.tail: _*)
-      .collect()
-
-    // key by full scheme-independent path: partitionBy writes can
-    // reuse a basename across __bucket=N subdirectories within one
-    // task, and input_file_name() is a (possibly percent-encoded) URI
-    // while the listing carries plain path strings
-    val byPath = statRows.map(r =>
-      new java.net.URI(r.getAs[String]("__file")).getPath -> r).toMap
-
-    // a path with no stats row is a zero-row file (e.g. Spark writes one
-    // empty part file for an empty frame) — skip it, never commit it
-    paths.flatMap { p =>
-      byPath.get(LakeFs.pathKey(p)).map { r =>
-      def s(col: String): Option[String] =
-        if (r.schema.fieldNames.contains(col)) Option(r.getAs[String](col))
-        else None
-      val fieldStats = cur.fields.map { f =>
-        f.id.toString -> ColStats(s(s"min_${f.id}"), s(s"max_${f.id}"),
-          r.getAs[Long](s"nulls_${f.id}"))
-      }.toMap
-      val partStats = transforms.map { t =>
-        t.valueName -> ColStats(s(s"pmin_${t.valueName}"),
-          s(s"pmax_${t.valueName}"), 0L)
-      }.toMap
-      FileEntry(p, r.getAs[Long]("__rows"), sizeOf(p),
-        cur.version, fieldStats, partStats)
-      }
-    }
+    Some(out.repartition(nBuckets, col("__bucket"))
+      .write.mode("errorifexists").partitionBy("__bucket"))
   }
 }
 

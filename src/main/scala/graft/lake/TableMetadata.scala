@@ -1,6 +1,8 @@
 package graft.lake
 
+import com.fasterxml.jackson.annotation.JsonInclude
 import com.fasterxml.jackson.databind.{DeserializationFeature, ObjectMapper}
+import com.fasterxml.jackson.databind.annotation.JsonDeserialize
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import org.apache.spark.sql.types.StructType
 import scala.jdk.CollectionConverters._
@@ -48,12 +50,23 @@ final case class FileEntry(
     // (file_path, pos) rows; `deleteTargets` lists the NORMALIZED data
     // file paths they may reference, for read-side planning.
     content: Int = 0,
-    deleteTargets: Seq[String] = Nil) {
+    deleteTargets: Seq[String] = Nil,
+    // delete files: rows per target (normalized path), reported by the
+    // write; absent on entries written before the write reported them.
+    // contentAs: erasure hides Long from Jackson, which would read
+    // small counts back as Integer
+    @JsonInclude(JsonInclude.Include.NON_EMPTY)
+    @JsonDeserialize(contentAs = classOf[java.lang.Long])
+    deleteTargetRows: Map[String, Long] = Map.empty) {
 
   /** Null-safe view (Jackson leaves the field null on legacy JSON). */
   def ranges: Seq[RowIdRange] = Option(rowIdRanges).getOrElse(Nil)
 
   def targets: Seq[String] = Option(deleteTargets).getOrElse(Nil)
+
+  /** Rows per target, None on a legacy delete entry. */
+  def targetRows: Option[Map[String, Long]] =
+    Option(deleteTargetRows).filter(_.nonEmpty)
 
   def isData: Boolean = content == 0
 

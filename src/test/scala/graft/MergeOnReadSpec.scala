@@ -149,6 +149,29 @@ class MergeOnReadSpec extends AnyFunSuite {
     assertDeleteAccounting(t)
   }
 
+  test("legacy delete entry: several targets, no per-target counts") {
+    // an entry written before writes reported per-target rows: the op
+    // counts its positions with a job and classifies exactly as before
+    val t = threeFileTable()
+    val Seq(a, b, _) = dataFiles(t).map(_.path)
+    assert(t.delete(col("id").isin(1, 2, 101)) == 3)
+    val legacy = t.meta.currentSnapshot.get.files.map(f =>
+      if (f.isData) f else f.copy(deleteTargetRows = Map.empty))
+    t.importSnapshot(legacy)
+    assert(deleteFiles(t).nonEmpty && deleteFiles(t).forall(d =>
+      d.targets.size == 2 && d.targetRows.isEmpty))
+    // file a: 2 existing + 18 = 20% -> copy-on-write; file b: 1 + 1 ->
+    // merge-on-read (miscounting the legacy rows flips either)
+    assert(t.delete(col("id").between(3, 20) || col("id") === 102) == 19)
+    assert(!dataFiles(t).map(_.path).contains(a))
+    assert(dataFiles(t).map(_.path).contains(b))
+    assert(deleteFiles(t).flatMap(_.targets).toSet ==
+      Set(graft.lake.RowIds.normalizePathStr(b)))
+    assert(deleteFiles(t).map(_.rows).sum == 2)
+    assert(t.read().count() == 300 - 3 - 19)
+    assertDeleteAccounting(t)
+  }
+
   test("compact folds merge-on-read state back into clean files") {
     val t = threeFileTable()
     t.delete(col("id").isin(2, 102, 202, 250))

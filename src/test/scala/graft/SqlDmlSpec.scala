@@ -353,4 +353,30 @@ class SqlDmlSpec extends AnyFunSuite {
     assert(short.getMessage.contains("more target columns than expressions"))
     e.dropTable("ins_cols")
   }
+
+  test("INSERT wider than its table is refused, SELECT and VALUES") {
+    val e = LakeEngine(spark)
+    e.sql("CREATE TABLE ins_wide (id bigint, v int)")
+    for (stmt <- Seq("INSERT INTO ins_wide SELECT 1 AS id, 2 AS v, 3 AS extra",
+        "INSERT INTO ins_wide VALUES (1, 2, 3)")) {
+      val err = intercept[IllegalArgumentException](e.sql(stmt))
+      assert(err.getMessage.contains(
+        "INSERT has more expressions than target columns"), stmt)
+    }
+    assert(e.sql("SELECT count(*) FROM ins_wide").head.getLong(0) == 0L)
+    e.dropTable("ins_wide")
+  }
+
+  test("scanReport after FROM ONLY names the files that query pruned") {
+    val e = LakeEngine(spark)
+    e.sql("CREATE TABLE only_rep (k bigint, v string)")
+    e.sql("INSERT INTO only_rep VALUES (1, 'a'), (2, 'b')")
+    e.sql("INSERT INTO only_rep VALUES (101, 'c'), (102, 'd')")
+    assert(e.sql("SELECT * FROM ONLY only_rep WHERE k >= 100").count() == 2)
+    val rep = e.sql("SELECT * FROM lake_scan_report('only_rep')").head
+    val (kept, total) = e.table("only_rep").pruneStats(col("k") >= 100)
+    assert(kept >= 1 && kept < total)
+    assert((rep.getInt(0), rep.getInt(1)) == (kept, total - kept), rep)
+    e.dropTable("only_rep")
+  }
 }
