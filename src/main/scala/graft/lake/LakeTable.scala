@@ -2,7 +2,9 @@ package graft.lake
 
 import java.util.UUID
 import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Row, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.BoundReference
+import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeSeq,
+  BindReferences, BoundReference}
+import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import scala.jdk.CollectionConverters._
@@ -1581,12 +1583,24 @@ final class LakeTable(val spark: SparkSession, val location: String) {
     val types = aligned.schema.fields.map(_.dataType)
     val ranged = cur.fields.indices.filter(i =>
       LakeWriteStats.ranged(DataType.fromDDL(cur.fields(i).dataType)))
+    // the transforms as the write computes them: analyzed, so their
+    // implicit casts apply (hour over a date reads it as a timestamp),
+    // then bound to the written row
+    val transformed =
+      if (transforms.isEmpty) Nil
+      else aligned.select(transforms.map(t =>
+        t.expr(col(t.column), aligned.schema(t.column).dataType)): _*)
+        .queryExecution.analyzed match {
+          case Project(list, child) => list.map { e =>
+            BindReferences.bindReference(e match {
+              case a: Alias => a.child
+              case o => o
+            }, child.output.take(cur.fields.size))
+          }
+        }
     val spec = WriteStatsSpec(cur.fields.size,
       ranged.map(i => BoundReference(i, types(i), nullable = true)) ++
-        transforms.map { t =>
-          val i = cur.fields.indexWhere(_.name == t.column)
-          t.catalyst(BoundReference(i, types(i), nullable = true), types(i))
-        })
+        transformed)
     val reports = writer match {
       case Some(w) => LakeWriteStats.save(spark, w, commitDir, spec)
       case None => return Nil

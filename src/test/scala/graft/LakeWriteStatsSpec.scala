@@ -142,8 +142,8 @@ class LakeWriteStatsSpec extends AnyFunSuite {
     withTimeZone("Asia/Kolkata") {
       val t = LakeTable.createAsSelect(spark, freshLoc(), "ws_part",
         typed(), partitionSpec = Seq("year(dt)", "month(ntz)", "day(ts)",
-          "hour(ts)", "bucket(4, i)", "truncate(3, s)", "truncate(1000, bi)",
-          "identity(b)", "identity(dz)"),
+          "hour(ts)", "hour(dt)", "bucket(4, i)", "truncate(3, s)",
+          "truncate(1000, bi)", "identity(b)", "identity(dz)"),
         targetFiles = Some(6))
       assertSameStats(t, 2)
       assert(t.meta.currentSnapshot.get.dataFiles

@@ -3,16 +3,17 @@
 
 Usage (from the repository root):
   python3 tools/job_sites.py EVENTLOG
-  python3 tools/job_sites.py EVENTLOG --base BASE_EVENTLOG [--depth N]
+  python3 tools/job_sites.py EVENTLOG --base BASE_EVENTLOG
 
 EVENTLOG is an event log file, plain or `.zstd` (read through the `zstd`
-command), or a directory of them (Spark's `eventlog_v2_*` layout). Capture
-one from a benchmark run with
+command), or a directory of them: Spark 4 rolls event logs by default, so
+the capture below leaves an `eventlog_v2_*` directory. Capture one from a
+benchmark run with
   JAVA_TOOL_OPTIONS='-Dspark.eventLog.enabled=true \
     -Dspark.eventLog.dir=file:///tmp/ev' python3 perfbench/run.py ...
 
 Each job is charged to the call site of the SQL execution that ran it:
-the first N (default 2) frames of the execution's call stack outside
+the first two frames of the execution's call stack outside
 Spark, Scala and the JDK, as `Class.method < Caller.method` (no line
 numbers, so the sites of two builds line up). Jobs outside any SQL
 execution are charged to `(no SQL execution)`. Per site it prints the
@@ -29,6 +30,7 @@ import sys
 
 SKIP = ("org.apache.spark.", "scala.", "java.", "jdk.", "sun.")
 NO_SQL = "(no SQL execution)"
+DEPTH = 2
 
 
 def lines(path):
@@ -47,8 +49,8 @@ def lines(path):
         yield from (ln for ln in text.splitlines() if ln.strip())
 
 
-def site(details, depth):
-    """`Class.method` of the first `depth` non-Spark frames of a call
+def site(details):
+    """`Class.method` of the first DEPTH non-Spark frames of a call
     stack, innermost first; a method repeated by recursion or closures
     counts once."""
     out = []
@@ -62,20 +64,19 @@ def site(details, depth):
         label = f"{cls.rsplit('.', 1)[-1].rstrip('$')}.{meth or 'apply'}"
         if not out or out[-1] != label:
             out.append(label)
-        if len(out) == depth:
+        if len(out) == DEPTH:
             break
     return " < ".join(out) or NO_SQL
 
 
-def sites(path, depth):
+def sites(path):
     """{site: [jobs, job_ms, gap_ms]} over the whole log."""
     exec_site, starts, ends = {}, {}, {}
     for ln in lines(path):
         e = json.loads(ln)
         kind = e["Event"]
         if kind.endswith("SQLExecutionStart"):
-            exec_site[str(e["executionId"])] = site(e.get("details", ""),
-                                                    depth)
+            exec_site[str(e["executionId"])] = site(e.get("details", ""))
         elif kind == "SparkListenerJobStart":
             props = e.get("Properties") or {}
             starts[e["Job ID"]] = (e["Submission Time"],
@@ -101,10 +102,9 @@ def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     ap.add_argument("eventlog")
     ap.add_argument("--base")
-    ap.add_argument("--depth", type=int, default=2)
     args = ap.parse_args()
-    cur = sites(args.eventlog, args.depth)
-    base = sites(args.base, args.depth) if args.base else None
+    cur = sites(args.eventlog)
+    base = sites(args.base) if args.base else None
     keys = sorted(set(cur) | set(base or {}),
                   key=lambda k: -max(cur.get(k, [0, 0])[1],
                                      (base or {}).get(k, [0, 0])[1]))
