@@ -1750,6 +1750,8 @@ final class LakeEngine(val spark: SparkSession) {
       schema: Option[StructType] = None,
       filenameColumn: Boolean = false): DataFrame = {
     validateForeignOptions(format, options)
+    refuseForeignKeys(format.map(_.toLowerCase).getOrElse(
+      inferFormat(sources.HttpSource.pathPart(path))), options)
     format.map(_.toLowerCase).filter(fixedColumnFormats)
       .foreach(f => require(!filenameColumn, fixedColumnsMessage(f)))
     // a declared schema lists `_filename text` explicitly (reference
@@ -1833,6 +1835,30 @@ final class LakeEngine(val spark: SparkSession) {
         "\"header\", \"delimiter\", \"quote\", \"escape\", \"new_line\", " +
           "\"null\" and \"null_padding\" options are only supported for " +
           "csv format tables")
+  }
+
+  /** Option keys each foreign-table format takes, beyond `columns` (the
+    * declared schema, checked by the readers); `gdal` narrows its keys
+    * per reader. `inferSchema` is Spark's csv reader key.
+    */
+  private val foreignKeys: Map[String, Set[String]] = Map(
+    "csv" -> Set("header", "delimiter", "sep", "quote", "escape",
+      "new_line", "null", "null_padding", "inferschema"),
+    "gdal" -> Set("layer", "header"),
+    "log" -> Set("log_format"))
+
+  /** An option `fmt` does not take refuses at CREATE, as the
+    * reference's FDW validator does, rather than reaching a reader
+    * that would ignore it or change behaviour on it.
+    */
+  private def refuseForeignKeys(fmt: String,
+      options: Map[String, String]): Unit = {
+    val takes = foreignKeys.getOrElse(fmt, Set.empty[String])
+    options.keys.filterNot(k => k == "columns" || takes(k.toLowerCase))
+      .foreach(k => throw new IllegalArgumentException(
+        s"""invalid option "$k" for format '$fmt'""" +
+          (if (takes.isEmpty) ": it takes none"
+          else s"; it takes ${takes.toSeq.sorted.mkString(", ")}")))
   }
 
   /** `lake_file_cache.add/remove` accept exactly one remote object
@@ -2391,6 +2417,7 @@ final class LakeEngine(val spark: SparkSession) {
   private def writeLocal(df: DataFrame, path: String, fmt: String,
       codec: Option[String], options: Map[String, String]): Unit = {
     var w = df.write.mode(options.getOrElse("mode", "overwrite"))
+      .options(lake.NioLocalFileSystem.writerOptions)
       .options(options - "mode" - "format" - "compression" - "directory")
     codec.foreach(c => w = w.option("compression", c))
     fmt match {

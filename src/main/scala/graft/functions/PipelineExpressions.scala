@@ -652,7 +652,9 @@ case class Md5Hash60(child: Expression) extends UnaryExpression {
   * interpreted `transform(a, s -> cast(conv(substring(md5(s),1,15),16,10)
   * as bigint))` lambda on the shingle/word hashing hot path with one
   * tight JVM loop per row. Null elements hash to null (as the lambda
-  * did); a null array is null.
+  * did); a null array is null. An array typed null-free gets a
+  * null-free result, and a null element in it fails the row loudly
+  * instead of reaching the hash.
   */
 case class Md5Hash60All(child: Expression) extends UnaryExpression {
   private def childContainsNull: Boolean = child.dataType match {
@@ -664,6 +666,11 @@ case class Md5Hash60All(child: Expression) extends UnaryExpression {
   override protected def withNewChildInternal(c: Expression): Md5Hash60All =
     copy(child = c)
 
+  // the kernel reads elements with getUTF8String: any other input
+  // would read the wrong bytes, so it fails analysis instead
+  override def checkInputDataTypes(): TypeCheckResult =
+    ExpectsInputTypes.checkInputDataTypes(children, Seq(ArrayType(StringType)))
+
   override def nullSafeEval(v: Any): Any = {
     val a = v.asInstanceOf[ArrayData]
     val n = a.numElements()
@@ -671,6 +678,7 @@ case class Md5Hash60All(child: Expression) extends UnaryExpression {
       val out = new Array[Long](n)
       var i = 0
       while (i < n) {
+        if (a.isNullAt(i)) Md5Hash60All.nullInNullFree()
         out(i) = Md5Hash60.hash(a.getUTF8String(i))
         i += 1
       }
@@ -701,6 +709,7 @@ case class Md5Hash60All(child: Expression) extends UnaryExpression {
            |int $n = $a.numElements();
            |long[] $out = new long[$n];
            |for (int $i = 0; $i < $n; $i++) {
+           |  if ($a.isNullAt($i)) graft.functions.Md5Hash60All.nullInNullFree();
            |  $out[$i] = graft.functions.Md5Hash60.hash($a.getUTF8String($i));
            |}
            |${ev.value} = new $gad($out);
@@ -719,6 +728,11 @@ case class Md5Hash60All(child: Expression) extends UnaryExpression {
       }
     })
   }
+}
+
+object Md5Hash60All {
+  def nullInNullFree(): Nothing = throw new IllegalStateException(
+    "md5 hash over an array typed null-free met a null element")
 }
 
 /** MinHash signature over an array of 60-bit hashes: one pass applying

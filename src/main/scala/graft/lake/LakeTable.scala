@@ -22,13 +22,16 @@ import scala.jdk.CollectionConverters._
   * }}}
   *
   * Write path (reference: engineering-notes/writes.md, writable_table.c):
-  * partitioned tables fan rows out by their transform values (one
-  * exact, capped count of the partition tuples packs them into
-  * contiguous buckets, one file each), written as immutable parquet;
-  * every file reports its own stats while it is written
-  * ([[LakeWriteStats]]), then a new snapshot commits via the optimistic
-  * metadata CAS. Readers resolve `current` once per scan — snapshot
-  * isolation, writers never block readers.
+  * partitioned tables fan rows out by their transform values, one file
+  * per partition tuple, in one pass when the caller bounds the rows
+  * within the fan-out cap; otherwise one exact, capped count of the
+  * tuples comes first (and packs them into contiguous buckets when
+  * fewer files are asked for). Files are immutable parquet; every file
+  * reports its own stats while it is written ([[LakeWriteStats]]) and
+  * gets its permissions without a `chmod` process
+  * ([[NioLocalFileSystem]]); then a new snapshot commits via the
+  * optimistic metadata CAS. Readers resolve `current` once per scan —
+  * snapshot isolation, writers never block readers.
   */
 final class LakeTable(val spark: SparkSession, val location: String) {
 
@@ -283,7 +286,7 @@ final class LakeTable(val spark: SparkSession, val location: String) {
   def append(df: DataFrame, targetFiles: Option[Int] = None,
       commitProps: Map[String, String] = Map.empty): LakeTable = {
     val m = meta
-    val entries = writeData(m, df, targetFiles)
+    val entries = writeData(m, df, targetFiles, planBound(df))
     commitOp("append", commitProps) { cur =>
       cur.currentSnapshot.map(_.files).getOrElse(Nil) ++ entries
     }
@@ -526,7 +529,7 @@ final class LakeTable(val spark: SparkSession, val location: String) {
         fresh.mkString("\n").getBytes(
           java.nio.charset.StandardCharsets.UTF_8))
       val m = meta
-      val entries = writeData(m, reader(fresh), None)
+      val entries = writeData(m, reader(fresh), None, None)
       val freshSet = fresh.toSet
       commitOp("ingest", mergeProps = p => {
         val now = chunksOf(p)
@@ -670,6 +673,7 @@ final class LakeTable(val spark: SparkSession, val location: String) {
         else readResolved(m, cowFiles.toSeq ++ dels))
           .filter(!coalesce(pred, lit(false)))
         val entries = writeData(m, keepDf, None,
+          Some(cowFiles.map(_.rows).sum),
           extraCols = if (m.rowIdsEnabled) Seq(RowIds.Col) else Nil)
         if (m.rowIdsEnabled) RowIds.attachDerived(entries,
           RowIds.deriveRanges(spark, entries.map(_.path)))
@@ -752,7 +756,10 @@ final class LakeTable(val spark: SparkSession, val location: String) {
       }: _*)
     // new row versions first (reads only the immutable old files), then
     // the removal plan; ONE atomic commit covers both halves
-    val fresh = writeData(m, updatedRows, None) // row-ids hook assigns ids
+    // (the row-ids hook assigns ids; the candidates' rows bound the
+    // new rows)
+    val fresh = writeData(m, updatedRows, None,
+      Some(candidates.map(_.rows).sum))
     val (removed, removedAdds, n) = removeRows(m, pred, snapFiles)
     commitMerge("update", removed, removedAdds ++ fresh)
     n
@@ -766,7 +773,7 @@ final class LakeTable(val spark: SparkSession, val location: String) {
     * file set, never an empty gap).
     */
   def replace(df: DataFrame, targetFiles: Option[Int] = None): LakeTable = {
-    val entries = writeData(meta, df, targetFiles)
+    val entries = writeData(meta, df, targetFiles, planBound(df))
     commitOp("replace")(_ => entries)
     this
   }
@@ -810,7 +817,7 @@ final class LakeTable(val spark: SparkSession, val location: String) {
             .sortWithinPartitions(RowIds.Col)
         case _ => merged.repartition(n)
       }
-      val entries0 = writeData(m, shaped, None,
+      val entries0 = writeData(m, shaped, None, Some(small.map(_.rows).sum),
         extraCols = if (rowIds) Seq(RowIds.Col) else Nil)
       val entries = if (rowIds) RowIds.attachDerived(entries0,
         RowIds.deriveRanges(spark, entries0.map(_.path)))
@@ -853,7 +860,7 @@ final class LakeTable(val spark: SparkSession, val location: String) {
         // but the Z-curve scatters consecutive ids across files, so
         // the derived range table fragments toward O(rows) — the same
         // trade the reference makes when clustering a row-ids table
-        val entries0 = writeData(m, ordered, None,
+        val entries0 = writeData(m, ordered, None, None,
           extraCols = if (rowIds) Seq(RowIds.Col) else Nil)
         val entries = if (rowIds) RowIds.attachDerived(entries0,
           RowIds.deriveRanges(spark, entries0.map(_.path)))
@@ -1485,19 +1492,21 @@ final class LakeTable(val spark: SparkSession, val location: String) {
     * fresh files (the reference gathers the same stats during its
     * write, data_file_stats.c).
     *
-    * Partitioned tables: the distinct partition-value tuples are
-    * computed first (map-side-combined agg — tiny vs the write itself),
-    * the driver greedily groups CONTIGUOUS values into ≤targetFiles
-    * buckets balanced by row count, and the write fans out with
-    * `partitionBy(bucket)`. Unlike sampling-based repartitionByRange
-    * this is deterministic: a data file never straddles a bucket
-    * boundary, so partition-aligned predicates classify files exactly
-    * (Skip/Full), which is what makes metadata-only partition DELETE
-    * and tight pruning reliable (the reference fans out per partition
-    * tuple the same way — partitioned_dest_receiver.c).
+    * Partitioned tables fan out with one file per partition tuple, or
+    * pack CONTIGUOUS tuples into `targetFiles` buckets balanced by row
+    * count ([[partitionedWriter]]). Unlike sampling-based
+    * repartitionByRange this is deterministic: a data file never
+    * straddles a bucket boundary, so partition-aligned predicates
+    * classify files exactly (Skip/Full), which is what makes
+    * metadata-only partition DELETE and tight pruning reliable (the
+    * reference fans out per partition tuple the same way —
+    * partitioned_dest_receiver.c). `rowBound`, when the caller knows
+    * one, is an upper bound on the rows of `df`; it lets a partitioned
+    * write skip counting its tuples first.
     */
   private def writeData(m: TableMetadata, df: DataFrame,
-      targetFiles: Option[Int], extraCols: Seq[String] = Nil)
+      targetFiles: Option[Int], rowBound: Option[Long],
+      extraCols: Seq[String] = Nil)
       : Seq[FileEntry] = {
     val cur = m.currentSchema
     val schema = m.sparkSchema
@@ -1554,7 +1563,8 @@ final class LakeTable(val spark: SparkSession, val location: String) {
     val commitDir = LakeFs.child(location, s"data/${UUID.randomUUID()}")
 
     val writer =
-      if (transforms.nonEmpty) partitionedWriter(m, aligned, targetFiles)
+      if (transforms.nonEmpty)
+        partitionedWriter(m, aligned, targetFiles, rowBound)
       else {
         // coalesce (not round-robin repartition) preserves any clustering
         // the caller established — e.g. an orderBy upstream yields files
@@ -1625,6 +1635,12 @@ final class LakeTable(val spark: SparkSession, val location: String) {
     }
   }
 
+  /** The most rows `df` can hold, when its plan says (a VALUES list, a
+    * LIMIT); None for file sources.
+    */
+  private def planBound(df: DataFrame): Option[Long] =
+    df.queryExecution.optimizedPlan.maxRows
+
   /** Storage-format bounds enforcement (docs/iceberg-tables.md:124-170;
     * reference iceberg_datum_validation.c): dates and timestamps outside
     * the Iceberg-representable range either fail the write (table
@@ -1667,46 +1683,69 @@ final class LakeTable(val spark: SparkSession, val location: String) {
     }
   }
 
-  /** Fan-out writer for partitioned tables; None when `df` is empty.
+  /** Fan-out writer for partitioned tables: one file per partition
+    * tuple, written under `__bucket=<id>` directories. None when the
+    * count found no rows.
     *
-    * One job counts the rows per distinct partition tuple, collecting
-    * at most `write.max-partition-fanout` (default 65536) + 1 tuples to
-    * the driver. Within the cap the sorted tuples pack into contiguous
-    * buckets of about equal rows, one file per bucket. Over it — e.g.
-    * PARTITIONED BY (identity(user_id)) — the write falls back to a
-    * purely distributed hash-bucket fanout instead of OOMing the
-    * driver. Hash-bucketed files span several partition values, so
-    * stats pruning degrades from exact Skip/Full to range-based — the
-    * correct price of identity-partitioning unbounded-cardinality
-    * columns.
+    * When the caller bounds the rows (`rowBound`) at or below
+    * `write.max-partition-fanout` (default 65536) and at or below
+    * `targetFiles`, the tuples cannot outnumber the cap or the files
+    * asked for, so the write goes straight out, clustered by a 64-bit
+    * id of each tuple ([[PartitionTransform.tupleId]]; two tuples
+    * whose ids collide share a file, which stats pruning handles like
+    * any other file). Otherwise one job counts the rows per distinct
+    * tuple, collecting at most cap + 1 tuples to the driver:
+    *   - within the cap and the file count, the same per-tuple write;
+    *   - within the cap but over `targetFiles`, the sorted tuples pack
+    *     into contiguous buckets of about equal rows, one file each;
+    *   - over the cap — e.g. PARTITIONED BY (identity(user_id)) — a
+    *     distributed hash-bucket fan-out instead of OOMing the driver.
+    *     Hash-bucketed files span several partition values, so stats
+    *     pruning degrades from exact Skip/Full to range-based — the
+    *     correct price of identity-partitioning unbounded-cardinality
+    *     columns.
     */
   private def partitionedWriter(m: TableMetadata, aligned: DataFrame,
-      targetFiles: Option[Int]): Option[DataFrameWriter[Row]] = {
+      targetFiles: Option[Int], rowBound: Option[Long])
+      : Option[DataFrameWriter[Row]] = {
     val schema = m.sparkSchema
     val transforms = m.transforms
     val valueNames = transforms.map(_.valueName)
     val withVals = transforms.foldLeft(aligned)((acc, t) =>
       acc.withColumn(t.valueName, t.expr(col(t.column), schema(t.column).dataType)))
 
+    // each `__bucket` value clustered into one of `tasks` tasks;
+    // partitionBy then writes exactly one file per value
+    def bucketed(df: DataFrame, tasks: Int) = Some(df
+      .select((schema.fieldNames.map(col) :+ col("__bucket")).toIndexedSeq: _*)
+      .repartition(math.max(1, tasks), col("__bucket"))
+      .write.mode("errorifexists").partitionBy("__bucket"))
+    def perTuple(tasks: Int) = bucketed(withVals.withColumn("__bucket",
+      PartitionTransform.tupleId(valueNames.map(n =>
+        (col(n), withVals.schema(n).dataType)))), tasks)
+    val shufflePartitions = spark.sessionState.conf.numShufflePartitions
+
     // a cap <= 0 sends every non-empty write down the hash path
     val fanoutCap = math.max(0, m.properties.get("write.max-partition-fanout")
       .map(_.toInt).getOrElse(65536))
+    val bounded = rowBound.filter(b =>
+      b <= fanoutCap && targetFiles.forall(b <= _))
+    if (bounded.nonEmpty)
+      return perTuple(math.min(bounded.get, shufflePartitions.toLong).toInt)
+
     val counts = withVals.groupBy(valueNames.map(col): _*).count()
       .limit(math.min(fanoutCap, Int.MaxValue - 1) + 1).collect()
     if (counts.isEmpty) return None
     if (counts.length > fanoutCap) {
-      val nBuckets = math.max(1, targetFiles.getOrElse(
-        spark.sessionState.conf.numShufflePartitions))
-      val out = withVals
-        .withColumn("__bucket",
-          pmod(xxhash64(valueNames.map(col): _*), lit(nBuckets.toLong))
-            .cast(org.apache.spark.sql.types.IntegerType))
-        .select((schema.fieldNames.map(col) :+ col("__bucket")).toIndexedSeq: _*)
-      return Some(out.repartition(nBuckets, col("__bucket"))
-        .write.mode("errorifexists").partitionBy("__bucket"))
+      val nBuckets = math.max(1, targetFiles.getOrElse(shufflePartitions))
+      return bucketed(withVals.withColumn("__bucket",
+        pmod(xxhash64(valueNames.map(col): _*), lit(nBuckets.toLong))
+          .cast(IntegerType)), nBuckets)
     }
+    if (targetFiles.forall(_ >= counts.length)) return perTuple(counts.length)
 
-    // sort distinct tuples; nulls first, then natural per-column order
+    // pack: sort distinct tuples (nulls first, then natural per-column
+    // order) into targetFiles contiguous buckets
     val anyOrd: Ordering[Any] = (a: Any, b: Any) => (a, b) match {
       case (null, null) => 0
       case (null, _) => -1
@@ -1719,8 +1758,7 @@ final class LakeTable(val spark: SparkSession, val location: String) {
       Ordering.Implicits.seqOrdering(anyOrd))
 
     val total = sorted.map(_.getLong(k)).sum
-    val nBuckets = math.max(1, math.min(targetFiles.getOrElse(sorted.length),
-      sorted.length))
+    val nBuckets = math.max(1, targetFiles.get)
     val targetRows = math.ceil(total.toDouble / nBuckets)
     var b = 0; var acc = 0L
     val assignment = sorted.map { r =>
@@ -1732,17 +1770,11 @@ final class LakeTable(val spark: SparkSession, val location: String) {
 
     val mapSchema = StructType(
       valueNames.map(n => withVals.schema(n).copy(name = s"__v_$n")) :+
-        StructField("__bucket", org.apache.spark.sql.types.IntegerType, false))
+        StructField("__bucket", IntegerType, false))
     val mapDf = spark.createDataFrame(assignment.toList.asJava, mapSchema)
     val joinCond = valueNames.map(n => withVals(n) <=> mapDf(s"__v_$n"))
       .reduce(_ && _)
-    val out = withVals.join(broadcast(mapDf), joinCond, "left")
-      .select((schema.fieldNames.map(col) :+ col("__bucket")).toIndexedSeq: _*)
-
-    // cluster each bucket into one task; partitionBy then guarantees
-    // exactly one file per bucket (collisions just co-locate buckets)
-    Some(out.repartition(nBuckets, col("__bucket"))
-      .write.mode("errorifexists").partitionBy("__bucket"))
+    bucketed(withVals.join(broadcast(mapDf), joinCond, "left"), nBuckets)
   }
 }
 

@@ -161,7 +161,9 @@ object LakeWriteStats {
   /** Save `w` as parquet under `dir` (a fresh directory) and return every
     * written file's report, keyed by its path relative to `dir`. The
     * directory's name keys the registration that [[LakeParquetFormat]]
-    * looks up, so it must be unique (lake writes use a UUID).
+    * looks up, so it must be unique (lake writes use a UUID). Local
+    * files and directories get their permissions without a process
+    * ([[NioLocalFileSystem]]).
     */
   private[lake] def save(spark: SparkSession, w: DataFrameWriter[Row],
       dir: String, spec: WriteStatsSpec): Map[String, FileReport] = {
@@ -170,7 +172,8 @@ object LakeWriteStats {
     val key = new Path(dir).getName
     require(pending.putIfAbsent(key, (spec, acc)) == null,
       s"a lake write into $key is already running")
-    try w.format(classOf[LakeParquetFormat].getName).save(dir)
+    try w.options(NioLocalFileSystem.writerOptions)
+      .format(classOf[LakeParquetFormat].getName).save(dir)
     finally pending.remove(key)
     acc.value.asScala.map(r => r.path -> r).toMap
   }

@@ -129,6 +129,24 @@ final case class TruncateT(w: Int, column: String) extends PartitionTransform {
 }
 
 object PartitionTransform {
+  /** One 64-bit id per partition tuple, from its transform values and
+    * their types: `xxhash64` over each value and its null flag (the
+    * hash skips nulls, so without the flag (NULL, x) and (x, NULL)
+    * would share an id), after the NaN and -0.0 normalization GROUP BY
+    * applies, so values a grouping counts as one tuple share one id.
+    */
+  def tupleId(values: Seq[(Column, DataType)]): Column =
+    xxhash64(values.flatMap { case (c, dt) =>
+      val v = dt match {
+        case FloatType | DoubleType =>
+          org.apache.spark.sql.GraftBridge.column(
+            org.apache.spark.sql.catalyst.optimizer.NormalizeNaNAndZero(
+              org.apache.spark.sql.GraftBridge.expression(c)))
+        case _ => c
+      }
+      Seq(c.isNull, v)
+    }: _*)
+
   /** Parse `"identity(col)" | "year(col)" | ... | "bucket(16, col)" |
     * "truncate(4, col)"` — the reference's PARTITION BY grammar.
     */

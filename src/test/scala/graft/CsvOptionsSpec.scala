@@ -72,6 +72,32 @@ class CsvOptionsSpec extends AnyFunSuite {
     }
   }
 
+  test("option keys a format does not take refuse at DDL") {
+    val e = LakeEngine(spark)
+    def make(path: String, format: Option[String],
+        opts: Map[String, String]): Unit =
+      e.createLakeTable("keys_bad", path, format = format, options = opts)
+    // the paths do not exist: the keys refuse before any file is read
+    expectMsg("invalid option \"layer\" for format 'parquet'") {
+      make("/nonexistent/x.parquet", Some("parquet"), Map("layer" -> "x"))
+    }
+    expectMsg("invalid option \"layer\" for format 'parquet'") {
+      make("/nonexistent/x.parquet", None, Map("layer" -> "x"))
+    }
+    expectMsg("invalid option \"mergeSchema\" for format 'json'") {
+      make("/nonexistent/x.json", None, Map("mergeSchema" -> "true"))
+    }
+    expectMsg("invalid option \"layer\" for format 'csv'") {
+      make("/nonexistent/x.csv", Some("csv"), Map("layer" -> "x"))
+    }
+    expectMsg("invalid option \"zip_path\" for format 'gdal'") {
+      make("/nonexistent/x.xlsx", Some("gdal"), Map("zip_path" -> "x"))
+    }
+    expectMsg("invalid option \"layer\" for format 'iceberg'") {
+      make("/nonexistent/metadata.json", Some("iceberg"), Map("layer" -> "x"))
+    }
+  }
+
   test("valid option set passes and null/new_line drive the read") {
     val e = LakeEngine(spark)
     val f = csvFile("id,v\n1,N/A\n2,hello\n")

@@ -151,6 +151,15 @@ class LakeWriteStatsSpec extends AnyFunSuite {
     }
   }
 
+  test("partitioned files written in one pass (rows bounded, no count)") {
+    withTimeZone("Asia/Kolkata") {
+      val t = LakeTable.createAsSelect(spark, freshLoc(), "ws_part1",
+        typed(), partitionSpec = Seq("day(ts)", "hour(dt)", "bucket(4, i)",
+          "truncate(3, s)", "identity(dz)"))
+      assertSameStats(t, 2)
+    }
+  }
+
   test("hash-bucketed files (fanout over the cap)") {
     val t = LakeTable.createAsSelect(spark, freshLoc(), "ws_hash", typed(),
       partitionSpec = Seq("identity(i)", "day(ts)"), targetFiles = Some(3),

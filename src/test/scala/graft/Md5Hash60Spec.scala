@@ -62,4 +62,37 @@ class Md5Hash60Spec extends AnyFunSuite {
     }
     assert(got === exp)
   }
+
+  test("Md5Hash60All refuses non-string-array input at analysis") {
+    def hashAll(c: org.apache.spark.sql.Column) =
+      org.apache.spark.sql.GraftBridge.column(graft.functions.Md5Hash60All(
+        org.apache.spark.sql.GraftBridge.expression(c)))
+    val df = spark.range(1).select(array(col("id")).as("ints"),
+      lit("x").as("s"), array(array(lit("x"))).as("nested"))
+    Seq("ints", "s", "nested").foreach { c =>
+      val e = intercept[org.apache.spark.sql.AnalysisException](
+        df.select(hashAll(col(c))))
+      assert(e.getMessage.contains("DATATYPE_MISMATCH"), s"$c: ${e.getMessage}")
+    }
+  }
+
+  test("Md5Hash60All guards a null in an array typed null-free") {
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference,
+      GenericInternalRow}
+    import org.apache.spark.sql.types.{ArrayType, StringType}
+    import org.apache.spark.unsafe.types.UTF8String
+    // a producer that mislabels its array: the kernel must not hash the
+    // null (an NPE deep in md5) or skip it (a wrong null-free result)
+    val e = graft.functions.Md5Hash60All(BoundReference(0,
+      ArrayType(StringType, containsNull = false), nullable = false))
+    val row = new GenericInternalRow(Array[Any](new GenericArrayData(
+      Array[Any](UTF8String.fromString("a"), null))))
+    val interpreted = intercept[IllegalStateException](e.eval(row))
+    assert(interpreted.getMessage.contains("null element"))
+    val projection = org.apache.spark.sql.catalyst.expressions
+      .UnsafeProjection.create(Seq(e))
+    val generated = intercept[IllegalStateException](projection(row))
+    assert(generated.getMessage.contains("null element"))
+  }
 }
