@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): runs the headline SparkEntry
   * queries on `SPARK_GRAFT_SF_DIR`, prints one JSON line with
   * per-query seconds (SPARK_GRAFT_ALL=1 times the full query map).
@@ -40,18 +38,11 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
     // ERROR, not WARN: first-time registration of names that override
     // Spark built-ins (ltrim/to_char/st_* …) emits one WARN each, and any
     // log line near exit competes with the JSON for the driver's
     // 2000-char output tail.
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = SparkEntry.localSession("32", "ERROR")
     // untimed warmup: JIT the parquet reader + codegen paths (scan,
     // hash-agg, broadcast join, window sort) once so the first timed
     // query doesn't absorb JVM startup cost

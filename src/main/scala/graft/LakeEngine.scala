@@ -2501,11 +2501,12 @@ final class LakeEngine(val spark: SparkSession) {
 
   /** Routes one statement that has been through [[QueryDef.pgRewrite]].
     * The dialect chain runs on the WHOLE statement before routing because
-    * the DML regexes and the `expr()` predicates built from SET/WHERE/
-    * RETURNING text need Spark-parsable text; every SELECT piece is
-    * then planned with [[QueryDef.pgPlan]], never rewritten again.
-    * EXECUTE and EXPLAIN ANALYZE re-enter here with text assembled
-    * from rewritten parts.
+    * the statement regexes need Spark-parsable text, and so do the
+    * UPDATE/DELETE clauses that become columns; every SELECT piece is
+    * then planned with [[QueryDef.pgPlan]], never rewritten again, and
+    * every frame a write filters or projects by those columns gets the
+    * same [[graft.plans.NullAwareIn]] fix-up. EXECUTE and EXPLAIN
+    * ANALYZE re-enter here with text assembled from rewritten parts.
     */
   private def route(trimmed: String): DataFrame = {
     import spark.implicits._
@@ -2836,101 +2837,53 @@ final class LakeEngine(val spark: SparkSession) {
             // BIGINT, like PG); re-plans the source — deterministic
             // sources only, like the rest of the SQL surface
             val schema = table(name).meta.sparkSchema
-            val typed = aligned.select(schema.fields.map(f =>
-              col(f.name).cast(f.dataType).as(f.name)).toSeq: _*)
-            typed.selectExpr(splitTopLevel(ret).map(_.trim): _*)
+            returning(aligned.select(schema.fields.map(f =>
+              col(f.name).cast(f.dataType).as(f.name)).toSeq: _*), ret)
           case None =>
             Seq(insObs.get.get("n").flatMap(Option(_))
               .map(_.asInstanceOf[Long]).getOrElse(0L)).toDF("rows_inserted")
         }
-      case deleteRe(name, _) if onlyDml && partParents.contains(name) =>
-        Seq(0L).toDF("rows_deleted") // virtual parent holds no own rows
-      case updateRe(name, _, _) if onlyDml && partParents.contains(name) =>
-        Seq(0L).toDF("rows_updated")
-      case deleteRe(name, whereOrNull)
-          if (tables.contains(name) || partParents.contains(name)) &&
-            familyOf(name).size > 1 && !onlyDml =>
-        // inheritance/partition family: PG propagates the DELETE to
-        // every member (test_inheritance.py posture); RETURNING over a
-        // family is refused, target the members
-        require(retClause.isEmpty,
-          "DELETE ... RETURNING over an inheritance family is not " +
+      case rowDml(name, setList, where)
+          if tables.contains(name) || partParents.contains(name) =>
+        // UPDATE and DELETE: PG propagates them to every member of an
+        // inheritance/partition family (test_inheritance.py posture);
+        // ONLY names the table alone, and a partitioned parent holds no
+        // rows of its own
+        val verb = if (setList.isDefined) "UPDATE" else "DELETE"
+        val members = if (onlyDml) Seq(name) else familyOf(name)
+        require(retClause.isEmpty || members.size == 1,
+          s"$verb ... RETURNING over an inheritance family is not " +
             "supported; target the member tables")
-        val fam = familyOf(name)
-        require(fam.forall(m => tables.contains(m) || partParents.contains(m)),
-          s"family of $name contains foreign members: DELETE cannot propagate")
-        val pred = Option(whereOrNull).map(expr).getOrElse(lit(true))
-        val n = fam.filter(tables.contains).map(m => table(m).delete(pred)).sum
+        require(members.forall(m => tables.contains(m) || partParents.contains(m)),
+          s"family of $name contains foreign members: $verb cannot propagate")
+        val assignments = setList.map(guardedAssignments(name, _))
+        val pred = where.map(expr).getOrElse(lit(true))
+        val targets = members.filter(tables.contains).map(table)
+        // RETURNING reads the pre-statement snapshot (copy-on-write
+        // keeps its files until expiry, so the read is immutable): the
+        // deleted rows, or the updated rows as the assignments leave
+        // them
+        val before = for (ret <- retClause; t <- targets.headOption)
+          yield ret -> t.meta.currentSnapshot
+            .fold(t.read())(snap => t.readAsOf(snap.id))
+        val n = targets.map(t =>
+          assignments.fold(t.delete(pred))(t.update(pred, _))).sum
         refresh(name)
-        Seq(n).toDF("rows_deleted")
-      case deleteRe(name, whereOrNull) if tables.contains(name) =>
-        val t = table(name)
-        val pred = Option(whereOrNull).map(expr).getOrElse(lit(true))
-        val beforeSnap = t.meta.currentSnapshot.map(_.id)
-        val n = t.delete(pred)
-        refresh(name)
-        retClause match {
-          case Some(ret) =>
-            // RETURNING projects the DELETED rows, read from the
-            // pre-delete snapshot (copy-on-write keeps its files
-            // until expiry, so the read is immutable)
-            beforeSnap.map(t.readAsOf).getOrElse(t.read())
-              .filter(coalesce(pred, lit(false)))
-              .selectExpr(splitTopLevel(ret).map(_.trim): _*)
-          case None => Seq(n).toDF("rows_deleted")
-        }
-      case updateRe(name, setList, whereOrNull)
-          if (tables.contains(name) || partParents.contains(name)) &&
-            familyOf(name).size > 1 && !onlyDml =>
-        require(retClause.isEmpty,
-          "UPDATE ... RETURNING over an inheritance family is not " +
-            "supported; target the member tables")
-        val fam = familyOf(name)
-        require(fam.forall(m => tables.contains(m) || partParents.contains(m)),
-          s"family of $name contains foreign members: UPDATE cannot propagate")
-        val assignments = guardedAssignments(name, setList)
-        val pred = Option(whereOrNull).map(expr).getOrElse(lit(true))
-        val n = fam.filter(tables.contains)
-          .map(m => table(m).update(pred, assignments)).sum
-        refresh(name)
-        Seq(n).toDF("rows_updated")
-      case updateRe(name, setList, whereOrNull) if tables.contains(name) =>
-        val assignments = guardedAssignments(name, setList)
-        val pred = Option(whereOrNull).map(expr).getOrElse(lit(true))
-        val t = table(name)
-        val beforeSnap = t.meta.currentSnapshot.map(_.id)
-        val n = t.update(pred, assignments)
-        refresh(name)
-        retClause match {
-          case Some(ret) =>
-            // RETURNING sees the NEW row: replay the assignments over
-            // the affected rows of the pre-update snapshot — all
-            // assignments evaluate over the OLD row simultaneously,
-            // matching the update path's PG semantics
-            val base = beforeSnap.map(t.readAsOf).getOrElse(t.read())
-              .filter(coalesce(pred, lit(false)))
-            val byLower = assignments.map { case (k, v) =>
-              k.toLowerCase -> v
-            }
-            val updated = base.select(base.columns.map { c =>
-              byLower.get(c.toLowerCase).map(_.as(c)).getOrElse(col(c))
-            }.toSeq: _*)
-            updated.selectExpr(splitTopLevel(ret).map(_.trim): _*)
-          case None => Seq(n).toDF("rows_updated")
+        before match {
+          case Some((ret, old)) => returning(lake.LakeTable.matchedRows(
+            old, pred, assignments.getOrElse(Map.empty)), ret)
+          case None =>
+            Seq(n).toDF(if (setList.isDefined) "rows_updated" else "rows_deleted")
         }
       case snapshotsRe(name) if tables.contains(name) =>
         table(name).snapshots
       case filesRe(name) if tables.contains(name) =>
         table(name).files
       case inProgressRe(proj, whereOrNull) =>
-        val df0 = inProgressFiles
-        val df = Option(whereOrNull).fold(df0)(w => df0.filter(expr(w)))
-        if (proj.trim == "*") df
-        else df.select(splitTopLevel(proj).map(c => col(c.trim)): _*)
+        val df = inProgressFiles
+        project(Option(whereOrNull).fold(df)(w => df.filter(expr(w))), proj)
       case fileListRe(proj, glob) =>
-        val all = listFiles(glob)
-        if (proj.trim == "*") all
-        else all.select(splitTopLevel(proj).map(c => col(c.trim)): _*)
+        project(listFiles(glob), proj)
       case fileSizeRe(url) =>
         Seq(fileSize(url)).toDF("size")
       case fileExistsRe(url) =>
@@ -2945,12 +2898,8 @@ final class LakeEngine(val spark: SparkSession) {
         Seq(sources.HttpSource.cacheRemove(url)).toDF("remove")
       case cacheListRe(proj, whereUrlOrNull) =>
         val all = sources.FileCache.list().toDF("path", "file_size")
-        val filtered = Option(whereUrlOrNull)
-          .map(u => all.filter(col("path") === resolveStage(u)))
-          .getOrElse(all)
-        if (proj.trim == "*") filtered
-        else filtered.select(
-          splitTopLevel(proj).map(c => col(c.trim)): _*)
+        project(Option(whereUrlOrNull)
+          .fold(all)(u => all.filter(col("path") === resolveStage(u))), proj)
       case previewRe(url, fmtOrNull) =>
         preview(url, Option(fmtOrNull))
       // COPY ... TO/FROM — the reference's SQL import/export surface
@@ -3524,6 +3473,18 @@ final class LakeEngine(val spark: SparkSession) {
     }.toMap
   }
 
+  /** `df` projected to `*` or a comma-separated column list. */
+  private def project(df: DataFrame, proj: String): DataFrame =
+    if (proj.trim == "*") df
+    else df.select(splitTopLevel(proj).map(c => col(c.trim)): _*)
+
+  /** A RETURNING list projected over `rows`, with the three-valued
+    * `[NOT] IN (subquery)` a SELECT list gets.
+    */
+  private def returning(rows: DataFrame, ret: String): DataFrame =
+    graft.plans.NullAwareIn.frame(
+      rows.selectExpr(splitTopLevel(ret).map(_.trim): _*))
+
   /** Split a depth-0 RETURNING clause off a DML statement (token-wise,
     * so literals containing the word survive).
     */
@@ -3637,12 +3598,8 @@ final class LakeEngine(val spark: SparkSession) {
         val readSide = body match {
           case insertRe(_, _, sel) if sel.toUpperCase.startsWith("SELECT") =>
             sel
-          case deleteRe(t, whereOrNull) =>
-            s"SELECT * FROM $t" +
-              Option(whereOrNull).map(w => s" WHERE $w").getOrElse("")
-          case updateRe(t, _, whereOrNull) =>
-            s"SELECT * FROM $t" +
-              Option(whereOrNull).map(w => s" WHERE $w").getOrElse("")
+          case rowDml(t, _, where) =>
+            s"SELECT * FROM $t" + where.map(w => s" WHERE $w").getOrElse("")
           case _ if isDml => s"SELECT 1" // INSERT ... VALUES: constant source
           case q => q
         }
@@ -3830,6 +3787,15 @@ final class LakeEngine(val spark: SparkSession) {
     "(?is)^DELETE\\s+FROM\\s+(\\w+)(?:\\s+WHERE\\s+(.+))?$".r
   private val updateRe =
     "(?is)^UPDATE\\s+(\\w+)\\s+SET\\s+(.+?)(?:\\s+WHERE\\s+(.+))?$".r
+  /** UPDATE or DELETE text: (target, SET list for UPDATE, WHERE). */
+  private object rowDml {
+    def unapply(text: String)
+        : Option[(String, Option[String], Option[String])] = text match {
+      case deleteRe(name, where) => Some((name, None, Option(where)))
+      case updateRe(name, set, where) => Some((name, Some(set), Option(where)))
+      case _ => None
+    }
+  }
   private val ctasRe = ("(?is)^CREATE\\s+TABLE\\s+(\\w+)" +
     "(?:\\s+PARTITIONED\\s+BY\\s*\\(((?:[^()]|\\([^()]*\\))*)\\))?" +
     "(?:\\s+LOCATION\\s+'([^']*)')?" +

@@ -51,8 +51,10 @@ object QueryDef {
 
   /** The PG dialect text rewrites, in order: the only copy of the chain.
     * Every statement the engine runs, read or write, passes through it
-    * exactly once (`LakeEngine.sql` rewrites the whole statement before
-    * routing, so DML regexes and `expr()` see Spark-parsable text).
+    * exactly once: `LakeEngine.sql` rewrites the whole statement before
+    * routing, so its statement regexes, and the UPDATE/DELETE clauses
+    * parsed into columns for the lake write path, see Spark-parsable
+    * text.
     */
   def pgRewrite(text: String): String = {
     import graft.plans._
@@ -71,15 +73,11 @@ object QueryDef {
   /** Plans already-rewritten SELECT text: registers the PG functions
     * the rewrites emit, parses with `spark.sql`, then gives value-
     * position `[NOT] IN (subquery)` the standard's three-valued result
-    * via [[graft.plans.NullAwareIn]] on the analyzed plan (before the
-    * optimizer turns the IN into an ExistenceJoin).
+    * via [[graft.plans.NullAwareIn.frame]] on the analyzed plan (before
+    * the optimizer turns the IN into an ExistenceJoin).
     */
   def pgPlan(s: SparkSession, rewritten: String): DataFrame = {
     graft.functions.PgFunctions.register(s) // idempotent
-    val df = s.sql(rewritten)
-    val analyzed = df.queryExecution.analyzed
-    val fixed = graft.plans.NullAwareIn(analyzed)
-    if (fixed.fastEquals(analyzed)) df
-    else org.apache.spark.sql.GraftBridge.ofRows(s, fixed)
+    graft.plans.NullAwareIn.frame(s.sql(rewritten))
   }
 }

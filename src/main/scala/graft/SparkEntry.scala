@@ -28,6 +28,22 @@ object SparkEntry {
       _root_.graft.queries.Spatial.defs ++
       _root_.graft.queries.Temporal.defs
 
+  /** The local session the mains run on: `local[SPARK_GRAFT_CPUS]`
+    * (`defaultCpus` when unset) with as many shuffle partitions, UTC
+    * session time, no UI, logging at `logLevel`.
+    */
+  def localSession(defaultCpus: String, logLevel: String): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus)
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel(logLevel)
+    spark
+  }
+
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     byName("q1_agg").run(spark, "/root/testdata/sf0.001")

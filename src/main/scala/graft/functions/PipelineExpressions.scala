@@ -94,7 +94,7 @@ case class LshBandKeys(child: Expression, planes: Seq[Seq[Double]],
   }
 
   /** The compiled per-row kernel; also the codegen target so the scan
-    * stage stays inside WholeStageCodegen (r16 — CodegenFallback forced
+    * stage stays inside WholeStageCodegen (CodegenFallback would force
     * a row materialization + interpreted eval per row).
     */
   def compute(v: ArrayData): ArrayData = {
@@ -694,7 +694,7 @@ case class Md5Hash60All(child: Expression) extends UnaryExpression {
     }
   }
 
-  // r16: doGenCode (was CodegenFallback) so the shingle/word hashing
+  // doGenCode rather than CodegenFallback, so the shingle/word hashing
   // stage stays fused in WholeStageCodegen; primitive long[] fast path
   // when the input array is null-free
   override protected def doGenCode(ctx: CodegenContext,
@@ -950,13 +950,13 @@ case class WinnowSig(child: Expression) extends UnaryExpression {
 }
 
 /** Allocation-free `size(array_intersect(a, b))` for long arrays — the
-  * dedup family's verification kernel (r16, guide §5: the
-  * array_intersect + size chain allocated a hash set AND the
-  * intersection array per candidate pair only to take its length; GC
-  * on the dedup queries was 0.4–1.2 s/query). Semantics are pinned to
-  * `size(array_intersect(a, b))` exactly: the count of DISTINCT
-  * elements of `a` that also occur in `b`, a null element counted once
-  * when present on both sides, null when either array is null.
+  * dedup family's verification kernel (the array_intersect + size
+  * chain allocates a hash set AND the intersection array per candidate
+  * pair only to take its length, 0.4–1.2 s of GC per dedup query).
+  * Semantics are pinned to `size(array_intersect(a, b))` exactly: the
+  * count of DISTINCT elements of `a` that also occur in `b`, a null
+  * element counted once when present on both sides, null when either
+  * array is null.
   * Scratch tables up to 65,536 slots are thread-local and reused across
   * rows, so steady-state per-row allocation is zero.
   */

@@ -80,9 +80,16 @@ object LakeFs {
     if (remote(p)) { val (fs, hp) = fsOf(p); fs.mkdirs(hp); () }
     else { Files.createDirectories(local(p)); () }
 
+  /** Deletes `p` and, on a local path, the `.<name>.crc` checksum a
+    * Hadoop write leaves beside it, as Hadoop's own delete does. */
   def deleteIfExists(p: String): Unit =
     if (remote(p)) { val (fs, hp) = fsOf(p); fs.delete(hp, false); () }
-    else { Files.deleteIfExists(local(p)); () }
+    else {
+      val lp = local(p)
+      Files.deleteIfExists(lp)
+      Option(lp.getFileName).foreach(n =>
+        Files.deleteIfExists(lp.resolveSibling(s".$n.crc")))
+    }
 
   def deleteRecursive(p: String): Unit =
     if (remote(p)) { val (fs, hp) = fsOf(p); fs.delete(hp, true); () }

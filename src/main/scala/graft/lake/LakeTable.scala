@@ -1,5 +1,6 @@
 package graft.lake
 
+import graft.plans.NullAwareIn
 import java.util.UUID
 import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeSeq,
@@ -64,17 +65,17 @@ final class LakeTable(val spark: SparkSession, val location: String) {
 
   def read(): DataFrame = scan(None)
 
+  /** The pruning index behind the most recent [[readIndexed]] view —
+    * [[scanReport]] reads its counters after a query runs.
+    */
+  @volatile private var lastIndex: Option[LakeFileIndex] = None
+
   /** Current snapshot behind the pruning [[LakeFileIndex]]: filters of
     * ANY later query over this frame (spark.sql on a registered view,
     * DataFrame .filter, joins) prune data files automatically at plan
     * time. Falls back to the per-version projection when metadata-only
     * schema changes left older files behind.
     */
-  /** The pruning index behind the most recent [[readIndexed]] view —
-    * [[scanReport]] reads its counters after a query runs.
-    */
-  @volatile private var lastIndex: Option[LakeFileIndex] = None
-
   def readIndexed(): DataFrame = {
     val m = meta
     val hasInterval = m.currentSchema.fields.exists(f =>
@@ -594,10 +595,11 @@ final class LakeTable(val spark: SparkSession, val location: String) {
     val posEntries: Seq[FileEntry] =
       if (partial.isEmpty) Nil
       else {
-        val posDf = readResolved(m, partial ++ dels, withPos = true)
-          .filter(coalesce(pred, lit(false)))
-          .select(RowIds.normalizePath(col("__rid_fp")).as("file_path"),
-            col("__rid_ri").as("pos"))
+        val posDf = NullAwareIn.frame(
+          readResolved(m, partial ++ dels, withPos = true)
+            .filter(coalesce(pred, lit(false)))
+            .select(RowIds.normalizePath(col("__rid_fp")).as("file_path"),
+              col("__rid_ri").as("pos")))
         writeDeleteEntries(m, posDf, partial.map(norm))
       }
     // per-file position counts: this op's batch from its write, the
@@ -668,10 +670,10 @@ final class LakeTable(val spark: SparkSession, val location: String) {
     val rewritten: Seq[FileEntry] =
       if (cowFiles.isEmpty) Nil
       else {
-        val keepDf = (if (m.rowIdsEnabled)
+        val keepDf = NullAwareIn.frame((if (m.rowIdsEnabled)
           readFilesWithRowIds(m, cowFiles.toSeq ++ dels)
         else readResolved(m, cowFiles.toSeq ++ dels))
-          .filter(!coalesce(pred, lit(false)))
+          .filter(!coalesce(pred, lit(false))))
         val entries = writeData(m, keepDf, None,
           Some(cowFiles.map(_.rows).sum),
           extraCols = if (m.rowIdsEnabled) Seq(RowIds.Col) else Nil)
@@ -739,21 +741,8 @@ final class LakeTable(val spark: SparkSession, val location: String) {
     val classified = Pruning.classify(m, resolved, files)
     val candidates = classified.collect { case (f, d) if d != Pruning.Skip => f }
     if (candidates.isEmpty) 0L else {
-
-    // all assignments evaluate over the OLD row simultaneously (PG
-    // semantics: `SET a = b, b = a` swaps) — a sequential withColumn
-    // fold would let later assignments see earlier NEW values. Lookup
-    // is case-insensitive like column resolution (SET R_NAME = … must
-    // hit r_name, as withColumn did).
-    val byLower = assignments.map { case (k, v) => k.toLowerCase -> v }
-    require(byLower.size == assignments.size,
-      s"update: duplicate assignment targets in ${assignments.keys}")
-    val tableCols = m.sparkSchema.fieldNames.toSeq
-    val updatedRows = readResolved(m, candidates ++ dels)
-      .filter(coalesce(pred, lit(false)))
-      .select(tableCols.map { name =>
-        byLower.get(name.toLowerCase).map(_.as(name)).getOrElse(col(name))
-      }: _*)
+    val updatedRows = LakeTable.matchedRows(readResolved(m, candidates ++ dels),
+      pred, assignments)
     // new row versions first (reads only the immutable old files), then
     // the removal plan; ONE atomic commit covers both halves
     // (the row-ids hook assigns ids; the candidates' rows bound the
@@ -994,15 +983,33 @@ final class LakeTable(val spark: SparkSession, val location: String) {
     val referenced = onDisk.snapshots.flatMap(_.files)
       .map(f => LakeFs.pathKey(f.path)).toSet
     val dataDir = LakeFs.child(location, "data")
-    LakeFs.listFilesRecursive(dataDir, ".parquet")
-      .map(_._1)
+    val listed = LakeFs.listFilesRecursive(dataDir).map(_._1)
+    val swept = listed.filter(_.endsWith(".parquet"))
       // an in-flight Spark write stages under _temporary until its job
       // commit; those are never committed-then-orphaned files, and
       // deleting one corrupts the writer — out of scope by name
       .filterNot(_.contains("/_temporary/"))
       .filterNot(p => referenced.contains(LakeFs.pathKey(p)))
       .filterNot(inGrace)
-      .foreach(LakeFs.deleteIfExists)
+    swept.foreach(LakeFs.deleteIfExists)
+    // a commit directory left with only its job's `_SUCCESS` marker and
+    // local `.<name>.crc` checksums goes once the marker is past the
+    // grace; a directory without the marker is a write still in flight
+    def checksum(rel: String) = {
+      val name = rel.substring(rel.lastIndexOf('/') + 1)
+      name.startsWith(".") && name.endsWith(".crc")
+    }
+    val base = LakeFs.pathKey(dataDir) + "/"
+    listed.filterNot(swept.toSet)
+      .map(p => LakeFs.pathKey(p).stripPrefix(base).split("/", 2))
+      .collect { case Array(dir, rel) => dir -> rel }
+      .groupMap(_._1)(_._2)
+      .foreach { case (dir, rels) =>
+        val commitDir = LakeFs.child(dataDir, dir)
+        if (rels.filterNot(checksum) == Seq("_SUCCESS") &&
+            !inGrace(LakeFs.child(commitDir, "_SUCCESS")))
+          LakeFs.deleteRecursive(commitDir)
+      }
     // manifests referenced by no surviving snapshot (expired snapshots,
     // lost CAS races) — same sweep semantics as the data files above
     val liveManifests = TableMetadata.referencedManifests(onDisk)
@@ -1779,6 +1786,22 @@ final class LakeTable(val spark: SparkSession, val location: String) {
 }
 
 object LakeTable {
+
+  /** The rows `pred` selects, as `assignments` leave them (UPDATE's new
+    * row versions and what its RETURNING sees), with [[NullAwareIn]]'s
+    * 3VL. Assignments evaluate over the OLD row simultaneously (PG:
+    * `SET a = b, b = a` swaps) and match columns case-insensitively.
+    */
+  private[graft] def matchedRows(rows: DataFrame, pred: Column,
+      assignments: Map[String, Column] = Map.empty): DataFrame = {
+    val byLower = assignments.map { case (k, v) => k.toLowerCase -> v }
+    require(byLower.size == assignments.size,
+      s"update: duplicate assignment targets in ${assignments.keys}")
+    NullAwareIn.frame(rows.filter(coalesce(pred, lit(false)))
+      .select(rows.columns.toSeq.map { name =>
+        byLower.get(name.toLowerCase).map(_.as(name)).getOrElse(col(name))
+      }: _*))
+  }
 
   /** Open the parquet footer of `path`, apply `f` to the reader, close
     * it: row count and schema without a Spark job.

@@ -40,9 +40,9 @@ object CorpusOverlap {
     */
   private def slicedShingles(df: DataFrame, sliceCol: String,
       textCol: String, n: Int): DataFrame =
-    // r16: Par.spread removed (driver: 0.85x with it and anti-scaling
-    // 0.65; PlanDump showed the spread run burning 7.7 CPU-s for a
-    // 0.8 s single-task baseline — the exchange duplicated per branch)
+    // no Par.spread: its exchange duplicates per branch (measured 0.85x
+    // with it, anti-scaling to 0.65; PlanDump showed the spread run
+    // burning 7.7 CPU-s against a 0.8 s single-task plan)
     df.select(col(sliceCol).cast("string").as("slice"),
         explode(shinglesOf(col(textCol), n)).as("g"))
 

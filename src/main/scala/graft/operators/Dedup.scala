@@ -33,16 +33,16 @@ object Dedup {
 
   /** Per-doc distinct word-shingle sets (id, shingles).
     *
-    * r16: `Par.spread` is now OPT-IN (`spread` param) and off for the
-    * ngram paths — those feed multi-consumer plans (prefix + verify
+    * `Par.spread` is OPT-IN (`spread` param) and off for the ngram
+    * paths — those feed multi-consumer plans (prefix + verify
     * branches), and ColumnPruning pushes each consumer's projection
     * below the round-robin exchange, so the exchange DUPLICATES per
-    * consumer (q_dedup_ngram_capped grew 48->72 Exchange nodes and the
-    * driver measured it 3.5x slower, anti-scaling 3x from 8 to 32
-    * cores: 32 concurrent shingle-allocating tasks per branch multiply
-    * GC debt at exactly the graded core count). The minhash signature
-    * path keeps it: there the downstream consumers share one column
-    * set, the exchange is reused, and the driver measured 1.45x faster.
+    * consumer (with it, q_dedup_ngram_capped plans 72 Exchange nodes
+    * instead of 48 and measured 3.5x slower, anti-scaling 3x from 8 to
+    * 32 cores: 32 concurrent shingle-allocating tasks per branch
+    * multiply GC debt). The minhash signature path keeps it: there the
+    * downstream consumers share one column set, the exchange is reused,
+    * and it measured 1.45x faster.
     */
   private def shingleSets(df: DataFrame, idCol: String,
       textCol: String, spread: Boolean = false): DataFrame =
@@ -63,8 +63,9 @@ object Dedup {
 
   /** `size(array_intersect(a, b))` for 60-bit-hashed shingle arrays via
     * the allocation-free [[graft.functions.IntersectCount]] kernel
-    * (value-identical; r16 — array_intersect allocated a set + result
-    * array per candidate pair, the dedup family's main GC source).
+    * (value-identical; array_intersect allocates a set + result array
+    * per candidate pair, which made it the dedup family's main GC
+    * source).
     */
   private def intersectSize(a: Column, b: Column): Column =
     org.apache.spark.sql.GraftBridge.column(graft.functions.IntersectCount(
@@ -191,8 +192,8 @@ object Dedup {
     */
   def simhashPairs(df: DataFrame, idCol: String, textCol: String,
       maxHamming: Int = SimhashMaxHamming): DataFrame = {
-    // r16: Par.spread removed (driver: 2.2x slower with it; the banded
-    // self-join consumes this frame twice, duplicating the RR exchange)
+    // no Par.spread: the banded self-join consumes this frame twice,
+    // duplicating the round-robin exchange (measured 2.2x slower)
     val sim = df.withColumn("__ws", TextOps.words(col(textCol)))
       .withColumn("__whs", TextOps.hashAll("__ws"))
       .select(col(idCol).as("id"), org.apache.spark.sql.GraftBridge.column(

@@ -37,8 +37,8 @@ object Pack {
     // btotal as an unbounded window sum over the SAME bucket
     // partitioning as the cumsum: both window functions evaluate in one
     // pass over one exchange, where a separate groupBy(bucket) planned
-    // its own partial-agg + exchange pass over the corpus (r16, guide
-    // §2.4 — two operations keyed the same way share one exchange)
+    // its own partial-agg + exchange pass over the corpus (two
+    // operations keyed the same way share one exchange)
     val wt = Window.partitionBy("bucket")
     val cum = base.withColumn("cum_in_bucket", sum("n_tokens").over(wb))
       .withColumn("btotal", sum("n_tokens").over(wt))

@@ -131,8 +131,8 @@ object Sampling {
     val counts = df.groupBy(domainCol).agg(count(lit(1)).as("__nd"))
     // corpus totals as a single-partition window over the tiny domain
     // table (one row per domain) instead of agg + crossJoin: one fewer
-    // pass/broadcast stage on the critical path (r16, guide §2.4); the
-    // double-sum reordering is absorbed by the round(..., 9) contract
+    // pass/broadcast stage on the critical path; the double-sum
+    // reordering is absorbed by the round(..., 9) contract
     val wAll = Window.rowsBetween(
       Window.unboundedPreceding, Window.unboundedFollowing)
     val rates = counts

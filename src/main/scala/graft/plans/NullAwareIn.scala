@@ -2,6 +2,7 @@ package graft.plans
 
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical._
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types.BooleanType
 
 /** Standard-SQL three-valued `[NOT] IN (subquery)` OUTSIDE filters —
@@ -49,11 +50,12 @@ import org.apache.spark.sql.types.BooleanType
   * common analytics case: key IN (SELECT key …)) keep Spark's native
   * single-join plan untouched.
   *
-  * Applied to ANALYZED plans (before optimization) by
-  * [[graft.QueryDef.pgPlan]], which plans every SELECT the engine
-  * runs — queries, views, CTAS and INSERT sources, `COPY (…) TO` — so
-  * reads and writes share one 3VL; re-analysis after the rewrite
-  * deduplicates the shared subplan instances.
+  * Applied to ANALYZED plans (before optimization) by [[frame]], on
+  * every SELECT [[graft.QueryDef.pgPlan]] plans (queries, views, CTAS
+  * and INSERT sources, `COPY (…) TO`) and every frame a write filters
+  * or projects by statement text, RETURNING included, so reads and
+  * writes share one 3VL; re-analysis after the rewrite deduplicates
+  * the shared subplan instances.
   */
 object NullAwareIn {
 
@@ -154,5 +156,15 @@ object NullAwareIn {
     case w: Window =>
       w.copy(windowExpressions = w.windowExpressions
         .map(e => rewriteExpr(e).asInstanceOf[NamedExpression]))
+  }
+
+  /** `df` with [[apply]] run over its analyzed plan; `df` itself, its
+    * analysis kept, when nothing was rewritten.
+    */
+  def frame(df: DataFrame): DataFrame = {
+    val analyzed = df.queryExecution.analyzed
+    val fixed = apply(analyzed)
+    if (fixed.fastEquals(analyzed)) df
+    else org.apache.spark.sql.GraftBridge.ofRows(df.sparkSession, fixed)
   }
 }

@@ -96,11 +96,11 @@ object Relational {
         |GROUP BY n_name
         |ORDER BY n_name""".stripMargin) { (s, dir) =>
       val l = li(s, dir)
-      // r16: the r15 shuffle_hash hint is REVERTED — the driver measured
-      // it 3.4x slower (0.97 -> 3.29 s) because the SHJ forces a full
-      // shuffle of the single-row-group lineitem scan through ONE map
-      // task, while the broadcast probe never shuffles lineitem at all.
-      // At 100 TB the planner's own estimates pick the strategy; no hint.
+      // no join hint: a shuffle_hash hint measured 3.4x slower (0.97 ->
+      // 3.29 s) because the SHJ forces a full shuffle of the
+      // single-row-group lineitem scan through ONE map task, while the
+      // broadcast probe never shuffles lineitem at all. At 100 TB the
+      // planner's own estimates pick the strategy.
       val o = ord(s, dir)
       val c = broadcast(Tables.df(s, dir, "customer"))
       val n = broadcast(Tables.df(s, dir, "nation"))

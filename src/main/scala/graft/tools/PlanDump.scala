@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Optimization-round instrumentation (guide §1): for each named query,
   * measure separately
   *   - build seconds: dialect rewrites + parse + analysis (driver-side,
@@ -22,14 +20,7 @@ object PlanDump {
       if (args.length > 2) args(2).split(",").map(_.trim).filter(_.nonEmpty).toSeq
       else graft.Bench.headline
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.SparkEntry.localSession("32", "ERROR")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     // stage-level accounting (guide §1.1): is wall time going to task
     // work, or to scheduling/planning/barriers between stages?

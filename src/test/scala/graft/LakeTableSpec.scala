@@ -214,6 +214,41 @@ class LakeTableSpec extends AnyFunSuite {
     assert(t.read().count() == src.count() - 1)
   }
 
+  test("vacuum leaves no checksum without its file and no marker-only " +
+      "commit directory") {
+    val src = Tables.df(spark, sf, "nation")
+    val t = LakeTable.createAsSelect(spark, freshLoc(), "sweep", src)
+    t.update(col("n_nationkey") === 3, Map("n_name" -> lit("PATCHED")))
+    t.delete(col("n_nationkey") < 5)
+    t.expireSnapshots(keepLast = 1, graceMs = 0L)
+    t.vacuum(keepLast = 1, graceMs = 0L)
+    val dataDir = java.nio.file.Paths.get(t.location, "data")
+    def filesUnder(d: java.nio.file.Path) = {
+      val s = java.nio.file.Files.walk(d)
+      try s.iterator().asScala
+        .filter(p => java.nio.file.Files.isRegularFile(p)).toList
+      finally s.close()
+    }
+    val strayCrc = filesUnder(dataDir).filter { p =>
+      val name = p.getFileName.toString
+      name.startsWith(".") && name.endsWith(".crc") &&
+        !java.nio.file.Files.exists(
+          p.resolveSibling(name.drop(1).stripSuffix(".crc")))
+    }
+    val markers = Set("_SUCCESS", "._SUCCESS.crc")
+    val markerOnly = {
+      val s = java.nio.file.Files.list(dataDir)
+      try s.iterator().asScala.filter(java.nio.file.Files.isDirectory(_))
+        .filter(d => filesUnder(d).forall(p =>
+          markers.contains(p.getFileName.toString))).toList
+      finally s.close()
+    }
+    assert(strayCrc.isEmpty && markerOnly.isEmpty,
+      s"checksums without a file: $strayCrc; " +
+        s"marker-only directories: $markerOnly")
+    assert(t.read().count() == src.count() - 5)
+  }
+
   test("changelog: snapshot diff yields insert/delete rows") {
     val src = Tables.df(spark, sf, "nation")
     val t = LakeTable.createAsSelect(spark, freshLoc(), "chg", src)
