@@ -1,6 +1,7 @@
 package graft
 
 import graft.lake.LakeTable
+import graft.plans.PgLexer
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import scala.jdk.CollectionConverters._
@@ -2137,7 +2138,7 @@ final class LakeEngine(val spark: SparkSession) {
     * the SURVEY §1.2 storage conventions).
     */
   private def parseColumns(spec: String): StructType = {
-    val fields = splitTopLevel(spec).map(_.trim).filter(_.nonEmpty).map { c =>
+    val fields = listItems(spec).map { c =>
       val Array(n, t) = c.split("\\s+", 2)
       org.apache.spark.sql.types.StructField(n,
         org.apache.spark.sql.types.DataType.fromDDL(pgTypeName(t)))
@@ -2516,7 +2517,7 @@ final class LakeEngine(val spark: SparkSession) {
     // The clause is split off TOKEN-WISE before the regexes run, so a
     // string literal containing the word "returning" (DELETE ... WHERE
     // msg LIKE '%not returning%') never splits the statement: it is
-    // the trailing depth-0 RETURNING keyword (never one inside a
+    // the first depth-0 RETURNING keyword token (never one inside a
     // string literal or parenthesized subquery)
     val isDml = dmlRe.pattern.matcher(trimmed).matches()
     val (dmlText0, retClause): (String, Option[String]) =
@@ -2711,8 +2712,7 @@ final class LakeEngine(val spark: SparkSession) {
         val key = name.toLowerCase
         require(!prepared.contains(key),
           s"""prepared statement "$name" already exists""")
-        val types = Option(typesOrNull).toSeq.flatMap(splitTopLevel)
-          .map(_.trim).filter(_.nonEmpty)
+        val types = Option(typesOrNull).toSeq.flatMap(listItems)
         prepared.put(key, (stmt.trim, types))
         Seq(name).toDF("prepared")
       case executeRe(name, argsOrNull) =>
@@ -2726,8 +2726,7 @@ final class LakeEngine(val spark: SparkSession) {
         Seq(name).toDF("deallocated")
       case createFromRe(name, specOrNull, locOrNull, fmtPre, mode, url,
           fmtPost) =>
-        val spec = Option(specOrNull).toSeq
-          .flatMap(splitTopLevel).map(_.trim).filter(_.nonEmpty)
+        val spec = Option(specOrNull).toSeq.flatMap(listItems)
         val loc = Option(locOrNull)
           .getOrElse(LakeEngine.defaultTableLocation(spark, name))
         val t = createTableFrom(name, loc, url,
@@ -2737,8 +2736,7 @@ final class LakeEngine(val spark: SparkSession) {
         register(name, t)
         Seq(t.read().count()).toDF("rows_loaded")
       case ctasRe(name, specOrNull, locOrNull, select) =>
-        val spec = Option(specOrNull).toSeq
-          .flatMap(splitTopLevel).map(_.trim).filter(_.nonEmpty)
+        val spec = Option(specOrNull).toSeq.flatMap(listItems)
         val loc = Option(locOrNull)
           .getOrElse(LakeEngine.defaultTableLocation(spark, name))
         val t = createTableAsSelect(name, loc, QueryDef.pgPlan(spark, select),
@@ -2913,7 +2911,7 @@ final class LakeEngine(val spark: SparkSession) {
           else spark.table(nameOrNull)
         // optional PG column-subset list: COPY t (a, b) TO …
         val df = Option(colsOrNull).map(cl =>
-          base.select(splitTopLevel(cl).map(c => expr(c.trim)): _*))
+          base.select(PgLexer.splitTop(cl, ",").map(c => expr(c.trim)): _*))
           .getOrElse(base)
         // the exported-row count rides the write job as an observed
         // metric — one scan, not count()+write
@@ -2924,7 +2922,7 @@ final class LakeEngine(val spark: SparkSession) {
           .getOrElse(0L)).toDF("rows_exported")
       case copyFromRe(name, colsOrNull, url, optsOrNull)
           if tables.contains(name) =>
-        val cols = Option(colsOrNull).map(splitTopLevel(_).map(
+        val cols = Option(colsOrNull).map(PgLexer.splitTop(_, ",").map(
           _.trim.stripPrefix("`").stripSuffix("`")))
         Seq(copyFrom(name, url, validatedCopyOptions(optsOrNull), cols))
           .toDF("rows_imported")
@@ -2993,7 +2991,7 @@ final class LakeEngine(val spark: SparkSession) {
       case addFilesRe(name, arr) if tables.contains(name) =>
         // zero-copy adoption (reference CALL lake_iceberg.
         // add_files_to_table, test_iceberg_add_table.py)
-        val paths = splitTopLevel(arr).map(_.trim)
+        val paths = PgLexer.splitTop(arr, ",").map(_.trim)
           .map(p => p.stripPrefix("'").stripSuffix("'"))
           .filter(_.nonEmpty)
         table(name).addFiles(paths)
@@ -3097,8 +3095,7 @@ final class LakeEngine(val spark: SparkSession) {
               parentSchema.fieldNames.map(_.toLowerCase).toSeq,
               s"LIKE $src columns must match the inherited parent's")
             Nil
-          case other => splitTopLevel(other).map(_.trim).filter(_.nonEmpty)
-            .map(parseColDef)
+          case other => listItems(other).map(parseColDef)
         }
         val schema = StructType(parentSchema.fields ++ extras.map(_._1))
         // domain/default enforcement inherits from the parent and
@@ -3141,8 +3138,7 @@ final class LakeEngine(val spark: SparkSession) {
         reapplyViews()
         Seq(name).toDF("inheritance_changed")
       case createPartParentRe(name, colList, keyCol) =>
-        val parsed = splitTopLevel(colList).map(_.trim).filter(_.nonEmpty)
-          .map(parseColDef)
+        val parsed = listItems(colList).map(parseColDef)
         val schema = StructType(parsed.map(_._1))
         require(schema.fieldNames.exists(_.equalsIgnoreCase(keyCol)),
           s"partition key $keyCol is not a column of $name")
@@ -3197,8 +3193,7 @@ final class LakeEngine(val spark: SparkSession) {
         register(name, t)
         Seq(name).toDF("table_created")
       case createColsRe(name, colList, specOrNull, locOrNull, withOrNull) =>
-        val parsed = splitTopLevel(colList).map(_.trim).filter(_.nonEmpty)
-          .map(parseColDef)
+        val parsed = listItems(colList).map(parseColDef)
         val fields = parsed.map(_._1)
         val domEntries = parsed.collect {
           case (f, Some(dn), _) => f.name -> dn
@@ -3208,18 +3203,16 @@ final class LakeEngine(val spark: SparkSession) {
         }
         if (domEntries.nonEmpty) domainCols.put(name, domEntries)
         if (defEntries.nonEmpty) colDefaults.put(name, defEntries)
-        val spec = Option(specOrNull).toSeq
-          .flatMap(splitTopLevel).map(_.trim).filter(_.nonEmpty)
+        val spec = Option(specOrNull).toSeq.flatMap(listItems)
         val loc = Option(locOrNull)
           .getOrElse(LakeEngine.defaultTableLocation(spark, name))
         // PG-style WITH (k = 'v', ...) creation options — the
         // reference's table-option surface (compatibility_mode,
         // row_ids, out_of_range_values, ...)
-        val props = Option(withOrNull).toSeq.flatMap(splitTopLevel)
-          .map(_.trim).filter(_.nonEmpty).map { o =>
-            val Array(k, v) = o.split("=", 2)
-            k.trim.toLowerCase -> v.trim.stripPrefix("'").stripSuffix("'")
-          }.toMap
+        val props = Option(withOrNull).toSeq.flatMap(listItems).map { o =>
+          val Array(k, v) = o.split("=", 2)
+          k.trim.toLowerCase -> v.trim.stripPrefix("'").stripSuffix("'")
+        }.toMap
         val t = LakeTable.create(spark,
           loc, name, org.apache.spark.sql.types.StructType(fields), spec,
           props)
@@ -3232,11 +3225,11 @@ final class LakeEngine(val spark: SparkSession) {
         table(name).dropColumn(colName); refresh(name)
         Seq(colName).toDF("column_dropped")
       case alterSetPartRe(name, spec) if tables.contains(name) =>
-        val transforms = splitTopLevel(spec).map(_.trim).filter(_.nonEmpty)
+        val transforms = listItems(spec)
         table(name).setPartitionSpec(transforms); refresh(name)
         Seq(transforms.mkString(", ")).toDF("partition_spec")
       case alterClusterRe(name, cols) if tables.contains(name) =>
-        val cs = splitTopLevel(cols).map(_.trim).filter(_.nonEmpty)
+        val cs = listItems(cols)
         table(name).cluster(cs); refresh(name)
         Seq(cs.mkString(", ")).toDF("clustered_by")
       case _ =>
@@ -3254,8 +3247,7 @@ final class LakeEngine(val spark: SparkSession) {
     val (stmt, types) = prepared.getOrElse(name.toLowerCase,
       throw new IllegalArgumentException(
         s"""prepared statement "$name" does not exist"""))
-    val args = Option(argsOrNull).toSeq.flatMap(splitTopLevel)
-      .map(_.trim).filter(_.nonEmpty)
+    val args = Option(argsOrNull).toSeq.flatMap(listItems)
     // Declared parameter types are PG-spelled (int4, text, numeric…);
     // route through pgTypeName so the emitted CAST is Spark-valid.
     val castArgs = args.zipWithIndex.map { case (a, i) =>
@@ -3264,62 +3256,26 @@ final class LakeEngine(val spark: SparkSession) {
     plans.DollarParams.bind(stmt, castArgs)
   }
 
-  /** `type [DEFAULT expr] [CHECK (expr)]` → (base, default, check).
-    * Scanned at paren depth 0 so expression-internal keywords survive.
+  /** `type [DEFAULT expr] [CHECK (expr)]` → (base, default, check),
+    * split at depth-0 keyword tokens so expression-internal keywords,
+    * parens and string literals survive.
     */
   private def parseDomainTail(tail: String): (String, Option[String],
       Option[String]) = {
-    val up = tail.toUpperCase
-    def topLevelIdx(kw: String): Int = {
-      var depth = 0
-      var i = 0
-      while (i < tail.length) {
-        tail.charAt(i) match {
-          case '(' => depth += 1
-          case ')' => depth -= 1
-          case '\'' => // skip string literal
-            i += 1
-            while (i < tail.length && tail.charAt(i) != '\'') i += 1
-          case _ if depth == 0 && up.startsWith(kw, i) &&
-            (i == 0 || !tail.charAt(i - 1).isLetterOrDigit) &&
-            (i + kw.length >= tail.length ||
-              !tail.charAt(i + kw.length).isLetterOrDigit) => return i
-          case _ => ()
-        }
-        i += 1
-      }
-      -1
+    val (beforeCheck, check) = PgLexer.topKeyword(tail, "CHECK") match {
+      case None => (tail, None)
+      case Some((before, after)) =>
+        val ts = PgLexer.tokenize(after)
+        require(ts.headOption.exists(_.is('o', "(")),
+          "CREATE DOMAIN: CHECK requires a parenthesized expression")
+        val close = PgLexer.matchParen(ts, 0)
+        require(close > 0, "CREATE DOMAIN: unbalanced CHECK parens")
+        (before, Some(after.substring(ts(0).end, ts(close).start).trim))
     }
-    val checkIdx = topLevelIdx("CHECK")
-    val beforeCheck = if (checkIdx < 0) tail else tail.substring(0, checkIdx)
-    val check = if (checkIdx < 0) None else {
-      val open = tail.indexOf('(', checkIdx)
-      require(open > 0, "CREATE DOMAIN: CHECK requires a parenthesized expression")
-      var depth = 0
-      var i = open
-      var close = -1
-      while (i < tail.length && close < 0) {
-        tail.charAt(i) match {
-          case '(' => depth += 1
-          case ')' => depth -= 1; if (depth == 0) close = i
-          case _ => ()
-        }
-        i += 1
-      }
-      require(close > open, "CREATE DOMAIN: unbalanced CHECK parens")
-      Some(tail.substring(open + 1, close).trim)
+    val (base, default) = PgLexer.topKeyword(beforeCheck, "DEFAULT") match {
+      case None => (beforeCheck.trim, None)
+      case Some((b, d)) => (b.trim, Some(d.trim).filter(_.nonEmpty))
     }
-    val defIdx = {
-      val upB = beforeCheck.toUpperCase
-      val m = "(?i)\\bDEFAULT\\b".r.findFirstMatchIn(upB)
-      m.map(_.start).getOrElse(-1)
-    }
-    val base =
-      (if (defIdx < 0) beforeCheck else beforeCheck.substring(0, defIdx)).trim
-    val default =
-      if (defIdx < 0) None
-      else Some(beforeCheck.substring(defIdx + "DEFAULT".length).trim)
-        .filter(_.nonEmpty)
     (base, default, check)
   }
 
@@ -3412,18 +3368,9 @@ final class LakeEngine(val spark: SparkSession) {
     * regex would also rewrite the contents of a literal like
     * `CHECK (VALUE <> 'no value')`.
     */
-  private def substituteValue(check: String, replacement: String): String = {
-    val ts = graft.plans.QuantifiedSubqueries.tokenize(check)
-    val sb = new StringBuilder
-    var last = 0
-    ts.foreach { t =>
-      if (t.kind == 'w' && t.up == "VALUE") {
-        sb.append(check.substring(last, t.start)).append(replacement)
-        last = t.end
-      }
-    }
-    sb.append(check.substring(last)).toString
-  }
+  private def substituteValue(check: String, replacement: String): String =
+    PgLexer.splice(check, PgLexer.tokenize(check).filter(_.is('w', "VALUE"))
+      .map(t => (t.start, t.end, replacement)))
 
   /** Wrap a frame headed for `name` with per-row domain CHECK
     * assertions (reference test_domain.py: COPY/INSERT must raise
@@ -3456,8 +3403,12 @@ final class LakeEngine(val spark: SparkSession) {
       : Map[String, org.apache.spark.sql.Column] = {
     val doms = domainCols.getOrElse(name, Nil)
       .map { case (c, d) => c.toLowerCase -> d }.toMap
-    splitTopLevel(setList).map { a =>
-      val Array(c, e) = a.split("=", 2)
+    PgLexer.splitTop(setList, ",").map { a =>
+      val (c, e) = PgLexer.splitTop(a, "=") match {
+        case c +: rest if rest.nonEmpty => (c, rest.mkString("="))
+        case _ => throw new IllegalArgumentException(
+          s"syntax error in SET item: ${a.trim}")
+      }
       val target = c.trim
       val vExpr = expr(e.trim)
       val wrapped = doms.get(target.toLowerCase)
@@ -3473,38 +3424,31 @@ final class LakeEngine(val spark: SparkSession) {
     }.toMap
   }
 
+  /** The trimmed, non-empty items of a depth-0 comma list. */
+  private def listItems(s: String): Seq[String] =
+    PgLexer.splitTop(s, ",").map(_.trim).filter(_.nonEmpty)
+
   /** `df` projected to `*` or a comma-separated column list. */
   private def project(df: DataFrame, proj: String): DataFrame =
     if (proj.trim == "*") df
-    else df.select(splitTopLevel(proj).map(c => col(c.trim)): _*)
+    else df.select(PgLexer.splitTop(proj, ",").map(c => col(c.trim)): _*)
 
   /** A RETURNING list projected over `rows`, with the three-valued
     * `[NOT] IN (subquery)` a SELECT list gets.
     */
   private def returning(rows: DataFrame, ret: String): DataFrame =
     graft.plans.NullAwareIn.frame(
-      rows.selectExpr(splitTopLevel(ret).map(_.trim): _*))
+      rows.selectExpr(PgLexer.splitTop(ret, ",").map(_.trim): _*))
 
   /** Split a depth-0 RETURNING clause off a DML statement (token-wise,
     * so literals containing the word survive).
     */
-  private def splitReturning(text: String): (String, Option[String]) = {
-    val ts = graft.plans.QuantifiedSubqueries.tokenize(text)
-    var depth = 0
-    var found: Option[(Int, Int)] = None
-    ts.foreach { t =>
-      if (t.kind == 'o' && t.up == "(") depth += 1
-      else if (t.kind == 'o' && t.up == ")") depth -= 1
-      else if (depth == 0 && t.kind == 'w' && t.up == "RETURNING")
-        found = Some((t.start, t.end))
-    }
-    found match {
-      case Some((s, e)) =>
-        (text.substring(0, s).trim,
-          Some(text.substring(e).trim).filter(_.nonEmpty))
+  private def splitReturning(text: String): (String, Option[String]) =
+    PgLexer.topKeyword(text, "RETURNING") match {
+      case Some((body, ret)) =>
+        (body.trim, Some(ret.trim).filter(_.nonEmpty))
       case None => (text, None)
     }
-  }
 
   private def stripQuotes(v: String): String = {
     val t = v.trim
@@ -3669,7 +3613,7 @@ final class LakeEngine(val spark: SparkSession) {
     * bare words or quoted values, normalized to reader/writer options.
     */
   private def parseCopyOptions(spec: String): Map[String, String] =
-    Option(spec).toSeq.flatMap(splitTopLevel).map(_.trim).filter(_.nonEmpty)
+    Option(spec).toSeq.flatMap(listItems)
       .map { o =>
         val parts = o.split("\\s+", 2)
         val k = parts(0).toLowerCase
@@ -3785,14 +3729,18 @@ final class LakeEngine(val spark: SparkSession) {
     "(?=\\s*(?:SELECT|VALUES|WITH|TABLE)\\b)\\s*|\\s+)(.+)$").r
   private val deleteRe =
     "(?is)^DELETE\\s+FROM\\s+(\\w+)(?:\\s+WHERE\\s+(.+))?$".r
-  private val updateRe =
-    "(?is)^UPDATE\\s+(\\w+)\\s+SET\\s+(.+?)(?:\\s+WHERE\\s+(.+))?$".r
-  /** UPDATE or DELETE text: (target, SET list for UPDATE, WHERE). */
+  private val updateRe = "(?is)^UPDATE\\s+(\\w+)\\s+SET\\s+(.+)$".r
+  /** UPDATE or DELETE text: (target, SET list for UPDATE, WHERE); the
+    * SET list ends at the depth-0 WHERE keyword token.
+    */
   private object rowDml {
     def unapply(text: String)
         : Option[(String, Option[String], Option[String])] = text match {
       case deleteRe(name, where) => Some((name, None, Option(where)))
-      case updateRe(name, set, where) => Some((name, Some(set), Option(where)))
+      case updateRe(name, rest) => PgLexer.topKeyword(rest, "WHERE") match {
+        case Some((set, where)) => Some((name, Some(set.trim), Some(where.trim)))
+        case None => Some((name, Some(rest), None))
+      }
       case _ => None
     }
   }
@@ -3940,20 +3888,6 @@ final class LakeEngine(val spark: SparkSession) {
     "(?is)^ALTER\\s+TABLE\\s+(\\w+)\\s+SET\\s+PARTITIONED\\s+BY\\s*\\(((?:[^()]|\\([^()]*\\))*)\\)\\s*;?\\s*$".r
   private val alterClusterRe =
     "(?is)^ALTER\\s+TABLE\\s+(\\w+)\\s+CLUSTER\\s+BY\\s*\\(([^()]*)\\)\\s*;?\\s*$".r
-
-  /** Split `a = f(x, y), b = 2` on top-level commas only. */
-  private def splitTopLevel(s: String): Seq[String] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    var depth = 0; var start = 0
-    for (i <- s.indices) s.charAt(i) match {
-      case '(' => depth += 1
-      case ')' => depth -= 1
-      case ',' if depth == 0 => out += s.substring(start, i); start = i + 1
-      case _ =>
-    }
-    out += s.substring(start)
-    out.toSeq
-  }
 }
 
 object LakeEngine {

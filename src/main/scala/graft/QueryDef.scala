@@ -50,24 +50,21 @@ object QueryDef {
     pgPlan(s, pgRewrite(text))
 
   /** The PG dialect text rewrites, in order: the only copy of the chain.
-    * Every statement the engine runs, read or write, passes through it
-    * exactly once: `LakeEngine.sql` rewrites the whole statement before
-    * routing, so its statement regexes, and the UPDATE/DELETE clauses
-    * parsed into columns for the lake write path, see Spark-parsable
-    * text.
+    * Each pass is a [[graft.plans.PgLexer.Step]]; `PgLexer.chain` runs
+    * them in this order, each to its fixpoint, lexing the statement once
+    * and again only after a step changes it. Every statement the engine
+    * runs, read or write, passes through it exactly once:
+    * `LakeEngine.sql` rewrites the whole statement before routing, so its
+    * statement regexes, and the UPDATE/DELETE clauses parsed into columns
+    * for the lake write path, see Spark-parsable text.
     */
   def pgRewrite(text: String): String = {
     import graft.plans._
-    PosixRegexRewrite.rewrite(
-      SimilarToRewrite.rewrite(
-        QuantifiedSubqueries.rewrite(
-          ArrayLiteralRewrite.rewrite(
-            JsonArrowRewrite.rewrite(
-              CollateRewrite.rewrite(
-                PgCastRewrite.rewrite(
-                  RowCompareRewrite.rewrite(
-                    MapTypeRewrite.rewrite(
-                      DoubleQuoteRewrite.rewrite(text))))))))))
+    PgLexer.chain(text, DoubleQuoteRewrite.step, MapTypeRewrite.step,
+      RowCompareRewrite.step, PgCastRewrite.step, CollateRewrite.step,
+      JsonArrowRewrite.step, ArrayLiteralRewrite.step,
+      QuantifiedSubqueries.step, SimilarToRewrite.step,
+      PosixRegexRewrite.step)
   }
 
   /** Plans already-rewritten SELECT text: registers the PG functions

@@ -153,12 +153,6 @@ object SpatialOps {
     "st_overlaps" -> { (a, b) => Geometry.overlaps(a, b) },
     "st_containsproperly" -> { (a, b) => containsProperly(a, b) })
 
-  private def bothSingleRingPolys(a: Geom, b: Geom): Boolean = (a, b) match {
-    case (GPolygon(as, _), GPolygon(bs, _)) =>
-      as.length == 1 && bs.length == 1
-    case _ => false
-  }
-
   /** Any areal pair — holes and multipolygons welcome (the noded
     * overlay handles multi-ring and multi-component inputs).
     */

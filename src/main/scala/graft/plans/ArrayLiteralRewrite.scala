@@ -1,8 +1,6 @@
 package graft.plans
 
-import scala.annotation.tailrec
-
-import graft.plans.QuantifiedSubqueries.tokenize
+import graft.plans.PgLexer._
 
 /** PG's `ARRAY[a, b, …]` constructor syntax → Spark's `array(a, b, …)`.
   * The reference's compat suite uses it directly
@@ -15,25 +13,11 @@ import graft.plans.QuantifiedSubqueries.tokenize
   */
 object ArrayLiteralRewrite {
 
-  private def rewriteOnce(sql: String): Option[String] = {
-    val ts = tokenize(sql)
+  private[graft] def step(sql: String, ts: Vector[Tok]): Option[String] = {
     var i = 0
     while (i < ts.length - 1) {
-      if (ts(i).kind == 'w' && ts(i).up == "ARRAY" &&
-        ts(i + 1).kind == 'o' && ts(i + 1).up == "[") {
-        // matching ']' by bracket depth
-        var depth = 0
-        var j = i + 1
-        var close = -1
-        while (j < ts.length && close < 0) {
-          val t = ts(j)
-          if (t.kind == 'o' && t.up == "[") depth += 1
-          else if (t.kind == 'o' && t.up == "]") {
-            depth -= 1
-            if (depth == 0) close = j
-          }
-          j += 1
-        }
+      if (ts(i).is('w', "ARRAY") && ts(i + 1).is('o', "[")) {
+        val close = matchParen(ts, i + 1)
         if (close > 0) {
           val inner = sql.substring(ts(i + 1).end, ts(close).start)
           return Some(sql.substring(0, ts(i).start) + "array(" + inner +
@@ -45,11 +29,5 @@ object ArrayLiteralRewrite {
     None
   }
 
-  @tailrec
-  def rewrite(sql: String): String =
-    if (!sql.toUpperCase.contains("ARRAY")) sql
-    else rewriteOnce(sql) match {
-      case Some(s2) => rewrite(s2)
-      case None => sql
-    }
+  def rewrite(sql: String): String = fixpoint(sql)(step)
 }

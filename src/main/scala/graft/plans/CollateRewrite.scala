@@ -1,8 +1,6 @@
 package graft.plans
 
-import scala.annotation.tailrec
-
-import graft.plans.QuantifiedSubqueries.{tokenize, Tok}
+import graft.plans.PgLexer._
 
 /** PG `COLLATE` clauses (reference test_collate.py): the engine's
   * string comparison is byte order — exactly PG's "C"/"POSIX"
@@ -37,19 +35,15 @@ object CollateRewrite {
       case _ => None
     }
 
-  private def rewriteOnce(sql: String): Option[String] = {
-    val ts = tokenize(sql)
+  private[graft] def step(sql: String, ts: Vector[Tok]): Option[String] = {
     var i = 0
     while (i + 1 < ts.length) {
       val t = ts(i)
-      if (t.kind == 'w' && t.up == "COLLATE") {
+      if (t.is('w', "COLLATE")) {
         // PG deparsers qualify: COLLATE pg_catalog."C" — skip the
         // schema qualifier before reading the collation name
-        val nameIdx =
-          if (ts(i + 1).kind == 'w' && ts(i + 1).up == "PG_CATALOG" &&
-            i + 3 < ts.length && ts(i + 2).kind == 'o' &&
-            ts(i + 2).up == ".") i + 3
-          else i + 1
+        val nameIdx = if (ts(i + 1).is('w', "PG_CATALOG") &&
+          i + 3 < ts.length && ts(i + 2).is('o', ".")) i + 3 else i + 1
         nameOf(sql, ts(nameIdx)) match {
           case Some((_, up)) if ByteOrder.contains(up) =>
             return Some(sql.substring(0, t.start) +
@@ -66,9 +60,5 @@ object CollateRewrite {
     None
   }
 
-  @tailrec
-  def rewrite(sql: String): String = rewriteOnce(sql) match {
-    case Some(next) => rewrite(next)
-    case None => sql
-  }
+  def rewrite(sql: String): String = fixpoint(sql)(step)
 }

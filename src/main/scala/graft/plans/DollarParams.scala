@@ -6,10 +6,11 @@ package graft.plans
   * token-wise, which is PG-equivalent for literal arguments: PG
   * evaluates EXECUTE's arguments before binding).
   *
-  * Substitution is tokenizer-driven: a `$N` inside a string literal or
-  * quoted identifier is content, not a parameter; the same parameter
-  * may appear any number of times; parameters the statement never
-  * references are allowed (PG allows unused parameters too).
+  * Substitution runs over [[PgLexer]]'s tokens: a `$N` inside a string
+  * literal, comment or quoted identifier is content, not a parameter;
+  * the same parameter may appear any number of times; parameters the
+  * statement never references are allowed (PG allows unused
+  * parameters too).
   */
 object DollarParams {
 
@@ -25,25 +26,18 @@ object DollarParams {
     val need = rs.map(_._3).foldLeft(0)(math.max)
     require(args.length >= need,
       s"prepared statement wants $need parameter(s), got ${args.length}")
-    // splice right-to-left so earlier offsets stay valid
-    rs.sortBy(-_._1).foldLeft(sql) { case (acc, (start, end, n)) =>
-      acc.substring(0, start) + s"(${args(n - 1).trim})" +
-        acc.substring(end)
-    }
+    PgLexer.splice(sql, rs.map { case (start, end, n) =>
+      (start, end, s"(${args(n - 1).trim})")
+    })
   }
 
-  /** (start, end, n) of each `$N` reference, tokenizer-aware. */
+  /** (start, end, n) of each `$N` reference, in text order. */
   private def refs(sql: String): Seq[(Int, Int, Int)] = {
-    val ts = QuantifiedSubqueries.tokenize(sql)
-    val out = Seq.newBuilder[(Int, Int, Int)]
-    var i = 0
-    while (i + 1 < ts.length) {
-      val a = ts(i); val b = ts(i + 1)
-      if (a.kind == 'o' && a.up == "$" && b.kind == 'n' &&
-        a.end == b.start && sql.substring(b.start, b.end).forall(_.isDigit))
-        out += ((a.start, b.end, sql.substring(b.start, b.end).toInt))
-      i += 1
+    val ts = PgLexer.tokenize(sql)
+    (1 until ts.length).collect { case i if ts(i - 1).is('o', "$") &&
+        ts(i).kind == 'n' && ts(i - 1).end == ts(i).start &&
+        sql.substring(ts(i).start, ts(i).end).forall(_.isDigit) =>
+      (ts(i - 1).start, ts(i).end, sql.substring(ts(i).start, ts(i).end).toInt)
     }
-    out.result()
   }
 }

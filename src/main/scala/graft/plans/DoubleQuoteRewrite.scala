@@ -1,5 +1,7 @@
 package graft.plans
 
+import graft.plans.PgLexer._
+
 /** PG double-quoted identifiers → Spark backticks (the reference's
   * SQL surface quotes identifiers routinely —
   * test_duckdb_reserved_keywords.py, and its deparser emits `"name"`
@@ -8,54 +10,23 @@ package graft.plans
   * un-escapes to a literal quote, and any backtick inside the name
   * escapes as ``` `` ``` on the way out.
   *
-  * Character-level single pass that respects single-quoted string
-  * literals (backslash and `''` escapes — a `"` inside a string is
-  * content), `--` and block comments, and already-backticked names.
+  * A token map over [[PgLexer]]'s tokens: each `"…"` token becomes its
+  * backtick form, so a `"` inside a string literal, a comment or an
+  * already-backticked name is never touched.
   */
 object DoubleQuoteRewrite {
 
-  def rewrite(sql: String): String = {
-    if (sql.indexOf('"') < 0) return sql
-    val n = sql.length
-    val sb = new StringBuilder(n + 8)
-    var i = 0
-    while (i < n) {
-      val c = sql.charAt(i)
-      if (c == '-' && i + 1 < n && sql.charAt(i + 1) == '-') {
-        while (i < n && sql.charAt(i) != '\n') { sb.append(sql.charAt(i)); i += 1 }
-      } else if (c == '/' && i + 1 < n && sql.charAt(i + 1) == '*') {
-        val e = sql.indexOf("*/", i + 2)
-        val end = if (e < 0) n else e + 2
-        sb.append(sql.substring(i, end)); i = end
-      } else if (c == '\'') {
-        sb.append(c); i += 1
-        var done = false
-        while (i < n && !done) {
-          val d = sql.charAt(i)
-          if (d == '\\' && i + 1 < n) { sb.append(sql.substring(i, i + 2)); i += 2 }
-          else if (d == '\'') {
-            if (i + 1 < n && sql.charAt(i + 1) == '\'') {
-              sb.append("''"); i += 2
-            } else { sb.append(d); i += 1; done = true }
-          } else { sb.append(d); i += 1 }
-        }
-      } else if (c == '`') {
-        sb.append(c); i += 1
-        while (i < n && sql.charAt(i) != '`') { sb.append(sql.charAt(i)); i += 1 }
-        if (i < n) { sb.append('`'); i += 1 }
-      } else if (c == '"') {
-        i += 1
-        val id = new StringBuilder
-        var done = false
-        while (i < n && !done) {
-          if (sql.charAt(i) == '"') {
-            if (i + 1 < n && sql.charAt(i + 1) == '"') { id.append('"'); i += 2 }
-            else { done = true; i += 1 }
-          } else { id.append(sql.charAt(i)); i += 1 }
-        }
-        sb.append('`').append(id.toString.replace("`", "``")).append('`')
-      } else { sb.append(c); i += 1 }
-    }
-    sb.toString
+  private def backticked(sql: String, t: Tok): String = {
+    val closed = t.end - t.start >= 2 && sql.charAt(t.end - 1) == '"'
+    val name = sql.substring(t.start + 1, if (closed) t.end - 1 else t.end)
+    "`" + name.replace("\"\"", "\"").replace("`", "``") + "`"
   }
+
+  private[graft] def step(sql: String, ts: Vector[Tok]): Option[String] = {
+    val quoted = ts.filter(t => t.kind == 'q' && sql.charAt(t.start) == '"')
+    if (quoted.isEmpty) None
+    else Some(splice(sql, quoted.map(t => (t.start, t.end, backticked(sql, t)))))
+  }
+
+  def rewrite(sql: String): String = fixpoint(sql)(step)
 }

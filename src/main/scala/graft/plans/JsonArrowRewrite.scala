@@ -1,8 +1,6 @@
 package graft.plans
 
-import scala.annotation.tailrec
-
-import graft.plans.QuantifiedSubqueries.{tokenize, Tok}
+import graft.plans.PgLexer._
 
 /** PG json operators `->`, `->>`, `#>`, `#>>` → the engine's
   * `pg_json_field[_text]` / `pg_json_path[_text]` functions
@@ -73,7 +71,7 @@ object JsonArrowRewrite {
           // WHERE/AND/THEN/...) is clause syntax, not a call name;
           // swallowing it produced pg_json_field_text(SELECT (...), ...)
           if (opener > 0 && ((ts(opener - 1).kind == 'w' &&
-              !QuantifiedSubqueries.Boundary.contains(ts(opener - 1).up)) ||
+              !Boundary.contains(ts(opener - 1).up)) ||
             ts(opener - 1).kind == 'q')) j = opener - 1
           else return opener
         case 'w' | 'q' =>
@@ -88,8 +86,7 @@ object JsonArrowRewrite {
     0
   }
 
-  private def rewriteOnce(sql: String): Option[String] = {
-    val ts = tokenize(sql)
+  private[graft] def step(sql: String, ts: Vector[Tok]): Option[String] = {
     var i = 0
     while (i < ts.length) {
       arrowAt(ts, i) match {
@@ -114,9 +111,5 @@ object JsonArrowRewrite {
     None
   }
 
-  @tailrec
-  def rewrite(sql: String): String = rewriteOnce(sql) match {
-    case Some(next) => rewrite(next)
-    case None => sql
-  }
+  def rewrite(sql: String): String = fixpoint(sql)(step)
 }

@@ -1,6 +1,6 @@
 package graft.plans
 
-import graft.plans.QuantifiedSubqueries.{tokenize, Tok}
+import graft.plans.PgLexer._
 
 /** The reference's `map_type.*` function spellings (pg_map extension,
   * README + test_map_extract.py) → the engine's native MAP functions
@@ -25,28 +25,18 @@ object MapTypeRewrite {
     "CARDINALITY" -> "cardinality",
     "ENTRIES" -> "map_entries")
 
-  def rewrite(sql: String): String = {
-    val ts = tokenize(sql)
-    if (!ts.exists(t => t.kind == 'w' && t.up == "MAP_TYPE")) return sql
-    val sb = new StringBuilder
-    var pos = 0
-    var i = 0
-    while (i < ts.length) {
+  private[graft] def step(sql: String, ts: Vector[Tok]): Option[String] = {
+    val hits = ts.indices.filter { i =>
       val t = ts(i)
-      val hit = t.kind == 'w' && t.up == "MAP_TYPE" &&
-        i + 2 < ts.length &&
-        ts(i + 1).kind == 'o' && ts(i + 1).up == "." &&
-        ts(i + 1).start == t.end &&
+      t.is('w', "MAP_TYPE") && i + 2 < ts.length &&
+        ts(i + 1).is('o', ".") && ts(i + 1).start == t.end &&
         ts(i + 2).kind == 'w' && names.contains(ts(i + 2).up) &&
         ts(i + 2).start == ts(i + 1).end
-      if (hit) {
-        sb.append(sql.substring(pos, t.start))
-        sb.append(names(ts(i + 2).up))
-        pos = ts(i + 2).end
-        i += 3
-      } else i += 1
     }
-    sb.append(sql.substring(pos))
-    sb.toString
+    if (hits.isEmpty) None
+    else Some(splice(sql, hits.map(i =>
+      (ts(i).start, ts(i + 2).end, names(ts(i + 2).up)))))
   }
+
+  def rewrite(sql: String): String = fixpoint(sql)(step)
 }

@@ -1,8 +1,6 @@
 package graft.plans
 
-import scala.annotation.tailrec
-
-import graft.plans.QuantifiedSubqueries.tokenize
+import graft.plans.PgLexer._
 
 /** PG `FROM ONLY parent` / `JOIN ONLY parent` (inheritance: read the
   * parent's OWN rows, no descendants — PG docs ddl-inherit). The
@@ -13,13 +11,12 @@ import graft.plans.QuantifiedSubqueries.tokenize
   */
 object OnlyRewrite {
 
-  private def rewriteOnce(sql: String): Option[String] = {
-    val ts = tokenize(sql)
+  private[graft] def step(sql: String, ts: Vector[Tok]): Option[String] = {
     var i = 0
     while (i + 2 < ts.length) {
       val a = ts(i); val b = ts(i + 1); val c = ts(i + 2)
-      if (a.kind == 'w' && (a.up == "FROM" || a.up == "JOIN") &&
-        b.kind == 'w' && b.up == "ONLY" && c.kind == 'w') {
+      if ((a.is('w', "FROM") || a.is('w', "JOIN")) && b.is('w', "ONLY") &&
+        c.kind == 'w') {
         val name = sql.substring(c.start, c.end)
         return Some(sql.substring(0, b.start) +
           s"__only_$name" + sql.substring(c.end))
@@ -29,9 +26,5 @@ object OnlyRewrite {
     None
   }
 
-  @tailrec
-  def rewrite(sql: String): String = rewriteOnce(sql) match {
-    case Some(next) => rewrite(next)
-    case None => sql
-  }
+  def rewrite(sql: String): String = fixpoint(sql)(step)
 }

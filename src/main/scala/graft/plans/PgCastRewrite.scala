@@ -1,6 +1,6 @@
 package graft.plans
 
-import scala.annotation.tailrec
+import graft.plans.PgLexer._
 
 /** PG cast-syntax compatibility: rewrite `expr::pgtype` type names
   * onto Spark's, token-level (the reference's own type tests cast this
@@ -50,21 +50,9 @@ object PgCastRewrite {
   private val widthKeep = Set("NUMERIC", "DECIMAL")
   private val widthDrop = Set("VARCHAR", "CHAR", "BPCHAR", "CHARACTER")
 
-  def rewrite(sql: String): String = {
-    var out = sql
-    var changed = true
-    while (changed) {
-      changed = false
-      rewriteOne(out) match {
-        case Some(next) => out = next; changed = true
-        case None => ()
-      }
-    }
-    out
-  }
+  def rewrite(sql: String): String = fixpoint(sql)(step)
 
-  private def rewriteOne(sql: String): Option[String] = {
-    val ts = QuantifiedSubqueries.tokenize(sql)
+  private[graft] def step(sql: String, ts: Vector[Tok]): Option[String] = {
     var i = 0
     while (i + 2 < ts.length) {
       val a = ts(i); val b = ts(i + 1); val ty = ts(i + 2)
@@ -77,15 +65,14 @@ object PgCastRewrite {
           raw.substring(1, raw.length - 1)
             .forall(ch => ch.isLetterOrDigit || ch == '_' || ch == ' ')
       }
-      val isCast = a.kind == 'o' && a.up == ":" &&
-        b.kind == 'o' && b.up == ":" && a.end == b.start &&
+      val isCast = a.is('o', ":") && b.is('o', ":") && a.end == b.start &&
         (ty.kind == 'w' || quotedWord)
       if (isCast) {
         // optional (p[,s]) width suffix
         val (width, afterTy): (Option[String], Int) =
           if (i + 3 < ts.length && ts(i + 3).kind == 'o' &&
             ts(i + 3).up == "(") {
-            val close = QuantifiedSubqueries.matchParen(ts, i + 3)
+            val close = matchParen(ts, i + 3)
             if (close > 0)
               (Some(sql.substring(ts(i + 3).start, ts(close).end)), close)
             else (None, i + 2)

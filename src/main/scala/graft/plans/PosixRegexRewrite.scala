@@ -1,8 +1,6 @@
 package graft.plans
 
-import scala.annotation.tailrec
-
-import graft.plans.QuantifiedSubqueries.{operandStart, tokenize, Boundary, Tok}
+import graft.plans.PgLexer._
 
 /** PG's POSIX regex operators and regex SUBSTRING — the reference's
   * text-search suite uses them directly
@@ -21,29 +19,11 @@ import graft.plans.QuantifiedSubqueries.{operandStart, tokenize, Boundary, Tok}
   * Patterns are POSIX AREs in PG and Java regexes here — identical
   * for the common feature set (classes, quantifiers, alternation,
   * anchors, \d\w\s escapes).
+  *
+  * Over [[PgLexer]]'s tokens: the operands of `~` are the balanced
+  * runs [[PgLexer.operandStart]] and [[PgLexer.operandEnd]] bound.
   */
 object PosixRegexRewrite {
-
-  /** Forward operand run (same boundaries as the backward scan). */
-  private def operandEnd(ts: Vector[Tok], from: Int): Int = {
-    var j = from
-    var depth = 0
-    var last = -1
-    while (j < ts.length) {
-      val t = ts(j)
-      if (t.kind == 'o' && t.up == "(") depth += 1
-      else if (t.kind == 'o' && t.up == ")") {
-        if (depth == 0) return last
-        depth -= 1
-      } else if (depth == 0 &&
-        ((t.kind == 'w' && (Boundary.contains(t.up) || t.up == "ORDER" ||
-          t.up == "GROUP" || t.up == "LIMIT")) ||
-          (t.kind == 'o' && (t.up == "," || t.up == ";")))) return last
-      last = j
-      j += 1
-    }
-    last
-  }
 
   /** PG: the first parenthesized subexpression is returned when the
     * pattern has one; group 0 (whole match) otherwise. Decide from
@@ -115,52 +95,31 @@ object PosixRegexRewrite {
   private def rewriteSubstring(sql: String, ts: Vector[Tok]): Option[String] = {
     var i = 0
     while (i < ts.length - 4) {
-      if (ts(i).kind == 'w' && ts(i).up == "SUBSTRING" &&
-        ts(i + 1).kind == 'o' && ts(i + 1).up == "(") {
-        val close = QuantifiedSubqueries.matchParen(ts, i + 1)
-        if (close > 0) {
-          // find FROM at depth 1 of this paren group, followed by a
-          // string literal and then the closing paren
-          var depth = 0
-          var j = i + 1
-          var fromIdx = -1
-          while (j < close && fromIdx < 0) {
-            val t = ts(j)
-            if (t.kind == 'o' && t.up == "(") depth += 1
-            else if (t.kind == 'o' && t.up == ")") depth -= 1
-            else if (depth == 1 && t.kind == 'w' && t.up == "FROM") fromIdx = j
-            j += 1
-          }
-          if (fromIdx > 0 && fromIdx + 2 == close &&
-            ts(fromIdx + 1).kind == 's') {
-            val inner = sql.substring(ts(i + 1).end, ts(fromIdx).start).trim
-            val litTok = ts(fromIdx + 1)
-            val lit = sql.substring(litTok.start, litTok.end)
-            val g = groupIndex(lit.substring(1, lit.length - 1)
-              .replace("''", "'"))
-            val pat = s"concat('(?s)', $lit)"
-            val rep = s"(CASE WHEN ($inner) RLIKE $pat THEN " +
-              s"regexp_extract(($inner), $pat, $g) ELSE NULL END)"
-            return Some(sql.substring(0, ts(i).start) + rep +
-              sql.substring(ts(close).end))
-          }
-        }
+      val close = if (ts(i).is('w', "SUBSTRING") && ts(i + 1).is('o', "("))
+        matchParen(ts, i + 1) else -1
+      // `SUBSTRING(x FROM '<pattern>')`: the first depth-0 FROM in the
+      // parens, followed by nothing but a string literal
+      val parts = if (close < 0) None else
+        topKeyword(sql.substring(ts(i + 1).end, ts(close).start), "FROM")
+      parts.map { case (x, p) => (x.trim, p, tokenize(p)) } match {
+        case Some((inner, p, Vector(l))) if l.kind == 's' =>
+          val lit = p.substring(l.start, l.end)
+          val g = groupIndex(lit.substring(1, lit.length - 1)
+            .replace("''", "'"))
+          val pat = s"concat('(?s)', $lit)"
+          val rep = s"(CASE WHEN ($inner) RLIKE $pat THEN " +
+            s"regexp_extract(($inner), $pat, $g) ELSE NULL END)"
+          return Some(sql.substring(0, ts(i).start) + rep +
+            sql.substring(ts(close).end))
+        case _ => ()
       }
       i += 1
     }
     None
   }
 
-  private def rewriteOnce(sql: String): Option[String] = {
-    val ts = tokenize(sql)
+  private[graft] def step(sql: String, ts: Vector[Tok]): Option[String] =
     rewriteRegexOp(sql, ts).orElse(rewriteSubstring(sql, ts))
-  }
 
-  @tailrec
-  def rewrite(sql: String): String =
-    if (!sql.contains("~") && !sql.toUpperCase.contains("SUBSTRING")) sql
-    else rewriteOnce(sql) match {
-      case Some(s2) => rewrite(s2)
-      case None => sql
-    }
+  def rewrite(sql: String): String = fixpoint(sql)(step)
 }

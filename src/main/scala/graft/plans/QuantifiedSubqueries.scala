@@ -1,6 +1,6 @@
 package graft.plans
 
-import scala.annotation.tailrec
+import graft.plans.PgLexer._
 
 /** Quantified comparison subqueries — `x op ANY (SELECT …)`,
   * `x op ALL (SELECT …)`, `SOME` as the ANY synonym — are core PG
@@ -40,12 +40,12 @@ import scala.annotation.tailrec
   * three-valued higher-order functions: `exists(arr, e -> x op e)`
   * for ANY, `forall` for ALL.
   *
-  * Token-level, not regex: a real tokenizer (string literals, quoted
-  * identifiers, comments, nesting) finds the pattern
-  * `<comparison-op> ANY|ALL|SOME (`, takes the left operand as the
-  * longest balanced token run back to an expression boundary
-  * (AND/OR/NOT/clause keyword/comma at depth 0), and splices the
-  * expansion in place. Texts without the pattern pass through
+  * Token-level, not regex: over [[PgLexer]]'s tokens (string
+  * literals, quoted identifiers, comments, nesting) the step finds
+  * the pattern `<comparison-op> ANY|ALL|SOME (`, takes the left
+  * operand as the longest balanced token run back to an expression
+  * boundary (AND/OR/NOT/clause keyword/comma at depth 0), and splices
+  * the expansion in place. Texts without the pattern pass through
   * byte-identical; `UNION ALL` and `count(ALL x)` never match (no
   * comparison operator). Operand shapes the scan cannot bound (a
   * bare `CASE … END` immediately left of the operator) fail loudly
@@ -53,112 +53,8 @@ import scala.annotation.tailrec
   */
 object QuantifiedSubqueries {
 
-  private[graft] final case class Tok(start: Int, end: Int, kind: Char, up: String)
-
   private val CompareOps = Set("=", "<>", "!=", "<", "<=", ">", ">=")
   private val Quantifiers = Set("ANY", "ALL", "SOME")
-  /** Expression boundaries for the backward operand scan (depth 0). */
-  private[plans] val Boundary = Set(
-    "AND", "OR", "NOT", "WHERE", "WHEN", "THEN", "ELSE", "ON", "HAVING",
-    "SELECT", "FROM", "CASE", "END", "IN", "IS", "LIKE", "ILIKE",
-    "BETWEEN", "ANY", "ALL", "SOME", "EXISTS", "BY", "AS", "JOIN",
-    "SET", "VALUES", "DISTINCT", "UNION", "INTERSECT", "EXCEPT",
-    // DML tail clause: without this, the regex/SIMILAR TO forward
-    // operand scans would swallow "RETURNING id" into the pattern
-    // operand of e.g. DELETE ... WHERE msg ~ 'err' RETURNING id.
-    "RETURNING")
-
-  private[graft] def tokenize(sql: String): Vector[Tok] = {
-    val out = Vector.newBuilder[Tok]
-    var i = 0
-    val n = sql.length
-    while (i < n) {
-      val c = sql.charAt(i)
-      if (c.isWhitespace) i += 1
-      else if (c == '-' && i + 1 < n && sql.charAt(i + 1) == '-') {
-        while (i < n && sql.charAt(i) != '\n') i += 1
-      } else if (c == '/' && i + 1 < n && sql.charAt(i + 1) == '*') {
-        val e = sql.indexOf("*/", i + 2)
-        i = if (e < 0) n else e + 2
-      } else if (c == '\'') {
-        val s = i; i += 1
-        var done = false
-        while (i < n && !done) {
-          // Spark's default parser treats backslash as an escape
-          // inside string literals ('can\'t' is one literal) — skip
-          // the escaped character so content never leaks into SQL
-          if (sql.charAt(i) == '\\' && i + 1 < n) i += 2
-          else if (sql.charAt(i) == '\'')
-            if (i + 1 < n && sql.charAt(i + 1) == '\'') i += 2
-            else { done = true; i += 1 }
-          else i += 1
-        }
-        out += Tok(s, i, 's', "")
-      } else if (c == '"' || c == '`') {
-        val s = i; i += 1
-        while (i < n && sql.charAt(i) != c) i += 1
-        i = math.min(i + 1, n)
-        out += Tok(s, i, 'q', "")
-      } else if (c.isLetter || c == '_') {
-        val s = i
-        while (i < n && (sql.charAt(i).isLetterOrDigit ||
-          sql.charAt(i) == '_' || sql.charAt(i) == '$')) i += 1
-        out += Tok(s, i, 'w', sql.substring(s, i).toUpperCase)
-      } else if (c.isDigit) {
-        val s = i
-        while (i < n && (sql.charAt(i).isLetterOrDigit ||
-          sql.charAt(i) == '.')) i += 1
-        out += Tok(s, i, 'n', "")
-      } else {
-        // multi-char comparison operators first
-        val two = if (i + 1 < n) sql.substring(i, i + 2) else ""
-        if (Set("<=", ">=", "<>", "!=", "||").contains(two)) {
-          out += Tok(i, i + 2, 'o', two); i += 2
-        } else { out += Tok(i, i + 1, 'o', c.toString); i += 1 }
-      }
-    }
-    out.result()
-  }
-
-  /** Index of the token holding the subquery's matching ')', given
-    * the index of its '('.
-    */
-  private[plans] def matchParen(ts: Vector[Tok], open: Int): Int = {
-    var depth = 0
-    var j = open
-    while (j < ts.length) {
-      val t = ts(j)
-      if (t.kind == 'o' && t.up == "(") depth += 1
-      else if (t.kind == 'o' && t.up == ")") {
-        depth -= 1
-        if (depth == 0) return j
-      }
-      j += 1
-    }
-    -1
-  }
-
-  /** Start token index of the left operand: longest balanced run
-    * ending at `opIdx - 1`. Returns -1 when no operand can be bounded.
-    */
-  private[plans] def operandStart(ts: Vector[Tok], opIdx: Int): Int = {
-    var j = opIdx - 1
-    var depth = 0
-    var last = -1
-    while (j >= 0) {
-      val t = ts(j)
-      if (t.kind == 'o' && t.up == ")") depth += 1
-      else if (t.kind == 'o' && t.up == "(") {
-        if (depth == 0) return last
-        depth -= 1
-      } else if (depth == 0 &&
-        ((t.kind == 'w' && Boundary.contains(t.up)) ||
-          (t.kind == 'o' && (t.up == "," || t.up == ";")))) return last
-      last = j
-      j -= 1
-    }
-    last
-  }
 
   private def freshAlias(sql: String): String = {
     var i = 0
@@ -166,101 +62,89 @@ object QuantifiedSubqueries {
     s"__qv$i"
   }
 
-  private def rewriteOnce(sql: String): Option[String] = {
-    val ts = tokenize(sql)
+  private[graft] def step(sql: String, ts: Vector[Tok]): Option[String] = {
     var i = 1
     while (i < ts.length - 2) {
       val t = ts(i)
       if (t.kind == 'w' && Quantifiers.contains(t.up) &&
         ts(i - 1).kind == 'o' && CompareOps.contains(ts(i - 1).up) &&
-        ts(i + 1).kind == 'o' && ts(i + 1).up == "(") {
+        ts(i + 1).is('o', "(")) {
         // subquery vs array form: first word token inside the parens
         // (possibly through further parens) decides
         var k = i + 2
-        while (k < ts.length && ts(k).kind == 'o' && ts(k).up == "(") k += 1
+        while (k < ts.length && ts(k).is('o', "(")) k += 1
         val isSubquery = k < ts.length && ts(k).kind == 'w' &&
           (ts(k).up == "SELECT" || ts(k).up == "WITH" ||
             ts(k).up == "VALUES" || ts(k).up == "TABLE")
-        if (!isSubquery) {
-          // PG's array form `x op ANY/ALL (array-expr)` — the
-          // reference deparses ScalarArrayOpExpr verbatim
-          // (pg_lake_table/src/fdw/deparse.c:3131) and DuckDB executes
-          // it natively; Spark's parser rejects it, so map onto the
-          // three-valued higher-order functions: exists() for ANY
-          // (true if any comparison is TRUE, NULL if none true but
-          // some UNKNOWN), forall() for ALL. PG nuance preserved:
-          // `x = ANY(NULL::int[])` is NULL here and in PG (DuckDB
-          // returns FALSE — a reference-engine inconsistency; the PG
-          // side of the reference is the semantic contract).
-          val close = matchParen(ts, i + 1)
-          val lhsTok = operandStart(ts, i - 1)
-          if (close >= 0 && lhsTok >= 0) {
-            val lhs = sql.substring(ts(lhsTok).start, ts(i - 1).start).trim
-            val op = if (ts(i - 1).up == "!=") "<>" else ts(i - 1).up
-            val arr = sql.substring(ts(i + 1).start, ts(close).end)
-            val a = freshAlias(sql)
+        val close = matchParen(ts, i + 1)
+        val lhsTok = operandStart(ts, i - 1)
+        if (close >= 0 && lhsTok >= 0) {
+          val lhs = sql.substring(ts(lhsTok).start, ts(i - 1).start).trim
+          val op = if (ts(i - 1).up == "!=") "<>" else ts(i - 1).up
+          val sub = sql.substring(ts(i + 1).start, ts(close).end)
+          val a = freshAlias(sql)
+          def replaced(rep: String) = Some(sql.substring(0, ts(lhsTok).start) +
+            rep + sql.substring(ts(close).end))
+          if (!isSubquery) {
+            // PG's array form `x op ANY/ALL (array-expr)` — the
+            // reference deparses ScalarArrayOpExpr verbatim
+            // (pg_lake_table/src/fdw/deparse.c:3131) and DuckDB executes
+            // it natively; Spark's parser rejects it, so map onto the
+            // three-valued higher-order functions: exists() for ANY
+            // (true if any comparison is TRUE, NULL if none true but
+            // some UNKNOWN), forall() for ALL. PG nuance preserved:
+            // `x = ANY(NULL::int[])` is NULL here and in PG (DuckDB
+            // returns FALSE — a reference-engine inconsistency; the PG
+            // side of the reference is the semantic contract).
             val hof = if (t.up == "ALL") "forall" else "exists"
-            val rep = s"$hof($arr, ${a}_e -> ($lhs) $op ${a}_e)"
-            return Some(sql.substring(0, ts(lhsTok).start) + rep +
-              sql.substring(ts(close).end))
+            return replaced(s"$hof($sub, ${a}_e -> ($lhs) $op ${a}_e)")
           }
-        }
-        if (isSubquery) {
-          val close = matchParen(ts, i + 1)
-          val lhsTok = operandStart(ts, i - 1)
-          if (close >= 0 && lhsTok >= 0) {
-            val lhs = sql.substring(ts(lhsTok).start, ts(i - 1).start).trim
-            val op = if (ts(i - 1).up == "!=") "<>" else ts(i - 1).up
-            val sub = sql.substring(ts(i + 1).start, ts(close).end)
-            val a = freshAlias(sql)
-            val v = s"${a}_v"
-            def exists(pred: String) =
-              s"EXISTS (SELECT 1 FROM $sub AS $a($v) WHERE $pred)"
-            def aggCmp(cmpOp: String, agg: String) =
-              s"($lhs) $cmpOp (SELECT $agg($v) FROM $sub AS $a($v))"
-            // "some comparison is UNKNOWN": NULL probe against a
-            // nonempty set, or a NULL member — decomposed so neither
-            // EXISTS couples to the probe (no theta join at scale)
-            val unknown =
-              s"((($lhs) IS NULL AND EXISTS (SELECT 1 FROM $sub AS $a)) " +
-                s"OR ${exists(s"$v IS NULL")})"
-            // decisive branch: for order comparisons the existential
-            // collapses onto the set's min/max (NULL-skipping
-            // aggregates see exactly the non-NULL members, and a NULL
-            // probe or empty set makes the comparison UNKNOWN so the
-            // branch falls through) — one scalar-aggregate subquery
-            // instead of a non-equi join; equality stays an equi
-            // EXISTS (hash semi shape); the rare <> ANY / = ALL keep
-            // the general inequality EXISTS
-            val rep =
-              if (t.up == "ALL") {
-                val falseCond = op match {
-                  case "<" => aggCmp(">=", "min")
-                  case "<=" => aggCmp(">", "min")
-                  case ">" => aggCmp("<=", "max")
-                  case ">=" => aggCmp("<", "max")
-                  case "=" => exists(s"($lhs) <> $v")
-                  case "<>" => exists(s"($lhs) = $v")
-                }
-                s"(CASE WHEN $falseCond THEN FALSE " +
-                  s"WHEN $unknown THEN CAST(NULL AS BOOLEAN) " +
-                  "ELSE TRUE END)"
-              } else {
-                val trueCond = op match {
-                  case "<" => aggCmp("<", "max")
-                  case "<=" => aggCmp("<=", "max")
-                  case ">" => aggCmp(">", "min")
-                  case ">=" => aggCmp(">=", "min")
-                  case "=" => exists(s"($lhs) = $v")
-                  case "<>" => exists(s"($lhs) <> $v")
-                }
-                s"(CASE WHEN $trueCond THEN TRUE " +
-                  s"WHEN $unknown THEN CAST(NULL AS BOOLEAN) " +
-                  "ELSE FALSE END)"
+          val v = s"${a}_v"
+          def exists(pred: String) =
+            s"EXISTS (SELECT 1 FROM $sub AS $a($v) WHERE $pred)"
+          def aggCmp(cmpOp: String, agg: String) =
+            s"($lhs) $cmpOp (SELECT $agg($v) FROM $sub AS $a($v))"
+          // "some comparison is UNKNOWN": NULL probe against a
+          // nonempty set, or a NULL member — decomposed so neither
+          // EXISTS couples to the probe (no theta join at scale)
+          val unknown =
+            s"((($lhs) IS NULL AND EXISTS (SELECT 1 FROM $sub AS $a)) " +
+              s"OR ${exists(s"$v IS NULL")})"
+          // decisive branch: for order comparisons the existential
+          // collapses onto the set's min/max (NULL-skipping
+          // aggregates see exactly the non-NULL members, and a NULL
+          // probe or empty set makes the comparison UNKNOWN so the
+          // branch falls through) — one scalar-aggregate subquery
+          // instead of a non-equi join; equality stays an equi
+          // EXISTS (hash semi shape); the rare <> ANY / = ALL keep
+          // the general inequality EXISTS
+          val rep =
+            if (t.up == "ALL") {
+              val falseCond = op match {
+                case "<" => aggCmp(">=", "min")
+                case "<=" => aggCmp(">", "min")
+                case ">" => aggCmp("<=", "max")
+                case ">=" => aggCmp("<", "max")
+                case "=" => exists(s"($lhs) <> $v")
+                case "<>" => exists(s"($lhs) = $v")
               }
-            return Some(sql.substring(0, ts(lhsTok).start) + rep +
-              sql.substring(ts(close).end))
-          }
+              s"(CASE WHEN $falseCond THEN FALSE " +
+                s"WHEN $unknown THEN CAST(NULL AS BOOLEAN) " +
+                "ELSE TRUE END)"
+            } else {
+              val trueCond = op match {
+                case "<" => aggCmp("<", "max")
+                case "<=" => aggCmp("<=", "max")
+                case ">" => aggCmp(">", "min")
+                case ">=" => aggCmp(">=", "min")
+                case "=" => exists(s"($lhs) = $v")
+                case "<>" => exists(s"($lhs) <> $v")
+              }
+              s"(CASE WHEN $trueCond THEN TRUE " +
+                s"WHEN $unknown THEN CAST(NULL AS BOOLEAN) " +
+                "ELSE FALSE END)"
+            }
+          return replaced(rep)
         }
       }
       i += 1
@@ -268,15 +152,6 @@ object QuantifiedSubqueries {
     None
   }
 
-  /** Expand every quantified comparison subquery in `sql`; text
-    * without the pattern is returned unchanged (same instance).
-    */
-  @tailrec
-  def rewrite(sql: String): String =
-    if (!sql.toUpperCase.contains("ANY") && !sql.toUpperCase.contains("ALL") &&
-      !sql.toUpperCase.contains("SOME")) sql
-    else rewriteOnce(sql) match {
-      case Some(s2) => rewrite(s2)
-      case None => sql
-    }
+  /** Expand every quantified comparison subquery in `sql`. */
+  def rewrite(sql: String): String = fixpoint(sql)(step)
 }

@@ -1,6 +1,6 @@
 package graft.plans
 
-import graft.plans.QuantifiedSubqueries.{tokenize, Tok}
+import graft.plans.PgLexer._
 
 /** PG/SQL-standard row-wise comparison — `ROW(a, b) op ROW(c, d)`
   * (reference test_select_expressions.py uses them in pushdown-shaped
@@ -29,32 +29,13 @@ object RowCompareRewrite {
     * None when ts(i) is not a ROW constructor.
     */
   private def rowGroup(sql: String, ts: Vector[Tok], i: Int)
-      : Option[(Int, Seq[String])] = {
-    if (!(ts(i).kind == 'w' && ts(i).up == "ROW")) return None
-    if (i + 1 >= ts.length || ts(i + 1).up != "(") return None
-    var depth = 0
-    var j = i + 1
-    var argStart = -1
-    val args = Seq.newBuilder[String]
-    while (j < ts.length) {
-      val t = ts(j)
-      if (t.kind == 'o' && (t.up == "(" || t.up == "[")) {
-        depth += 1
-        if (depth == 1) argStart = t.end
-      } else if (t.kind == 'o' && (t.up == ")" || t.up == "]")) {
-        depth -= 1
-        if (depth == 0) {
-          args += sql.substring(argStart, t.start).trim
-          return Some((j + 1, args.result()))
-        }
-      } else if (t.kind == 'o' && t.up == "," && depth == 1) {
-        args += sql.substring(argStart, t.start).trim
-        argStart = t.end
-      }
-      j += 1
+      : Option[(Int, Seq[String])] =
+    if (!ts(i).is('w', "ROW") || i + 1 >= ts.length || !ts(i + 1).is('o', "("))
+      None
+    else Some(matchParen(ts, i + 1)).filter(_ > 0).map { close =>
+      (close + 1, splitTop(sql.substring(ts(i + 1).end, ts(close).start), ",")
+        .map(_.trim))
     }
-    None
-  }
 
   private def expand(op: String, as: Seq[String], bs: Seq[String])
       : String = {
@@ -79,35 +60,27 @@ object RowCompareRewrite {
     }
   }
 
-  @annotation.tailrec
-  def rewrite(sql: String): String = {
-    val ts = tokenize(sql)
+  private[graft] def step(sql: String, ts: Vector[Tok]): Option[String] = {
     var i = 0
-    var out: Option[String] = None
-    while (i < ts.length && out.isEmpty) {
+    while (i < ts.length) {
       rowGroup(sql, ts, i) match {
-        case Some((afterL, lhs)) if afterL < ts.length &&
+        case Some((afterL, lhs)) if afterL + 1 < ts.length &&
             ts(afterL).kind == 'o' && ops.contains(ts(afterL).up) =>
           // two-char ops tokenize as one token; a trailing '>' after
           // '<' etc. cannot occur here
-          val opTok = ts(afterL)
-          val rhsIdx = afterL + 1
-          if (rhsIdx < ts.length) {
-            rowGroup(sql, ts, rhsIdx) match {
-              case Some((afterR, rhs)) =>
-                val repl = "(" + expand(opTok.up, lhs, rhs) + ")"
-                out = Some(sql.substring(0, ts(i).start) + repl +
-                  sql.substring(ts(afterR - 1).end))
-              case None => ()
-            }
+          rowGroup(sql, ts, afterL + 1) match {
+            case Some((afterR, rhs)) =>
+              val repl = "(" + expand(ts(afterL).up, lhs, rhs) + ")"
+              return Some(sql.substring(0, ts(i).start) + repl +
+                sql.substring(ts(afterR - 1).end))
+            case None => ()
           }
-          i += 1
-        case _ => i += 1
+        case _ => ()
       }
+      i += 1
     }
-    out match {
-      case Some(next) => rewrite(next)
-      case None => sql
-    }
+    None
   }
+
+  def rewrite(sql: String): String = fixpoint(sql)(step)
 }

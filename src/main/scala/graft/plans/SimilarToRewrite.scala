@@ -1,8 +1,6 @@
 package graft.plans
 
-import scala.annotation.tailrec
-
-import graft.plans.QuantifiedSubqueries.{operandStart, tokenize, Boundary}
+import graft.plans.PgLexer._
 
 /** `x [NOT] SIMILAR TO pattern [ESCAPE 'c']` — PG surface the
   * reference accepts through its compat suite
@@ -12,49 +10,25 @@ import graft.plans.QuantifiedSubqueries.{operandStart, tokenize, Boundary}
   * standard's pattern translation and anchors the match. Literal
   * patterns fold to a constant regex at plan time.
   *
-  * Reuses [[QuantifiedSubqueries]]'s tokenizer: the left operand is
-  * the longest balanced run back to an expression boundary; the
-  * pattern operand is the forward run to the next boundary (AND / OR
-  * / clause keyword / comma / closing paren at depth 0), with an
-  * optional trailing `ESCAPE '<char>'`.
+  * Over [[PgLexer]]'s tokens: the left operand is the longest
+  * balanced run back to an expression boundary
+  * ([[PgLexer.operandStart]]); the pattern operand is the forward run
+  * to the next boundary ([[PgLexer.operandEnd]], which here also
+  * stops at ESCAPE and SIMILAR), with an optional trailing
+  * `ESCAPE '<char>'`.
   */
 object SimilarToRewrite {
 
-  /** Forward run: last token index of the operand starting at `from`
-    * (depth-0 boundary or unbalanced ')' stops it); -1 if empty.
-    */
-  private def operandEnd(ts: Vector[QuantifiedSubqueries.Tok],
-      from: Int): Int = {
-    var j = from
-    var depth = 0
-    var last = -1
-    while (j < ts.length) {
-      val t = ts(j)
-      if (t.kind == 'o' && t.up == "(") depth += 1
-      else if (t.kind == 'o' && t.up == ")") {
-        if (depth == 0) return last
-        depth -= 1
-      } else if (depth == 0 &&
-        ((t.kind == 'w' && (Boundary.contains(t.up) || t.up == "ESCAPE" ||
-          t.up == "SIMILAR" || t.up == "ORDER" || t.up == "GROUP" ||
-          t.up == "LIMIT")) ||
-          (t.kind == 'o' && (t.up == "," || t.up == ";")))) return last
-      last = j
-      j += 1
-    }
-    last
-  }
+  private val PatternStops = Set("ESCAPE", "SIMILAR")
 
-  private def rewriteOnce(sql: String): Option[String] = {
-    val ts = tokenize(sql)
+  private[graft] def step(sql: String, ts: Vector[Tok]): Option[String] = {
     var i = 0
     while (i < ts.length - 2) {
-      if (ts(i).kind == 'w' && ts(i).up == "SIMILAR" &&
-        ts(i + 1).kind == 'w' && ts(i + 1).up == "TO") {
-        val negated = i > 0 && ts(i - 1).kind == 'w' && ts(i - 1).up == "NOT"
+      if (ts(i).is('w', "SIMILAR") && ts(i + 1).is('w', "TO")) {
+        val negated = i > 0 && ts(i - 1).is('w', "NOT")
         val lhsEndTok = if (negated) i - 1 else i
         val lhsTok = operandStart(ts, lhsEndTok)
-        val patEnd = operandEnd(ts, i + 2)
+        val patEnd = operandEnd(ts, i + 2, PatternStops)
         if (lhsTok >= 0 && patEnd >= i + 2) {
           val lhs = sql.substring(ts(lhsTok).start, ts(lhsEndTok).start).trim
           val pat = sql.substring(ts(i + 2).start, ts(patEnd).end)
@@ -79,11 +53,5 @@ object SimilarToRewrite {
     None
   }
 
-  @tailrec
-  def rewrite(sql: String): String =
-    if (!sql.toUpperCase.contains("SIMILAR")) sql
-    else rewriteOnce(sql) match {
-      case Some(s2) => rewrite(s2)
-      case None => sql
-    }
+  def rewrite(sql: String): String = fixpoint(sql)(step)
 }

@@ -96,6 +96,26 @@ class DomainInheritanceSpec extends AnyFunSuite {
     e.dropTable("dom_lit")
   }
 
+  test("domain CHECK: a paren inside a string literal is content") {
+    // the CHECK's closing paren is the matching paren TOKEN, so the
+    // ')' literal stays inside the expression
+    val e = engine()
+    e.sql("CREATE DOMAIN pard AS text CHECK (VALUE <> ')')")
+    e.sql("CREATE TABLE dom_par (id int, p pard)")
+    e.sql("INSERT INTO dom_par VALUES (1, 'ok')")
+    assert(e.sql("SELECT p FROM dom_par WHERE id = 1")
+      .head.getString(0) == "ok")
+    def msgs(t: Throwable): Seq[String] =
+      Option(t).toSeq.flatMap(x => x.getMessage +: msgs(x.getCause))
+    val ex = intercept[Exception](
+      e.sql("INSERT INTO dom_par VALUES (2, ')')"))
+    assert(msgs(ex).exists(m => m != null &&
+      m.contains("value for domain pard violates check constraint")))
+    assert(e.sql("SELECT count(*) FROM dom_par").head.getLong(0) == 1)
+    e.sql("DROP DOMAIN pard")
+    e.dropTable("dom_par")
+  }
+
   test("inheritance: parent scans the family, joins stay per-table") {
     val e = engine()
     e.sql("CREATE TABLE parent_i AS SELECT id AS x, id AS y FROM RANGE(1, 11)")

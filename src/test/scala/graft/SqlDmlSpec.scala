@@ -313,6 +313,34 @@ class SqlDmlSpec extends AnyFunSuite {
       == "digit")
   }
 
+  test("commas, '=' and WHERE inside literals never split a DML clause") {
+    val e = LakeEngine(spark)
+    e.createTableAsSelect("r_split", LakeEngine.tempLocation("split"),
+      spark.range(1, 4).selectExpr("id", "concat('s', id) AS s",
+        "concat('t', id) AS t"))
+    def rows = e.sql("SELECT id, s, t FROM r_split ORDER BY id").collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSeq
+    assert(e.sql("UPDATE r_split SET s = 'a,b' WHERE id = 1")
+      .head.getLong(0) == 1)
+    assert(rows == Seq((1L, "a,b", "t1"), (2L, "s2", "t2"), (3L, "s3", "t3")))
+    assert(e.sql("UPDATE r_split SET s = 'x where id = 2' WHERE id = 1")
+      .head.getLong(0) == 1)
+    assert(rows == Seq((1L, "x where id = 2", "t1"), (2L, "s2", "t2"),
+      (3L, "s3", "t3")))
+    assert(e.sql("UPDATE r_split SET s = 'p=q, r', t = 'x' WHERE id = 3")
+      .head.getLong(0) == 1)
+    assert(rows == Seq((1L, "x where id = 2", "t1"), (2L, "s2", "t2"),
+      (3L, "p=q, r", "x")))
+    val del = e.sql("DELETE FROM r_split WHERE id = 2 RETURNING id, ',' AS sep")
+      .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
+    assert(del == Seq((2L, ",")))
+    assert(rows == Seq((1L, "x where id = 2", "t1"), (3L, "p=q, r", "x")))
+    // nor a column definition list
+    e.sql("CREATE TABLE r_split_def (id int, s text DEFAULT 'x, y')")
+    e.sql("INSERT INTO r_split_def (id) VALUES (1)")
+    assert(e.sql("SELECT s FROM r_split_def").head.getString(0) == "x, y")
+  }
+
   test("UPDATE assignments all read the OLD row (PG swap semantics)") {
     val e = LakeEngine(spark)
     e.createTableAsSelect("r_swap", LakeEngine.tempLocation("swap"),
